@@ -17,6 +17,13 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions = cores in local mode (the 100-TB deployment would
   *    size this to ~2-3x total cluster cores / rely on AQE coalescing; AQE
   *    is left ON so skew-join + partition coalescing engage).
+  *  - `checkpointFileManagerClass` = [[graft.streaming.LocalCheckpointFileManager]]:
+  *    without the Hadoop native library, Spark's default checkpoint writer
+  *    launches `chmod` and `readlink` child processes, about 30 per
+  *    micro-batch on the stream execution thread: ≈90 ms of a ≈235 ms
+  *    syslog→parquet trigger on a 4-core host (BASELINE.md, "Sustained
+  *    ingest"). The replacement writes `file:` checkpoints through
+  *    java.nio and hands other schemes to Spark's default writer.
   */
 object Sessions {
   def builder(cpus: String): SparkSession.Builder =
@@ -38,6 +45,8 @@ object Sessions {
       // every key in JVM memory).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
 

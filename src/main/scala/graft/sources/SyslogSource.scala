@@ -9,7 +9,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -192,7 +192,8 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
         var inserted = 0
         while (inserted < lines.length) {
           if (buffer.size >= maxRows) {
-            if (!blockWhenFull) return inserted // UDP: drop the remainder
+            // UDP drops the remainder; a closed receiver stops waiting
+            if (!blockWhenFull || closed) return inserted
             lock.wait(100) // TCP: block the reader -> sender backpressure
           } else {
             val take = math.min(maxRows - buffer.size,
@@ -260,6 +261,8 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
   // --- listeners -----------------------------------------------------
   @volatile private var closed = false
   private var tcpServer: ServerSocket = _
+  /** Accepted connections, closed with the receiver. */
+  private val connections = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
   private var udpSocket: DatagramSocket = _
 
   private def startTcp(host: String, port: Int): Unit = {
@@ -270,6 +273,8 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
       while (!closed) {
         try {
           val sock = tcpServer.accept()
+          connections.add(sock)
+          if (closed) sock.close() // accepted while close() was running
           val seg = nextSegment() // pin the connection to one shard
           val t = new Thread(() => serveTcp(sock, seg), "graft-syslog-conn")
           t.setDaemon(true)
@@ -332,7 +337,10 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
       if (carry.length > 0) // unterminated final line at EOF, like ScanLines
         seg.enqueueBatch(ArrayBuffer(lineOf(carry, 0, carry.length)),
           blockWhenFull = true)
-    } catch { case _: Exception => } finally sock.close()
+    } catch { case _: Exception => } finally {
+      sock.close()
+      connections.remove(sock)
+    }
   }
 
   private def startUdp(host: String, port: Int): Unit = {
@@ -401,6 +409,10 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     SyslogLocalTransport.receivers.remove(transportId)
     if (tcpServer != null) try tcpServer.close() catch { case _: Exception => }
     if (udpSocket != null) try udpSocket.close() catch { case _: Exception => }
+    // readers parked on a full segment see `closed` when woken; readers
+    // blocked in read() see their socket closed
+    segments.foreach(seg => seg.lock.synchronized(seg.lock.notifyAll()))
+    connections.forEach(sock => try sock.close() catch { case _: Exception => })
   }
 }
 
@@ -442,7 +454,7 @@ object SyslogReceivers {
 }
 
 class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
-  extends MicroBatchStream with SupportsAdmissionControl {
+  extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private val receiverName = Option(options.get("receiver.name"))
   private val receiver = receiverName match {
@@ -492,8 +504,17 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
   // opens sooner for blocked TCP senders.
   private val maxPerBatch = options.getLong("maxRowsPerBatch", 1000000L)
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerBatch)
+
+  /** Trigger.AvailableNow: the rows buffered at query start bound every
+    * batch of the run. Without this Spark falls back to one batch, and a
+    * restart that replays an uncommitted batch stops after that batch.
+    */
+  @volatile private var availableNowEnd: Option[Array[Long]] = None
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNowEnd = Some(receiver.availableVec)
+
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = receiver.availableVec
+    val avail = availableNowEnd.getOrElse(receiver.availableVec)
     val s = vecOf(start.asInstanceOf[SyslogOffset].v)
     val out = new Array[Long](nSeg)
     // Progress guarantee under the engine's DEFERRED source commit:

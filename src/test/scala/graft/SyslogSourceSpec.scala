@@ -290,6 +290,59 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
     } finally s.stop()
   }
 
+  test("stopping a stream with a full buffer ends its TCP readers and disconnects senders") {
+    def connThreads: Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-syslog-conn").toSet
+    }
+    val before = connThreads
+    val s = newStream(3)
+    val sock = new Socket("127.0.0.1", sources.SyslogState.lastTcpPort)
+    try {
+      val out = new PrintWriter(sock.getOutputStream, true)
+      (1 to 10).foreach(i => out.print(s"line-$i\n"))
+      out.flush()
+      // the connection's reader parks on the full 3-row buffer
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === 3))
+      val readers = connThreads -- before
+      assert(readers.size === 1)
+      s.stop()
+      eventually(timeout(Span(10, Seconds))) {
+        assert(!readers.head.isAlive, "reader thread outlived the stream")
+      }
+      sock.setSoTimeout(10000)
+      val seen =
+        try sock.getInputStream.read()
+        catch { case _: java.net.SocketException => -1 } // reset
+      assert(seen === -1, "sender's connection stayed open")
+    } finally {
+      sock.close()
+      s.stop()
+    }
+  }
+
+  test("Trigger.AvailableNow: the rows buffered at query start bound the run") {
+    val s = newStream(100000)
+    try {
+      val sock = new Socket("127.0.0.1", sources.SyslogState.lastTcpPort)
+      val out = new PrintWriter(sock.getOutputStream, true)
+      (1 to 10).foreach(i => out.print(s"before-$i\n"))
+      out.flush()
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === 10))
+      s.prepareForTriggerAvailableNow()
+      (1 to 5).foreach(i => out.print(s"after-$i\n"))
+      out.flush()
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === 15))
+      val all = org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
+      assert(s.latestOffset(s.initialOffset(), all).json() === "10")
+      // batches of the run still respect the read limit
+      val four = org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(4)
+      assert(s.latestOffset(s.deserializeOffset("8"), four).json() === "10")
+      sock.close()
+    } finally s.stop()
+  }
+
   test("full buffer drops UDP datagrams, counts them, and drains") {
     val s = newStream(2)
     try {
