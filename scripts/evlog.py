@@ -1,7 +1,17 @@
 #!/usr/bin/env python3
 """Summarize a Spark rolling event log: per-stage wall and task time,
-grouped by stage name + callsite, and per-job timeline. Dev tool for the
-optimization rounds (guide §1: measure first)."""
+grouped by stage name + callsite, SQL execution wall by description, and
+every SQL execution with the root of its physical plan.
+
+The last list is how a streaming fold's work is attributed: executions
+nested in a foreachBatch body all carry the stream's `start at ...` call
+site, so the plan root (a checkpoint's projection, a count's
+HashAggregate, a collect's CollectLimit, a write's
+InsertIntoHadoopFsRelationCommand) and the root execution id (one per
+micro-batch) are what tell them apart.
+
+    scripts/evlog.py DIR/eventlog_v2_<app> [topn]
+"""
 import json, sys, glob, os, subprocess, collections
 
 def lines(d):
@@ -20,6 +30,14 @@ def lines(d):
         for ln in data.splitlines():
             if ln.strip():
                 yield ln
+
+def plan_root(info):
+    """Name of the first real node of a SparkPlanInfo tree (below AQE's
+    AdaptiveSparkPlan wrapper)."""
+    while info and info.get("nodeName") == "AdaptiveSparkPlan" \
+            and info.get("children"):
+        info = info["children"][0]
+    return (info or {}).get("nodeName", "?")
 
 def main(d, topn=40):
     stages = {}
@@ -61,7 +79,9 @@ def main(d, topn=40):
                 }
         elif ev.endswith("SQLExecutionStart"):
             execs[str(e["executionId"])] = {
-                "desc": e.get("description", "")[:150],
+                "desc": " ".join(e.get("description", "").split())[:150],
+                "root": plan_root(e.get("sparkPlanInfo")),
+                "root_exec": e.get("rootExecutionId", e["executionId"]),
                 "t0": e["time"], "t1": None}
         elif ev.endswith("SQLExecutionEnd"):
             k = str(e["executionId"])
@@ -89,6 +109,17 @@ def main(d, topn=40):
     print("== SQL execution wall by description, top %d ==" % topn)
     for dsc, w in tot.most_common(topn):
         print(f"{w:8.2f}s {dsc}")
+    print()
+    njobs = collections.Counter(j["execid"] for j in jobs.values())
+    ntasks = collections.Counter()
+    for s in stages.values():
+        ntasks[(jobs.get(s["job"]) or {}).get("execid", "")] += s["tasks"]
+    print("== SQL executions: id, root execution, wall, jobs, tasks, plan root ==")
+    for k in sorted(execs, key=int):
+        ex = execs[k]
+        w = (ex["t1"] - ex["t0"]) / 1000.0 if ex["t1"] else float("nan")
+        print(f"{k:>5} {ex['root_exec']:>5} {w:7.2f}s {njobs[k]:4d} "
+              f"{ntasks[k]:5d}  {ex['root']:<42} {ex['desc']}")
 
 if __name__ == "__main__":
     main(sys.argv[1], int(sys.argv[2]) if len(sys.argv) > 2 else 40)

@@ -566,13 +566,14 @@ object Dedup {
   //   3. verifies exact Jaccard, reading corpus shingle arrays only for
   //      candidate docs (a broadcast semi-join of the delta-bounded
   //      candidate id set into the corpus scan);
-  //   4. re-runs connected components ONLY on the affected subgraph: the
-  //      new pairs plus the (doc → rep) label edges of every cluster that
-  //      a new pair touches. Label edges are a component-preserving
-  //      contraction of the old pair graph, so subgraph CC computes
-  //      exactly the merged components — including the hard case where
-  //      one new pair BRIDGES two existing clusters. Untouched clusters
-  //      are carried over byte-identically.
+  //   4. re-labels components ONLY on the affected subgraph: the new
+  //      pairs plus the (doc → rep) label edges of every cluster that a
+  //      new pair touches — delta-bounded, so it is collected and
+  //      labeled by a union-find on the driver. Label edges are a
+  //      component-preserving contraction of the old pair graph, so the
+  //      subgraph's components are exactly the merged components —
+  //      including the hard case where one new pair BRIDGES two existing
+  //      clusters. Untouched clusters are carried over byte-identically.
   //
   // Cost: steps 1-4 shuffle work proportional to the batch and the
   // affected clusters, never the corpus (the corpus-side table scans
@@ -698,23 +699,16 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** Step 4: fold `newPairs` into `oldLabels` — CC re-converges only on
-    * the affected component subgraph (new pair edges + label edges of
+  /** Step 4: fold `newPairs` into `oldLabels` — components re-converge
+    * only on the affected subgraph (new pair edges + label edges of
     * touched clusters); untouched clusters carry over unchanged. Output
     * schema/content match [[labelsOf]] on the merged corpus exactly.
     */
   private[graft] def incrementalLabels(oldLabels: DataFrame,
       newPairs: DataFrame): DataFrame = {
-    val (sub, touchedReps0) = incrementalSubLabels(oldLabels, newPairs)
-    // The rep set is consumed a SECOND time here (the carried anti-join);
-    // materialize it at this two-consumer site — not inside
-    // incrementalSubLabels, whose fold-row callers (q124/q128 per
-    // micro-batch) consume it exactly once inside the CC edge
-    // materialization, where a dedicated checkpoint execution costs more
-    // than the duplicated small-view scan it would save (round-15
-    // measurement: ~8 sequential executions per fold, each ~0.3-0.9 s of
-    // fixed planning/scheduling overhead at micro-batch sizes).
-    val touchedReps = Shared.ckpt(touchedReps0)
+    // the touched-rep frame is driver data (a local relation), so the
+    // carried anti-join reads it without a materialization of its own
+    val (sub, touchedReps) = incrementalSubLabels(oldLabels, newPairs)
     val carried = oldLabels.join(touchedReps, Seq("rep"), "left_anti")
     carried.select(col("doc_id"), col("rep"), col("cluster_size"))
       .unionByName(sub)
@@ -725,48 +719,90 @@ object Dedup {
     * the corpus-wide carried anti-join. q124's continuous fold appends
     * only this per micro-batch (its per-fold work stays delta-bounded)
     * and computes the carried set once, at readout.
+    *
+    * The subgraph is labeled ON THE DRIVER. Both of its inputs are
+    * delta-bounded, so each is read with one bounded collect
+    * ([[Shared.collectBounded]]): the pair set, then the (doc_id, rep)
+    * rows of every touched cluster. A min-root union-find over the pair
+    * edges and the (doc → rep) label edges yields the merged components
+    * with their true minimum-id reps; `cluster_size` is the component
+    * size. This replaces a pair-set checkpoint and a distributed
+    * [[connectedComponents]] run (three SQL executions and ~36 jobs in
+    * a benchmark q124 fold, each execution paying fixed scheduling
+    * overhead to label a few dozen edges) with two collects (~13 jobs).
+    * Corpus-scale labelings ([[labelsOf]]) keep the distributed,
+    * resumable CC.
+    *
+    * A hot batch whose touched clusters hold more than
+    * `spark.graft.deltaBound.maxRows` members fails with the named
+    * delta-bound error instead of running a corpus-sized CC inside a
+    * micro-batch.
+    *
+    * Output: `doc_id` and `rep` in the id type a CC over the same edges
+    * would emit (the widened type of the pair and label id columns),
+    * `cluster_size` bigint; the rep frame is one column, `rep`.
     */
   private[graft] def incrementalSubLabels(oldLabels: DataFrame,
       newPairs: DataFrame): (DataFrame, DataFrame) = {
-    // Materialize the pair set once: it feeds `touched` (hence
-    // `touchedReps`, which [[incrementalLabels]] reads again for the
-    // carried anti-join) AND the subgraph edge list — separate actions
-    // that each re-ran the full batchPairs pipeline before this
-    // checkpoint (the dominant cost of every fold row, measured in
-    // OPTIMIZATION_r14.md). Delta-bounded by construction.
-    val pairs = Shared.ckpt(newPairs)
-    val touched = pairs
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    // NOT checkpointed here (round-15): within this function the rep set
-    // has exactly ONE consumer — the `affected` scan below — and both
-    // land inside the subgraph CC's single edge materialization, so a
-    // dedicated checkpoint execution per fold bought nothing and cost a
-    // full planning/scheduling round trip (the fold rows' binding cost
-    // is execution COUNT, not task work). [[incrementalLabels]], whose
-    // carried anti-join is a genuine second consumer, checkpoints the
-    // returned frame at its own two-consumer site. The duplicated
-    // oldLabels reference this leaves inside one edge job (the
-    // latest-wins view for q124-class callers) is a small window over
-    // the delta plus a bucketed-base anti-join — sub-stage cost, cheaper
-    // than the execution it replaces (measured in OPTIMIZATION_r15.md).
-    val touchedReps =
-      oldLabels.join(touched, Seq("doc_id"), "left_semi")
-        .select(col("rep")).distinct()
-    val affected = oldLabels.join(touchedReps, Seq("rep"), "left_semi")
-    // label edges (doc → rep) preserve the old components; adding the new
-    // pair edges and re-running CC on just this subgraph yields the merged
-    // components with their true minimum-id reps (every member of every
-    // touched cluster is present via its label edge)
-    val subEdges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(affected.select(col("doc_id").as("src"),
-        col("rep").as("dst")))
-    val sub = connectedComponents(subEdges)
-      .withColumn("cluster_size", count(lit(1)).over(
-        Window.partitionBy(col("rep"))))
-    (sub.select(col("doc_id"), col("rep"), col("cluster_size")),
-      touchedReps)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = oldLabels.sparkSession
+    // analysis only: the widened type of every id column of the subgraph
+    val idField = newPairs.select(col("doc_a").as("id"))
+      .unionByName(newPairs.select(col("doc_b").as("id")))
+      .unionByName(oldLabels.select(col("doc_id").as("id")))
+      .unionByName(oldLabels.select(col("rep").as("id")))
+      .schema.head
+    val idType = idField.dataType
+    val byId: Ordering[Any] = idType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        Ordering.by[Any, Long](_.asInstanceOf[Number].longValue)
+      case t => throw new IllegalArgumentException(
+        s"incrementalSubLabels: doc ids must be integral, got $t")
+    }
+    def frame(rows: Iterable[Row], fields: StructField*): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, StructType(fields))
+    val repField = StructField("rep", idType, idField.nullable)
+    val pairs = Shared.collectBounded(
+      newPairs.select(col("doc_a").cast(idType), col("doc_b").cast(idType)),
+      "new pair set")
+    val touched = pairs.flatMap(r => Seq(r.get(0), r.get(1))).distinct
+    val members =
+      if (touched.isEmpty) Array.empty[Row]
+      else {
+        val touchedIds = frame(touched.map(Row(_)),
+          StructField("doc_id", idType, nullable = false))
+        val touchedReps = oldLabels
+          .join(broadcast(touchedIds), Seq("doc_id"), "left_semi")
+          .select(col("rep")).distinct()
+        Shared.collectBounded(
+          oldLabels.join(broadcast(touchedReps), Seq("rep"), "left_semi")
+            .select(col("doc_id").cast(idType), col("rep").cast(idType)),
+          "touched-cluster members")
+      }
+    // min-root union-find over node indexes in id order: a root always
+    // has the smallest index of its component, hence the minimum id
+    val nodes = (touched ++ members.flatMap(r => Seq(r.get(0), r.get(1))))
+      .distinct.sorted(byId)
+    val index = nodes.zipWithIndex.toMap
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    (pairs ++ members).foreach { r =>
+      val (a, b) = (find(index(r.get(0))), find(index(r.get(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val root = nodes.indices.map(find)
+    val size = root.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val sub = frame(nodes.indices.map(i =>
+        Row(nodes(i), nodes(root(i)), size(root(i)))),
+      idField.copy(name = "doc_id"), repField,
+      StructField("cluster_size", LongType, nullable = false))
+    (sub, frame(members.map(_.get(1)).distinct.map(Row(_)), repField))
   }
 
   /** q124's override view: the current labels are the frozen base minus
@@ -1041,10 +1077,10 @@ object Dedup {
   /** The two-fold versioned chain q166 AND q167 build on: the tenth
     * splits into ver-1/ver-2 insertion folds (fold 2 pairing against
     * fold 1's docs through the accumulated prefix rows — the q124
-    * machinery). Returns (d1 with ver=1 — checkpointed, the caller
-    * reads it twice — and d2 with ver=2). ONE derivation shared by both
-    * consumers so the fold arc cannot drift between them (round-12
-    * review).
+    * machinery). Returns (d1 with ver=1 — driver-built labels, so its
+    * two reads recompute nothing — and d2 with ver=2). ONE derivation
+    * shared by both consumers so the fold arc cannot drift between them
+    * (round-12 review).
     */
   private[graft] def verChainFolds(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
@@ -1059,8 +1095,7 @@ object Dedup {
     val (bsh0, bprefix0) = batchIndexOf(fold0, dfreq)
     val p0 = batchPairsWith(q120Corpus(s, d), bsh0, bprefix0,
       q120PrefixArtifact(s, d))
-    val d1 = Shared.ckpt(
-      incrementalSubLabels(base, p0)._1.withColumn("ver", lit(1L)))
+    val d1 = incrementalSubLabels(base, p0)._1.withColumn("ver", lit(1L))
     val seen = q120Corpus(s, d).unionByName(fold0)
     val prefixAll = q120PrefixArtifact(s, d).unionByName(bprefix0)
     val p1 = batchPairs(seen, fold1, dfreq, prefixAll)
@@ -2138,8 +2173,8 @@ object Dedup {
 
     // q120 — INCREMENTAL dup-label maintenance (see the block comment at
     // [[batchPairs]]): fold the arriving tenth into the frozen corpus
-    // labels via delta-scoped pair generation + subgraph-only CC
-    // re-convergence. The oracle is the FROM-SCRATCH q73 closure over
+    // labels via delta-scoped pair generation + subgraph-only
+    // re-labeling. The oracle is the FROM-SCRATCH q73 closure over
     // corpus+batch — the incremental path must be invisible in the
     // result, including when a batch doc bridges two existing clusters.
     "q120_incremental_labels" -> ((s, d) => {
@@ -2176,9 +2211,8 @@ object Dedup {
         q120DfArtifact(s, d), q120PrefixArtifact(s, d))
       // materialize the insert fold ONCE: the deletion fold reads its
       // labels three times (touched reps, carried, survivors) and an
-      // unmaterialized plan would re-pay pair generation + subgraph CC
-      // per read (first cut measured 38.6 s; materialized ~its folds'
-      // sum). In production this frame IS a written delta (q124's
+      // unmaterialized plan would re-pay the carried anti-join over the
+      // corpus labels per read. In production this frame IS a written delta (q124's
       // append), so the checkpoint models the real pipeline, not a
       // bench trick.
       val inserted = Shared.ckpt(

@@ -356,9 +356,9 @@ object Pipeline {
       val current = Dedup.latestWins(baseLabels,
         s.read.parquet(labelsDir).filter(col("ver") < ver))
       // the fold's label delta is read three times (batch aggregate,
-      // corrections, the append) — materialize it once per fold
-      val (sub0, _) = Dedup.incrementalSubLabels(current, pairs)
-      val sub = Shared.ckpt(sub0)
+      // corrections, the append); it is driver data, so no re-read
+      // recomputes it
+      val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
       val allFlags = corpusFlags.unionByName(
         s.read.parquet(flagsDir).filter(col("ver") < ver).drop("ver")
           .dropDuplicates("doc_id"))

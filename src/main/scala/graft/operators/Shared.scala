@@ -108,32 +108,66 @@ object Shared {
     * pathological batch (every doc touching one hot window-hash) makes
     * them corpus-sized, and the first symptom at cluster scale would be
     * an executor OOM inside a broadcast build. This variant materializes
-    * the checkpoint through an explicit count() — the SAME single action
-    * an eager checkpoint runs internally, so no extra job — and throws a
-    * named, actionable error when the set exceeds
+    * a lazy checkpoint through an explicit count() and throws a named,
+    * actionable error when the set exceeds
     * `spark.graft.deltaBound.maxRows` (default 10M rows ≈ a few hundred
     * MB as a broadcast hash relation; 0 disables). The failure mode
     * becomes a message naming the operator, not an OOM.
+    *
+    * Cost: TWO SQL executions per call, not one. Building the lazy
+    * checkpoint's RDD runs the query stages under it (AQE materializes
+    * its shuffle stages: 4 jobs for the candidate-pair set of a q124
+    * fold), and the count() over the checkpointed RDD is a second
+    * execution (2 jobs: the pass that stores the checkpoint blocks, then
+    * the final aggregate). An eager checkpoint is one execution but
+    * yields no row count to check.
     */
   private[graft] def ckptBounded(df: org.apache.spark.sql.DataFrame,
       what: String): org.apache.spark.sql.DataFrame = {
-    val conf = df.sparkSession.conf
     val ck =
-      if (conf.get("spark.graft.reliableCheckpoints", "false").toBoolean)
+      if (df.sparkSession.conf
+          .get("spark.graft.reliableCheckpoints", "false").toBoolean)
         df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
     val n = ck.count() // materializes the checkpoint AND yields the bound
-    val maxRows =
-      conf.get("spark.graft.deltaBound.maxRows", "10000000").toLong
-    if (maxRows > 0 && n > maxRows) throw new IllegalStateException(
-      s"delta-bounded set '$what' has $n rows > " +
+    val maxRows = deltaBoundMaxRows(df)
+    if (maxRows > 0 && n > maxRows)
+      throw deltaBoundViolation(what, n.toString, maxRows)
+    ck
+  }
+
+  /** Collect a delta-bounded set to the driver under the guard of
+    * [[ckptBounded]] (same bound, same named error). The set is read
+    * through `limit(maxRows + 1)`, so an oversized set throws before the
+    * driver holds more than one row past the bound. A set the guard
+    * admits fits on the driver by the same argument that makes it
+    * broadcastable.
+    */
+  private[graft] def collectBounded(df: org.apache.spark.sql.DataFrame,
+      what: String): Array[org.apache.spark.sql.Row] = {
+    val maxRows = deltaBoundMaxRows(df)
+    val rows =
+      if (maxRows > 0 && maxRows < Int.MaxValue)
+        df.limit(maxRows.toInt + 1).collect()
+      else df.collect()
+    if (maxRows > 0 && rows.length > maxRows)
+      throw deltaBoundViolation(what, s"at least ${rows.length}", maxRows)
+    rows
+  }
+
+  private def deltaBoundMaxRows(df: org.apache.spark.sql.DataFrame): Long =
+    df.sparkSession.conf.get("spark.graft.deltaBound.maxRows", "10000000")
+      .toLong
+
+  private def deltaBoundViolation(what: String, rows: String,
+      maxRows: Long): IllegalStateException =
+    new IllegalStateException(
+      s"delta-bounded set '$what' has $rows rows > " +
         s"spark.graft.deltaBound.maxRows=$maxRows: this batch violates " +
         "the operator's delta-bounded soundness argument (downstream " +
         "broadcasts of the set would OOM at cluster scale). Shrink or " +
         "split the batch, compact the accumulated delta, or raise the " +
         "bound if the cluster's executors can hold it.")
-    ck
-  }
 
   /** Run independent Spark actions concurrently on a small pool (guide
     * §2.6 job overlap: one action's straggler tail leaves cores idle

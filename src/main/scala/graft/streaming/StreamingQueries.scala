@@ -598,11 +598,16 @@ object StreamingQueries {
     // clusters + the accumulated delta (latestWins windows the DELTA
     // only and probes the bucketed base with broadcast override ids);
     // the corpus pays one column-pruned scan per fold (verify-side
-    // shingles of candidate endpoints), never a shuffle. The readout
-    // materializes latestWins once and must equal the from-scratch
-    // closure over ALL documents — q120's oracle, which is how the
-    // cross-fold transitive case (fold-2 doc bridging a fold-1 cluster
-    // with a corpus cluster) is proven, not assumed.
+    // shingles of candidate endpoints), never a shuffle. What a fold
+    // costs is its count of SQL executions, each a fixed planning and
+    // scheduling round trip at these sizes: the batch prefix checkpoint,
+    // the bounded candidate-pair checkpoint (two), the pair-set collect
+    // and the touched-cluster collect (the subgraph is labeled on the
+    // driver, no distributed CC rounds), then the three overlapped
+    // appends. The readout materializes latestWins once and must equal
+    // the from-scratch closure over ALL documents — q120's oracle, which
+    // is how the cross-fold transitive case (fold-2 doc bridging a
+    // fold-1 cluster with a corpus cluster) is proven, not assumed.
     "q124_stream_incremental_labels" -> ((s, d) => {
       import graft.Tables
       import graft.operators.Dedup
@@ -654,8 +659,8 @@ object StreamingQueries {
           s.read.schema(labelsSchema).parquet(labelsDir))
         val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
         // the three state appends are independent actions over disjoint
-        // dirs whose inputs are materialized (sub's CC output, the
-        // ckpt'd bprefix) or pre-fold reads — overlap them (§2.6; the
+        // dirs whose inputs are materialized (sub's driver-built rows,
+        // the ckpt'd bprefix) or pre-fold reads — overlap them (§2.6; the
         // redelivery argument already covers any subset-committed state)
         graft.operators.Shared.inParallel(Seq(
           () => sub.withColumn("ver", lit(ver))
@@ -1021,7 +1026,7 @@ object StreamingQueries {
     // dashboard kept live as the corpus ingests. Each fold:
     //
     //   labels  = q124's machinery (pairs against corpus ∪ accumulated
-    //             postings; subgraph CC over the latest-wins view);
+    //             postings; subgraph labels over the latest-wins view);
     //   scorecard' = q127MergeOf(scorecard, batchAgg(b, sub),
     //             corrections(sub, corpusFlags ∪ ACCUMULATED batch flags,
     //             current view)) appended with ver = fold+1 — so a later
@@ -1106,9 +1111,9 @@ object StreamingQueries {
           s.read.schema(labelsSchema).parquet(labelsDir)
             .filter(col("ver") < ver))
         // the fold's label delta is read three times (batch aggregate,
-        // corrections, the append) — materialize it once per fold
-        val (sub0, _) = Dedup.incrementalSubLabels(current, pairs)
-        val sub = graft.operators.Shared.ckpt(sub0)
+        // corrections, the append); it is driver data, so no re-read
+        // recomputes it
+        val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
         val allFlags = corpusFlags.unionByName(
           s.read.schema(flagsSchema).parquet(flagsDir)
             .filter(col("ver") < ver).drop("ver")

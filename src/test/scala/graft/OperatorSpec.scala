@@ -48,9 +48,23 @@ class OperatorSpec extends AnyFunSuite {
           corpus.unionByName(batch), batch, postings, bydoc)
       }
       assert(e2.getMessage.contains("span fold touched-doc set"))
+      // the driver-side subgraph labeling collects the touched clusters'
+      // members under the same bound: one new pair touching a 5-member
+      // cluster passes the pair-set bound and trips the member bound
+      val old5 = Seq(1L, 2L, 3L, 4L, 5L).map(d => (d, 1L, 5L))
+        .toDF("doc_id", "rep", "cluster_size")
+      val onePair = Seq((5L, 100L)).toDF("doc_a", "doc_b")
+      conf.set("spark.graft.deltaBound.maxRows", "3")
+      val e3 = intercept[IllegalStateException] {
+        graft.operators.Dedup.incrementalSubLabels(old5, onePair)
+      }
+      assert(e3.getMessage.contains("touched-cluster members"))
+      assert(e3.getMessage.contains("deltaBound.maxRows"))
       conf.set("spark.graft.deltaBound.maxRows", "0") // 0 disables
       assert(Shared.ckptBounded(
         spark.range(10).toDF("doc_id"), "unbounded ok").count() === 10)
+      assert(graft.operators.Dedup.incrementalSubLabels(old5, onePair)._1
+        .count() === 6)
     } finally conf.set("spark.graft.deltaBound.maxRows", prev)
   }
 
@@ -1591,6 +1605,106 @@ class OperatorSpec extends AnyFunSuite {
     val old = oldLabels.as[(Long, Long, Long)].collect().toSet
     assert(old === Set((1L, 1L, 2L), (11L, 1L, 2L),
       (3L, 3L, 2L), (13L, 3L, 2L), (5L, 5L, 2L), (15L, 5L, 2L)))
+  }
+
+  /** The distributed formulation of [[operators.Dedup.incrementalSubLabels]]
+    * — CC over the new pairs plus the touched clusters' label edges, sized
+    * by a window — kept here as the reference the driver-side labeling
+    * must reproduce row for row. `trail` runs the CC rounds through a
+    * parquet progress dir instead of in-memory checkpoints.
+    */
+  private def referenceSubLabels(oldLabels: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame,
+      trail: Option[String] = None): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val touched = pairs
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+      .distinct()
+    val touchedReps = oldLabels.join(touched, Seq("doc_id"), "left_semi")
+      .select(col("rep")).distinct()
+    val affected = oldLabels.join(touchedReps, Seq("rep"), "left_semi")
+    val subEdges = pairs
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(affected.select(col("doc_id").as("src"),
+        col("rep").as("dst")))
+    operators.Dedup.connectedComponents(subEdges, progressDir = trail)
+      .withColumn("cluster_size", count(lit(1)).over(
+        Window.partitionBy(col("rep"))))
+      .select(col("doc_id"), col("rep"), col("cluster_size"))
+  }
+
+  test("incrementalSubLabels: driver union-find equals the distributed CC " +
+      "reference on seeded random and hand-built subgraphs") {
+    import spark.implicits._
+    // old labels from a cluster assignment: rep = min member, every
+    // member (the rep included, i.e. a rep -> rep label edge) has a row
+    def labels(clusters: Seq[Seq[Long]]) = clusters.flatMap { c =>
+      c.map(d => (d, c.min, c.size.toLong))
+    }.toDF("doc_id", "rep", "cluster_size")
+    // The in-memory CC loop plans each round over the previous round's
+    // checkpoint, which keeps its origin plan's size estimate, and every
+    // join multiplies the estimates: a long chain's ~8 rounds stall the
+    // planner in BigInt arithmetic. A parquet trail re-reads every round
+    // with file-size statistics; its reads are nullable, so a trailed
+    // reference is compared on column names and types.
+    def check(what: String, old: Seq[Seq[Long]],
+        pairs: Seq[(Long, Long)], trailed: Boolean = false): Unit = {
+      val oldDf = labels(old)
+      val pairDf = pairs.toDF("doc_a", "doc_b")
+      val (got, gotReps) =
+        operators.Dedup.incrementalSubLabels(oldDf, pairDf)
+      val trail = Option.when(trailed)(java.nio.file.Files
+        .createTempDirectory("graft_cc_ref").resolve("cc").toString)
+      val want = referenceSubLabels(oldDf, pairDf, trail)
+      if (trailed) assert(got.schema.map(f => f.name -> f.dataType) ===
+        want.schema.map(f => f.name -> f.dataType), what)
+      else assert(got.schema === want.schema, what)
+      assert(got.as[(Long, Long, Long)].collect().sorted.toSeq ===
+        want.as[(Long, Long, Long)].collect().sorted.toSeq, what)
+      val touched = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+      assert(gotReps.as[Long].collect().toSet ===
+        old.filter(_.exists(touched)).map(_.min).toSet, what)
+      trail.foreach(t => org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(t).getParentFile))
+    }
+    val r = new scala.util.Random(20261018L)
+    for (round <- 1 to 4) {
+      // 40 old docs in random clusters of 1-4, 20 new docs (100+)
+      val olds = r.shuffle((1L to 40L).toList)
+      val clusters = Iterator.unfold(olds) { rest =>
+        if (rest.isEmpty) None
+        else { val k = 1 + r.nextInt(4); Some(rest.splitAt(k)) }
+      }.toSeq
+      val ids = olds ++ (100L until 120L)
+      val pairs = Seq.fill(12) {
+        val (a, b) = (ids(r.nextInt(ids.size)), ids(r.nextInt(ids.size)))
+        (math.min(a, b), math.max(a, b))
+      }.filter(p => p._1 != p._2).distinct
+      check(s"random round $round", clusters, pairs)
+    }
+    // a pair that touches only the rep of a cluster (its rep -> rep edge)
+    check("rep touch", Seq(Seq(3L, 8L, 9L)), Seq((3L, 50L)))
+    // one new pair bridges two old clusters: both merge under the min rep
+    check("bridge", Seq(Seq(2L, 7L), Seq(4L, 5L, 6L), Seq(30L, 31L)),
+      Seq((6L, 7L)))
+    // a 100-hop chain of new docs hanging off an old cluster
+    val chain = (600L until 700L).map(i => (i, i + 1))
+    check("100-hop chain", Seq(Seq(500L, 600L)), chain, trailed = true)
+    // the same chain hung off its FAR end: the reference's min label
+    // would crawl one hop per round (past its 30-round budget); the
+    // union-find labels it in one pass
+    val farEnd = operators.Dedup.incrementalSubLabels(
+      labels(Seq(Seq(500L, 700L))), chain.toDF("doc_a", "doc_b"))._1
+      .as[(Long, Long, Long)].collect().toSet
+    assert(farEnd ===
+      ((600L to 700L) :+ 500L).map(d => (d, 500L, 102L)).toSet)
+    // no new pairs: an empty delta with the reference's schema
+    val oldDf = labels(Seq(Seq(1L, 2L)))
+    val noPairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    val (empty, emptyReps) =
+      operators.Dedup.incrementalSubLabels(oldDf, noPairs)
+    assert(empty.isEmpty && emptyReps.isEmpty)
+    assert(empty.schema === referenceSubLabels(oldDf, noPairs).schema)
   }
 
   test("q121 maintenance: overflow split, fresh cell, carry-over, cell-locality") {
