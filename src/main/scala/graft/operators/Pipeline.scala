@@ -306,78 +306,86 @@ object Pipeline {
       }: _*)
   }
 
-  /** q128's exact fold arc replayed in batch form: the tenth splits into
-    * `folds` ordered sub-batches; each fold pairs against corpus ∪
-    * accumulated postings (q124's labels machinery), merges its batch
-    * aggregate + label corrections into the previous fold's scorecard,
-    * and appends ver-stamped scorecard / label / flag rows. Returns
-    * (scorecard ver chain incl. ver 0 = frozen base, accumulated flag
-    * delta rows). ONE derivation shared by q128b's compaction and
+  /** q128's scorecard fold over per-run stores under `dir` — the one fold
+    * arc behind the q128 stream and [[scVerChain]]'s batch loop. Each step
+    * runs the [[Dedup.LabelsFold]] step, merges its batch aggregate and
+    * label corrections (against corpus flags ∪ the ACCUMULATED batch flag
+    * rows and the pre-fold labels view) into the previous fold's
+    * scorecard, appended with ver = fold + 1 — so a later fold can demote
+    * a doc that arrived in an EARLIER fold — and appends the batch's flag
+    * rows with ver = fold.
+    *
+    * Redelivery: the stores whose duplication would be VISIBLE in
+    * arithmetic (scorecard rows, label overrides, flag rows) carry `ver`
+    * and every in-step read filters to strictly pre-fold rows, so a
+    * redelivered fold recomputes byte-identical rows; the unversioned
+    * prefix and seen stores have duplication-insensitive consumers
+    * ([[Dedup.LabelsFold]]). The filters also make the five appends
+    * order-independent, so each step overlaps them (§2.6).
+    */
+  private[graft] final class ScorecardFold(s: SparkSession, d: String,
+      docs: DataFrame, dir: java.nio.file.Path) {
+    private val labels = new Dedup.LabelsFold(s, d, docs, dir)
+    private val corpusFlags = q127DocflagsArtifact(s, d)
+    private val scBase = q127BaseArtifact(s, d)
+    private val flagsDir = dir.resolve("flags_delta").toString
+    private val scDir = dir.resolve("scorecard").toString
+    private val flagsSchema = corpusFlags.schema.add("ver", "long")
+    private val scSchema = scBase.schema.add("ver", "long")
+
+    /** Seed writes of the five stores; the scorecard chain starts at
+      * ver 0 = the frozen corpus scorecard.
+      */
+    val seeds: Seq[() => Unit] = labels.seeds ++ Seq(
+      () => corpusFlags.limit(0).withColumn("ver", lit(0L))
+        .write.parquet(flagsDir),
+      () => scBase.withColumn("ver", lit(0L)).write.parquet(scDir))
+
+    /** The scorecard ver chain, ver 0 included. */
+    def chain: DataFrame = s.read.schema(scSchema).parquet(scDir)
+
+    /** The accumulated batch flag rows. */
+    def flags: DataFrame = s.read.schema(flagsSchema).parquet(flagsDir)
+
+    /** Each source's newest scorecard row with ver <= `upTo`. */
+    def latest(upTo: Long): DataFrame =
+      chain.filter(col("ver") <= upTo)
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("source")).orderBy(col("ver").desc)))
+        .filter(col("_rn") === 1).drop("_rn", "ver")
+
+    def step(b: DataFrame, ver: Long): Unit = {
+      val l = labels.step(b, ver)
+      val allFlags = corpusFlags.unionByName(
+        flags.filter(col("ver") < ver).drop("ver").dropDuplicates("doc_id"))
+      Shared.inParallel(
+        (() => q127MergeOf(latest(ver), q127BatchAgg(b, l.sub),
+            q127Corrections(l.sub, allFlags, l.current))
+          .withColumn("ver", lit(ver + 1))
+          .write.mode("append").parquet(scDir)) +:
+        l.appends :+
+        (() => docflagsOf(b).withColumn("ver", lit(ver))
+          .write.mode("append").parquet(flagsDir)))
+    }
+  }
+
+  /** q128's fold arc replayed in batch form: the tenth splits into
+    * `folds` ordered sub-batches, each folded by [[ScorecardFold]].
+    * Returns (scorecard ver chain incl. ver 0 = frozen base, accumulated
+    * flag delta rows). ONE derivation shared by q128b's compaction and
     * q171's retention vacuum, so the fold arc cannot drift between the
     * two closers (the verChainFolds rule).
     */
   private[graft] def scVerChain(s: SparkSession, d: String, folds: Int)
       : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
-    val baseLabels = Dedup.q120LabelsArtifact(s, d)
-    val corpusDf = Dedup.q120DfArtifact(s, d)
-    val corpusPrefix = Dedup.q120PrefixArtifact(s, d)
-    val corpus = Dedup.q120Corpus(s, d)
-    val corpusFlags = q127DocflagsArtifact(s, d)
-    val scBase0 = q127BaseArtifact(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("graft_scchain")
-    val labelsDir = dir.resolve("labels_delta").toString
-    val prefixDir = dir.resolve("prefix_delta").toString
-    val seenDir = dir.resolve("seen").toString
-    val flagsDir = dir.resolve("flags_delta").toString
-    val scDir = dir.resolve("scorecard").toString
-    baseLabels.limit(0).withColumn("ver", lit(0L)).write.parquet(labelsDir)
-    corpusPrefix.limit(0).write.parquet(prefixDir)
-    docs.select(col("doc_id")).limit(0).write.parquet(seenDir)
-    corpusFlags.limit(0).withColumn("ver", lit(0L)).write.parquet(flagsDir)
-    scBase0.withColumn("ver", lit(0L)).write.parquet(scDir)
-    def latestSc(upTo: Long): DataFrame =
-      s.read.parquet(scDir).filter(col("ver") <= upTo)
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("source")).orderBy(col("ver").desc)))
-        .filter(col("_rn") === 1).drop("_rn", "ver")
-    for (k <- 0 until folds) {
-      val ver = k.toLong
-      val b = docs.filter(col("doc_id") % 10 === 0)
-        .filter(expr(s"(doc_id div 10) % $folds") === k)
-      val seenDocs = corpus.unionByName(
-        docs.join(s.read.parquet(seenDir), Seq("doc_id"), "left_semi"))
-      val prefixAll = corpusPrefix.unionByName(s.read.parquet(prefixDir))
-      // tokenize the batch once per fold: the probe-side prefix rows and
-      // the posting-store append below are the same frame
-      val (bsh, bprefix) = Dedup.batchIndexOf(b, corpusDf)
-      val pairs = Dedup.batchPairsWith(seenDocs, bsh, bprefix, prefixAll)
-      val current = Dedup.latestWins(baseLabels,
-        s.read.parquet(labelsDir).filter(col("ver") < ver))
-      // the fold's label delta is read three times (batch aggregate,
-      // corrections, the append); it is driver data, so no re-read
-      // recomputes it
-      val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
-      val allFlags = corpusFlags.unionByName(
-        s.read.parquet(flagsDir).filter(col("ver") < ver).drop("ver")
-          .dropDuplicates("doc_id"))
-      // independent appends over disjoint dirs, every cross-store read
-      // ver-filtered to pre-fold rows — overlap them (§2.6; the q128
-      // stream form's argument verbatim)
-      Shared.inParallel(Seq(
-        () => q127MergeOf(latestSc(ver), q127BatchAgg(b, sub),
-            q127Corrections(sub, allFlags, current))
-          .withColumn("ver", lit(ver + 1))
-          .write.mode("append").parquet(scDir),
-        () => sub.withColumn("ver", lit(ver))
-          .write.mode("append").parquet(labelsDir),
-        () => bprefix.write.mode("append").parquet(prefixDir),
-        () => b.select(col("doc_id")).write.mode("append").parquet(seenDir),
-        () => docflagsOf(b).withColumn("ver", lit(ver))
-          .write.mode("append").parquet(flagsDir)))
-    }
-    (s.read.parquet(scDir), s.read.parquet(flagsDir))
+    val sc = new ScorecardFold(s, d, docs,
+      graft.streaming.StreamingQueries.tempDir(s, "graft_scchain"))
+    Shared.inParallel(sc.seeds)
+    for (k <- 0 until folds)
+      sc.step(docs.filter(col("doc_id") % 10 === 0)
+        .filter(expr(s"(doc_id div 10) % $folds") === k), k.toLong)
+    (sc.chain, sc.flags)
   }
 
   /** Spec counter: the shared batch scorecard chain DERIVES once. */

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Q42 — sessionization through the *custom-state* streaming API
   * (`KeyValueGroupedDataset.flatMapGroupsWithState`), the escape hatch for
@@ -72,18 +70,7 @@ object StatefulSession {
       val sessions = ds.groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(sessionize)
-      s.catalog.dropTempView("q42_mem")
-      // Narrow state partitions around start() — see StreamingQueries
-      // .StatePartitions (RocksDB instance load is seconds per partition).
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        StreamingQueries.StatePartitions)
-      try {
-        val q = sessions.writeStream.format("memory").queryName("q42_mem")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table("q42_mem")
+      StreamingQueries.drain(s, sessions.toDF(), "q42_mem", "append")
         .orderBy(col("user_id"), col("session_id"))
     })
   )

@@ -1,34 +1,44 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.Q
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Shared
+import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-/** Streaming inventory Q27–Q30 (SURVEY §2.3): real Structured Streaming
-  * queries over the `events` table replayed as a stream, drained with
-  * `Trigger.AvailableNow` into a memory sink, returned as the final batch
-  * result so the driver's oracle harness can hash-check them.
+/** The continuous rows: real Structured Streaming queries over the test
+  * tables replayed as streams, each run to its end and returned as a
+  * batch result so the driver's oracle harness can hash-check it.
   *
-  *  - q27/q28/q29 run in COMPLETE output mode (no watermark): every
-  *    window is in the final state, so the result equals the batch
-  *    semantics the DuckDB oracle computes. The production deployment of
-  *    the same query uses append mode + watermark (q30 exercises that
-  *    path, where dropping *is* the object under test).
-  *  - q30 replays events as two ordered files (maxFilesPerTrigger=1) with
-  *    a 1-hour watermark in APPEND mode: batch 1 is days < SplitDay,
-  *    batch 2 the rest including now-late rows. Late rows whose window
-  *    closed before watermark₁ are dropped, and windows past the final
-  *    watermark never emit — both effects are deterministic functions of
-  *    the data, which the DuckDB oracle reproduces in SQL.
+  * Every row starts its stream through one helper, [[runToEnd]]: it
+  * narrows the state partitions around `start()` ([[StatePartitions]]),
+  * triggers `AvailableNow`, then awaits and stops the query, restoring the
+  * session's partition count also when the query fails.
+  *  - [[drain]] runs a stream into a memory sink and returns the sink
+  *    table: q27–q29, q46, q47, q62, q79, q80, q89, q108, q116, q42
+  *    ([[StatefulSession]]) over a staged table dir, and the
+  *    replay-and-drain rows q30 and q143.
+  *  - [[Replay]] is the replay-fold runner: it splits a row's input into
+  *    ordered micro-batch files under the row's temp dir and reads them
+  *    back one file per trigger; [[Replay.foldEach]] folds every
+  *    micro-batch into the row's state stores with `foreachBatch` (q124,
+  *    q128, q136, q150, q156, q159, q161d). A row supplies only its fold
+  *    body and its readout.
   *
-  * Scale posture: these lower to streaming HashAggregate over the state
-  * store keyed by (window, group) — partitioned by group key, spillable,
-  * RocksDB-backed in production. Complete-mode memory sinks are test
-  * harness only.
+  * q27/q28/q29 run in COMPLETE output mode (no watermark): every window
+  * is in the final state, so the result equals the batch semantics the
+  * DuckDB oracle computes. q30 exercises the append-mode + watermark path
+  * a production deployment runs, where dropping late rows *is* the object
+  * under test.
+  *
+  * Scale posture: the aggregations lower to streaming HashAggregate over
+  * the state store keyed by (window, group) — partitioned by group key,
+  * spillable, RocksDB-backed in production. Complete-mode memory sinks
+  * are test harness only.
   */
 object StreamingQueries {
   import Q._
@@ -69,58 +79,47 @@ object StreamingQueries {
     stage.toString
   }
 
-  /** Stage `df` as ONE parquet replay file `<dir>/<prefix>NNNN.parquet`
-    * with an mtime that orders it n-th for the file streaming source —
-    * the q30/q124 multi-batch replay primitive. The directory stream is
-    * closed (see [[stageTableDir]]'s leak note).
+  /** Stage a replay's fold files `<dir>/foldNNNN.parquet`, one per fold,
+    * each with an mtime that orders it n-th for the file streaming source.
+    * partitionBy on the fold index writes every fold from a single scan
+    * of `df` (the staging runs inside the timed region of every replay
+    * row, so this is query-path cost). coalesce(1) keeps one task writing
+    * all fold directories, so each fold lands as exactly one part file.
+    * Directory streams are closed (see [[stageTableDir]]'s leak note).
     */
-  private def writeReplayFile(dir: java.nio.file.Path, df: DataFrame,
-      prefix: String, n: Int): Unit = {
-    val stage = dir.resolve(s"stage_$prefix$n")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val ls = Files.list(stage)
-    val part =
-      try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally ls.close()
-    val dst = dir.resolve(f"$prefix$n%04d.parquet")
-    Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-    dst.toFile.setLastModified(1700000000000L + n * 60000L)
-  }
-
-  /** Stage ALL of a replay's fold files in ONE pass: partitionBy on the
-    * fold index writes every `<prefix>NNNN.parquet` from a single scan of
-    * `df`, where the per-fold [[writeReplayFile]] loop re-scanned (and
-    * re-filtered) the source once per fold — k write jobs → 1 for the
-    * same bytes (round 15; the staging runs inside the TIMED region of
-    * every replay-based row, so this is query-path cost, not harness
-    * cost). coalesce(1) keeps one task writing all fold directories, so
-    * each fold lands as exactly one part file; file contents and mtimes
-    * (the stream's ordering contract) are identical to the per-fold
-    * writer's.
-    */
-  private def writeReplayFolds(dir: java.nio.file.Path, df: DataFrame,
-      foldIdx: org.apache.spark.sql.Column, folds: Int,
-      prefix: String): Unit = {
-    val stage = dir.resolve(s"stage_$prefix")
+  private def writeReplayFolds(dir: Path, df: DataFrame, foldIdx: Column,
+      folds: Int): Unit = {
+    val stage = dir.resolve("stage")
     df.withColumn("_fold", foldIdx.cast("int")).coalesce(1)
       .write.mode("overwrite").partitionBy("_fold").parquet(stage.toString)
     for (n <- 0 until folds) {
       val sub = stage.resolve(s"_fold=$n")
-      if (Files.isDirectory(sub)) {
-        val ls = Files.list(sub)
-        val part =
-          try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally ls.close()
-        val dst = dir.resolve(f"$prefix$n%04d.parquet")
-        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-        dst.toFile.setLastModified(1700000000000L + n * 60000L)
-      } else {
-        // an EMPTY fold produces no partition directory; the replay
-        // contract still needs a (schema-carrying, zero-row) file so the
-        // stream fires the same number of micro-batches
-        writeReplayFile(dir, df.filter(foldIdx.cast("int") === n), prefix, n)
-      }
+      // an EMPTY fold produces no partition directory; the replay
+      // contract still needs a (schema-carrying, zero-row) file so the
+      // stream fires the same number of micro-batches
+      if (!Files.isDirectory(sub))
+        df.filter(foldIdx.cast("int") === n).coalesce(1)
+          .write.parquet(sub.toString)
+      val ls = Files.list(sub)
+      val part =
+        try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        finally ls.close()
+      val dst = dir.resolve(f"fold$n%04d.parquet")
+      Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+      dst.toFile.setLastModified(1700000000000L + n * 60000L)
     }
+  }
+
+  /** A fresh temp dir named `<prefix>…`, deleted with its contents at JVM
+    * exit: the local Hadoop FileSystem's delete-on-exit list runs when the
+    * FileSystem cache closes at shutdown. Not earlier — a row's readout is
+    * lazy and reads the dir's stores only when the caller collects.
+    */
+  private[graft] def tempDir(s: SparkSession, prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+      .deleteOnExit(new org.apache.hadoop.fs.Path(dir.toUri))
+    dir
   }
 
   /** Streaming view of events, `ts` normalized to TimestampType whatever
@@ -139,60 +138,77 @@ object StreamingQueries {
     * on the shared box — at 32 partitions x 5 queries this alone blew the
     * round-2 driver bench timeout). 8 instances keep the end-to-end state
     * machinery exercised; a production deployment sizes this to its
-    * cluster via the same conf before starting the query.
+    * cluster.
     */
-  private[graft] val StatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8")
+  private[graft] val StatePartitions: String = "8"
 
-  /** Run a streaming aggregation to completion, return the sink table.
-    * Shuffle-partition conf is narrowed around `start()` (see
-    * [[StatePartitions]]) and restored for the batch queries.
+  /** Start `w` and run it to its end: state partitions narrowed to
+    * [[StatePartitions]] around `start()`, `Trigger.AvailableNow`, then
+    * await and stop. The session's partition count is restored for the
+    * batch queries whether the query ends or fails.
     */
-  private def drain(s: SparkSession, agg: DataFrame, name: String,
-                    mode: String): DataFrame = {
-    s.catalog.dropTempView(name) // allow re-runs in one session (bench)
+  private def runToEnd(s: SparkSession, w: DataStreamWriter[_]): Unit = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
     try {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      val q = w.trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination() finally q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Run a stream into memory sink `name` to its end, return the table. */
+  private[streaming] def drain(s: SparkSession, agg: DataFrame,
+      name: String, mode: String): DataFrame = {
+    s.catalog.dropTempView(name) // allow re-runs in one session (bench)
+    runToEnd(s, agg.writeStream.format("memory").queryName(name)
+      .outputMode(mode))
     s.table(name)
   }
 
-  /** Builds q89's UNSTARTED streaming DataFrame (split out so PlanSpec
-    * can assert the static-side shape without running the stream).
-    *
-    * New documents arrive as a stream (the doc_id % 10 == 0 tenth plays
-    * the crawl batch); the other nine tenths are the static corpus. The
-    * stream side computes its 32-min MinHash signature PER ROW
-    * ([[graft.operators.Dedup.minhashSigOfH31]] — one md5 pass + 32
-    * universal-hash mins, bit-identical to q34's aggregate form but
-    * stateless, which is what makes it streamable), explodes its 8 LSH
-    * bands, and equi-joins the corpus band table: a stream-static join
-    * on (band, bv), so a new doc meets only corpus docs sharing a band —
-    * never new × corpus. Band collisions pay the exact >= 26/32
-    * signature compare (q34's threshold, whose pigeonhole bound makes
-    * band-collision recall 100% AT the threshold — so the band join
-    * provably loses nothing the verify would keep, and the batch oracle
-    * can skip band simulation). dropDuplicates collapses multi-band hits
-    * (keyed state; bounded replay here — a production stream bounds it
-    * with dropDuplicatesWithinWatermark like q46).
-    *
-    * The corpus band table is MATERIALIZED once per (session, tier) —
-    * written bucketed by (band, bv) via [[graft.operators.Bucketed
-    * .writeOnceBucketed]] — and the join's static side is a bare scan of
-    * that table. Structured Streaming re-evaluates the static side of a
-    * stream-static join on EVERY micro-batch: inlining sigOf(corpus)
-    * here would recompute the full-corpus shingle → md5 → 32-min MinHash
-    * pipeline per trigger, while the materialized form pays a columnar
-    * scan of (id, sig, band, bv). At 100 TB that is the difference
-    * between an ingest batch reading ids + 4-min band values and one
-    * re-hashing the corpus from scratch each trigger. PlanSpec asserts
-    * the static subtree is the table scan and carries none of the
-    * signature expressions.
+  /** The replay-fold runner for one run of row `row`: `input` split by
+    * `foldIdx` into `folds` ordered micro-batch files under `in/` of the
+    * row's temp dir ([[tempDir]]), which also holds the row's state
+    * stores ([[store]]) and the stream checkpoint.
     */
+  private[graft] final class Replay(s: SparkSession, row: String,
+      input: DataFrame, foldIdx: Column, folds: Int) {
+    val dir: Path = tempDir(s, s"graft_$row")
+
+    def store(name: String): String = dir.resolve(name).toString
+
+    /** Stage the fold files, overlapped with the row's one-time `seeds`
+      * (independent writes over disjoint dirs, §2.6), and read them back
+      * one file per trigger.
+      */
+    def stream(seeds: (() => Unit)*): DataFrame = {
+      val in = dir.resolve("in")
+      Shared.inParallel(
+        (() => writeReplayFolds(in, input, foldIdx, folds)) +: seeds)
+      s.readStream.schema(input.schema).option("maxFilesPerTrigger", "1")
+        .parquet(in.toString)
+    }
+
+    /** Run `fold(batch, batchId)` on every micro-batch of [[stream]].
+      * Fold bodies keep AQE on: its runtime broadcast picks on the
+      * stat-less store-dir reads are load-bearing (with AQE off, the tiny
+      * joins fell back to shuffle plans and q124 ran ~1.7x slower).
+      */
+    def foldEach(seeds: (() => Unit)*)(fold: (DataFrame, Long) => Unit)
+        : Unit =
+      runToEnd(s, stream(seeds: _*).writeStream
+        .foreachBatch((b: DataFrame, id: java.lang.Long) =>
+          fold(b, id.longValue()))
+        .option("checkpointLocation", store("ckpt")))
+  }
+
+  /** [[Replay]] of the doc_id % 10 == 0 batch tenth of `docs` (the
+    * q89/q120 split), fold = (doc_id div 10) % folds.
+    */
+  private def tenthReplay(s: SparkSession, row: String, docs: DataFrame,
+      folds: Int): Replay =
+    new Replay(s, row, docs.filter(col("doc_id") % 10 === 0),
+      expr(s"(doc_id div 10) % $folds"), folds)
+
   /** Shingle → MinHash signature → exploded LSH bands for q89's two sides. */
   private def q89SigOf(df: DataFrame, idAs: String,
       sigAs: String): DataFrame = {
@@ -241,6 +257,38 @@ object StreamingQueries {
     newDocs.join(corpus, Seq("band", "bv"))
   }
 
+  /** Builds q89's UNSTARTED streaming DataFrame (split out so PlanSpec
+    * can assert the static-side shape without running the stream).
+    *
+    * New documents arrive as a stream (the doc_id % 10 == 0 tenth plays
+    * the crawl batch); the other nine tenths are the static corpus. The
+    * stream side computes its 32-min MinHash signature PER ROW
+    * ([[graft.operators.Dedup.minhashSigOfH31]] — one md5 pass + 32
+    * universal-hash mins, bit-identical to q34's aggregate form but
+    * stateless, which is what makes it streamable), explodes its 8 LSH
+    * bands, and equi-joins the corpus band table: a stream-static join
+    * on (band, bv), so a new doc meets only corpus docs sharing a band —
+    * never new × corpus. Band collisions pay the exact >= 26/32
+    * signature compare (q34's threshold, whose pigeonhole bound makes
+    * band-collision recall 100% AT the threshold — so the band join
+    * provably loses nothing the verify would keep, and the batch oracle
+    * can skip band simulation). dropDuplicates collapses multi-band hits
+    * (keyed state; bounded replay here — a production stream bounds it
+    * with dropDuplicatesWithinWatermark like q46).
+    *
+    * The corpus band table is MATERIALIZED once per (session, tier) —
+    * written bucketed by (band, bv) via [[graft.operators.Bucketed
+    * .writeOnceBucketed]] — and the join's static side is a bare scan of
+    * that table. Structured Streaming re-evaluates the static side of a
+    * stream-static join on EVERY micro-batch: inlining sigOf(corpus)
+    * here would recompute the full-corpus shingle → md5 → 32-min MinHash
+    * pipeline per trigger, while the materialized form pays a columnar
+    * scan of (id, sig, band, bv). At 100 TB that is the difference
+    * between an ingest batch reading ids + 4-min band values and one
+    * re-hashing the corpus from scratch each trigger. PlanSpec asserts
+    * the static subtree is the table scan and carries none of the
+    * signature expressions.
+    */
   private[graft] def q89Stream(s: SparkSession, d: String): DataFrame = {
     import graft.operators.{Dedup, Shared}
     val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -429,14 +477,11 @@ object StreamingQueries {
     // documents.
     "q143_stream_registers" -> ((s, d) => {
       val docs = s.read.parquet(s"$d/documents.parquet")
-      val inDir = Files.createTempDirectory("graft_q143_in")
-      writeReplayFolds(inDir, docs, expr(
+      val stream = new Replay(s, "q143", docs, expr(
         "CASE WHEN doc_id % 10 != 0 THEN 0" +
-          " ELSE 1 + (doc_id div 10) % 2 END"), 3, "b")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val regs = graft.operators.Sketches.docRegisters(stream)
-      drain(s, regs, "q143_mem", "complete")
+          " ELSE 1 + (doc_id div 10) % 2 END"), 3).stream()
+      drain(s, graft.operators.Sketches.docRegisters(stream), "q143_mem",
+          "complete")
         .orderBy(col("source"), col("idx"))
     }),
 
@@ -510,7 +555,6 @@ object StreamingQueries {
         .orderBy(col("event_type"), col("c_mktsegment"))
     }),
 
-    // Q30 — watermark / late data: 2-batch ordered replay, append mode
     // Q79 — stream-stream LEFT OUTER interval join: the semantics inner
     // joins (q47) don't exercise is the NULL side — an unmatched click
     // is held in state and its null-joined row is emitted only when the
@@ -580,19 +624,10 @@ object StreamingQueries {
 
     // q124 — CONTINUOUS dedup-label maintenance: q120's incremental fold
     // run as a real Structured Streaming pipeline. The batch tenth is
-    // replayed as THREE ordered micro-batch files (maxFilesPerTrigger=1,
-    // the q30 replay pattern) and foreachBatch folds each one into the
-    // maintained state:
-    //
-    //   pairs  = batchPairs(seen docs, micro-batch, frozen corpus df,
-    //            corpus prefix ∪ ACCUMULATED batch prefix rows) — so a
-    //            doc arriving in fold 3 pairs with fold-1 docs through
-    //            the appended postings, not just with the corpus;
-    //   labels = incrementalSubLabels(latestWins(base, delta), pairs)
-    //            appended with ver = fold number (override rows only —
-    //            the corpus-wide carried set is never materialized
-    //            inside a fold);
-    //   state  = append batch prefix rows + batch ids.
+    // replayed as THREE ordered micro-batch files and each micro-batch is
+    // one [[Dedup.LabelsFold]] step: pairs against the corpus ∪ the
+    // ACCUMULATED batch postings, subgraph labels over the latest-wins
+    // view, appended with ver = fold number.
     //
     // Per-fold shuffle is bounded by the micro-batch + its touched
     // clusters + the accumulated delta (latestWins windows the DELTA
@@ -609,87 +644,12 @@ object StreamingQueries {
     // is how the cross-fold transitive case (fold-2 doc bridging a
     // fold-1 cluster with a corpus cluster) is proven, not assumed.
     "q124_stream_incremental_labels" -> ((s, d) => {
-      import graft.Tables
-      import graft.operators.Dedup
-      val dir = Files.createTempDirectory("graft_q124")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
-      val docs = Tables.documents(s, d)
-      val folds = 3
-      // frozen corpus index (q120's staged artifacts) + per-run state
-      val baseLabels = Dedup.q120LabelsArtifact(s, d)
-      val corpusDf = Dedup.q120DfArtifact(s, d)
-      val corpusPrefix = Dedup.q120PrefixArtifact(s, d)
-      val corpus = Dedup.q120Corpus(s, d)
-      val labelsDir = dir.resolve("labels_delta").toString
-      val prefixDir = dir.resolve("prefix_delta").toString
-      val seenDir = dir.resolve("seen").toString
-      // replay staging + the three schema-seed writes are independent
-      // one-time actions over disjoint dirs — overlap them (§2.6)
-      graft.operators.Shared.inParallel(Seq(
-        () => writeReplayFolds(inDir, docs.filter(col("doc_id") % 10 === 0),
-          expr(s"(doc_id div 10) % $folds"), folds, "fold"),
-        () => baseLabels.limit(0).withColumn("ver", lit(0L))
-          .write.parquet(labelsDir),
-        () => corpusPrefix.limit(0).write.parquet(prefixDir),
-        () => docs.select(col("doc_id")).limit(0).write.parquet(seenDir)))
-      // state-dir schemas are fixed by the seed writes above: read with
-      // explicit schemas so no fold pays per-read footer inference
-      val labelsSchema = baseLabels.schema.add("ver", "long")
-      val prefixSchema = corpusPrefix.schema
-      val seenSchema = docs.select(col("doc_id")).schema
-      // Micro-batch REDELIVERY (a crash between the appends and the
-      // checkpoint commit) re-runs the fold with the same ver and
-      // appends byte-identical rows; every consumer is insensitive to
-      // that duplication — candidate pairs pass a distinct(), seen ids
-      // feed a semi-join, and latestWins picks one row per (doc, ver)
-      // whose duplicates are identical. At-least-once delivery therefore
-      // yields exactly-once RESULTS without a transactional sink.
-      def fold(b: DataFrame, ver: Long): Unit = {
-        val seenDocs = corpus.unionByName(
-          docs.join(s.read.schema(seenSchema).parquet(seenDir),
-            Seq("doc_id"), "left_semi"))
-        val prefixAll = corpusPrefix.unionByName(
-          s.read.schema(prefixSchema).parquet(prefixDir))
-        // tokenize the batch once per micro-batch: the probe-side prefix
-        // rows and the posting-store append are the same frame
-        val (bsh, bprefix) = Dedup.batchIndexOf(b, corpusDf)
-        val pairs = Dedup.batchPairsWith(seenDocs, bsh, bprefix, prefixAll)
-        val current = Dedup.latestWins(baseLabels,
-          s.read.schema(labelsSchema).parquet(labelsDir))
-        val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
-        // the three state appends are independent actions over disjoint
-        // dirs whose inputs are materialized (sub's driver-built rows,
-        // the ckpt'd bprefix) or pre-fold reads — overlap them (§2.6; the
-        // redelivery argument already covers any subset-committed state)
-        graft.operators.Shared.inParallel(Seq(
-          () => sub.withColumn("ver", lit(ver))
-            .write.mode("append").parquet(labelsDir),
-          () => bprefix.write.mode("append").parquet(prefixDir),
-          () => b.select(col("doc_id")).write.mode("append")
-            .parquet(seenDir)))
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      // NOTE (round-15, measured): disabling AQE for the fold bodies
-      // ("micro-plans don't need runtime re-optimization") was tried and
-      // REVERTED — q124 regressed ~1.7x (11-12 s → 17-28 s over 3 runs).
-      // AQE's runtime broadcast-join picks on the fold's stat-less
-      // store-dir reads are load-bearing; without them the tiny joins
-      // fall back to shuffle plans. Keep AQE on in fold bodies.
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            fold(b, id.longValue()))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      Dedup.latestWins(baseLabels,
-          s.read.schema(labelsSchema).parquet(labelsDir))
-        .orderBy(col("doc_id"))
+      val docs = graft.Tables.documents(s, d)
+      val r = tenthReplay(s, "q124", docs, 3)
+      val labels = new graft.operators.Dedup.LabelsFold(s, d, docs, r.dir)
+      r.foldEach(labels.seeds: _*)((b, ver) =>
+        Shared.inParallel(labels.step(b, ver).appends))
+      labels.before(Long.MaxValue).orderBy(col("doc_id"))
     }),
 
     // q156 — CONTINUOUS tombstone maintenance: q154's deletion fold run
@@ -719,15 +679,10 @@ object StreamingQueries {
     // corpus. Per-fold cost: touched clusters only (the q154 law:
     // 1.2–1.8% of corpus at the measured tiers), never a relabel.
     "q156_stream_tombstones" -> ((s, d) => {
-      import graft.Tables
       import graft.operators.Dedup
-      val dir = Files.createTempDirectory("graft_q156")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
-      val docs = Tables.documents(s, d)
-      val folds = 2
-      writeReplayFolds(inDir, Dedup.tombstonesOf(docs),
-        expr(s"(doc_id div ${Dedup.TombMod}) % $folds"), folds, "fold")
+      val docs = graft.Tables.documents(s, d)
+      val r = new Replay(s, "q156", Dedup.tombstonesOf(docs),
+        expr(s"(doc_id div ${Dedup.TombMod}) % 2"), 2)
       val base = Dedup.labelsArtifact(s, d)
       // ver-keyed fold dirs with mode=overwrite (the q159/q150
       // redelivery shape): a redelivered micro-batch REWRITES its own
@@ -735,9 +690,7 @@ object StreamingQueries {
       // earlier attempt, so at-least-once delivery yields exactly-once
       // override state structurally — latest-wins never has to mask
       // duplicate or partial ver rows (round-11 advice).
-      val deltaDir = dir.resolve("labels_delta").toString
-      base.limit(0).withColumn("ver", lit(0L))
-        .write.parquet(s"$deltaDir/ver=0")
+      val deltaDir = r.store("labels_delta")
       // `ver` is a FILE column (the fold writes it); the ver=k path is
       // only the overwrite-idempotency key. Explicit schema spares the
       // per-fold footer inference.
@@ -755,14 +708,14 @@ object StreamingQueries {
         // re-pairing AND the dropped-row anti-join, and every lazy
         // reference re-paid the latest-wins window + the rep semi-join.
         // Deletion-batch bounded, so checkpoint-sized.
-        val members = graft.operators.Shared.ckptBounded(
+        val members = Shared.ckptBounded(
           current.join(touchedReps, Seq("rep"), "left_semi"),
           "tombstone-fold touched-cluster members")
         val survivorIds = members.join(t, Seq("doc_id"), "left_anti")
           .select(col("doc_id"))
         // re-derived labels materialized once (read by the append union
         // and the dropped-row anti-join)
-        val relabeled = graft.operators.Shared.ckpt(Dedup.labelsOf(
+        val relabeled = Shared.ckpt(Dedup.labelsOf(
           docs.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"))
           .select(col("doc_id"), col("rep"), col("cluster_size")))
         val dropped = members.select(col("doc_id"))
@@ -772,47 +725,14 @@ object StreamingQueries {
         relabeled.unionByName(dropped).withColumn("ver", lit(ver))
           .write.mode("overwrite").parquet(s"$deltaDir/ver=$ver")
       }
-      val stream = s.readStream
-        .schema(Dedup.tombstonesOf(docs).schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            fold(b, id.longValue() + 1))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      r.foldEach(() => base.limit(0).withColumn("ver", lit(0L))
+        .write.parquet(s"$deltaDir/ver=0"))((t, id) => fold(t, id + 1))
       Dedup.latestWins(base, deltaAll())
         .filter(col("cluster_size") > 0)
         .select(col("doc_id"), col("rep"), col("cluster_size"))
         .orderBy(col("doc_id"))
     }),
 
-    // q136 — CONTINUOUS span-strip maintenance: q135's fold as a real
-    // Structured Streaming pipeline (three ordered micro-batch files,
-    // maxFilesPerTrigger=1, foreachBatch — the q124 replay pattern).
-    // Each fold runs [[Dedup.spanFoldAgainst]] with the corpus stores ∪
-    // the ACCUMULATED per-fold appends, so a fold-3 doc pairs with
-    // fold-1 docs through the appended window rows, and a later fold's
-    // smaller-id doc demotes an EARLIER fold's keeper (the recomputed
-    // override row with a newer `ver` wins at readout). State appended
-    // per fold: recomputed rows (ver = fold) and the fold's
-    // (doc_id, pos, wh) windows — the posting view later folds probe is
-    // a PROJECTION of the window store (round 15; sound because the
-    // fold's posting consumers are per-hash min/COUNT DISTINCT
-    // aggregates, insensitive to the per-position duplicates).
-    //
-    // Redelivery: the fold reads only the window store, whose
-    // duplication is invisible (per-hash aggregates are min/COUNT
-    // DISTINCT; coverage is an interval union), so a redelivered
-    // micro-batch appends byte-identical override rows and latest-wins
-    // serves each doc once — at-least-once delivery, exactly-once
-    // results, the q124 argument. The oracle is the from-scratch q133
-    // over ALL documents: cross-fold pairing, keeper migration, and the
-    // override chain are hash-proven per tier.
     // q150 — CONTINUOUS layout maintenance: q142's delta fold as a real
     // Structured Streaming pipeline (two ordered micro-batch files,
     // maxFilesPerTrigger=1, foreachBatch). Each micro-batch lands as its
@@ -829,27 +749,12 @@ object StreamingQueries {
     "q150_stream_zorder" -> ((s, d) => {
       import graft.operators.Layout
       Layout.zBase(s, d) // frozen cuts must exist before any fold
-      val dir = Files.createTempDirectory("graft_q150")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
       val ev = graft.Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("tsc"),
           col("user_id"), col("event_type"), col("value"))
-      writeReplayFolds(inDir, ev.filter(col("event_id") % 10 === 0),
-        expr("(event_id div 10) % 2"), 2, "b")
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            Layout.writeStreamDelta(s, d, b, id.longValue()))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      new Replay(s, "q150", ev.filter(col("event_id") % 10 === 0),
+          expr("(event_id div 10) % 2"), 2)
+        .foldEach()((b, id) => Layout.writeStreamDelta(s, d, b, id))
       Layout.serveStreamed(s, d)
     }),
 
@@ -870,37 +775,20 @@ object StreamingQueries {
     // hash-proven per tier.
     "q159_stream_postings" -> ((s, d) => {
       import graft.operators.Retrieval
-      val dir = Files.createTempDirectory("graft_q159")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
       val docs = graft.Tables.documents(s, d)
-      val folds = 2
-      writeReplayFolds(inDir, docs.filter(col("doc_id") % 10 === 0),
-        expr(s"(doc_id div 10) % $folds"), folds, "fold")
+      val r = tenthReplay(s, "q159", docs, 2)
       // frozen base = the q157 staged corpus index (nine tenths)
       val (bPost, bDf, bStats) = Retrieval.idx157(s, d, "base",
         docs.filter(col("doc_id") % 10 =!= 0))
-      val postDir = dir.resolve("post").toString
-      val dfDir = dir.resolve("df").toString
-      val statsDir = dir.resolve("stats").toString
-      def fold(b: DataFrame, id: Long): Unit = {
+      val postDir = r.store("post")
+      val dfDir = r.store("df")
+      val statsDir = r.store("stats")
+      r.foldEach() { (b, id) =>
         val (p, f, st) = Retrieval.bm25IndexOf(b)
         p.write.mode("overwrite").parquet(s"$postDir/batch=$id")
         f.write.mode("overwrite").parquet(s"$dfDir/batch=$id")
         st.write.mode("overwrite").parquet(s"$statsDir/batch=$id")
       }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            fold(b, id.longValue()))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       // shards aggregate ALONE (plain parquet dirs), then join-merge
       // with the bucketed base — never a keyed agg over a union that
       // includes a bucketed scan (the pinned hazard's shape)
@@ -929,53 +817,49 @@ object StreamingQueries {
     // the oracle is the full-corpus q161 replay, hash-proven per tier.
     "q161d_stream_pos_postings" -> ((s, d) => {
       import graft.operators.Retrieval
-      val dir = Files.createTempDirectory("graft_q161d")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
       val docs = graft.Tables.documents(s, d)
-      val folds = 2
-      writeReplayFolds(inDir, docs.filter(col("doc_id") % 10 === 0),
-        expr(s"(doc_id div 10) % $folds"), folds, "fold")
+      val r = tenthReplay(s, "q161d", docs, 2)
       // frozen base = the same physical store q161c/q165d maintain
       val base = Retrieval.posIdx(s, d, "base",
         docs.filter(col("doc_id") % 10 =!= 0))
-      val postDir = dir.resolve("pos").toString
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            Retrieval.posPostingsOf(b).write.mode("overwrite")
-              .parquet(s"$postDir/batch=$id"))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val postDir = r.store("pos")
+      r.foldEach()((b, id) => Retrieval.posPostingsOf(b).write
+        .mode("overwrite").parquet(s"$postDir/batch=$id"))
       Retrieval.phraseMatchOver(s,
         base.unionByName(s.read.parquet(s"$postDir/batch=*")))
     }),
 
+    // q136 — CONTINUOUS span-strip maintenance: q135's fold as a real
+    // Structured Streaming pipeline (three ordered micro-batch files,
+    // maxFilesPerTrigger=1, foreachBatch — the q124 replay pattern).
+    // Each fold runs [[Dedup.spanFoldAgainst]] with the corpus stores ∪
+    // the ACCUMULATED per-fold appends, so a fold-3 doc pairs with
+    // fold-1 docs through the appended window rows, and a later fold's
+    // smaller-id doc demotes an EARLIER fold's keeper (the recomputed
+    // override row with a newer `ver` wins at readout). State appended
+    // per fold: recomputed rows (ver = fold) and the fold's
+    // (doc_id, pos, wh) windows — the posting view later folds probe is
+    // a PROJECTION of the window store (round 15; sound because the
+    // fold's posting consumers are per-hash min/COUNT DISTINCT
+    // aggregates, insensitive to the per-position duplicates).
+    //
+    // Redelivery: the fold reads only the window store, whose
+    // duplication is invisible (per-hash aggregates are min/COUNT
+    // DISTINCT; coverage is an interval union), so a redelivered
+    // micro-batch appends byte-identical override rows and latest-wins
+    // serves each doc once — at-least-once delivery, exactly-once
+    // results, the q124 argument. The oracle is the from-scratch q133
+    // over ALL documents: cross-fold pairing, keeper migration, and the
+    // override chain are hash-proven per tier.
     "q136_stream_incremental_span_strip" -> ((s, d) => {
-      import graft.Tables
       import graft.operators.Dedup
-      val dir = Files.createTempDirectory("graft_q136")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
-      val docs = Tables.documents(s, d)
-      val folds = 3
+      val docs = graft.Tables.documents(s, d)
+      val r = tenthReplay(s, "q136", docs, 3)
       val basePostings = Dedup.q135PostingsArtifact(s, d)
       val baseBydoc = Dedup.q135ByDocArtifact(s, d)
       val base = Dedup.q135BaseArtifact(s, d)
-      val bydocDir = dir.resolve("bydoc_delta").toString
-      val ovDir = dir.resolve("overrides").toString
-      // replay staging + the two seed writes overlap (§2.6)
-      graft.operators.Shared.inParallel(Seq(
-        () => writeReplayFolds(inDir, docs.filter(col("doc_id") % 10 === 0),
-          expr(s"(doc_id div 10) % $folds"), folds, "fold"),
-        () => baseBydoc.limit(0).write.parquet(bydocDir),
-        () => base.limit(0).withColumn("ver", lit(0L)).write.parquet(ovDir)))
+      val bydocDir = r.store("bydoc_delta")
+      val ovDir = r.store("overrides")
       val bydocSchema = baseBydoc.schema
       val ovSchema = base.schema.add("ver", "long")
       def fold(b: DataFrame, ver: Long): Unit = {
@@ -995,8 +879,7 @@ object StreamingQueries {
         // tokenize-once: the batch window list is materialized a single
         // time per micro-batch and shared by the fold probe AND the
         // state append (it previously re-tokenized per consumer)
-        val bw = graft.operators.Shared.ckpt(
-          Dedup.spanWindows(Dedup.spanDocs(s, b)))
+        val bw = Shared.ckpt(Dedup.spanWindows(Dedup.spanDocs(s, b)))
         val (rec, _) = Dedup.spanFoldAgainstWins(s, docs, b, bw, posts, byd)
         // rec's write-time plan re-reads the RAW store dir (the view is
         // not ver-filtered — duplication-insensitivity covers
@@ -1005,168 +888,53 @@ object StreamingQueries {
         rec.withColumn("ver", lit(ver)).write.mode("append").parquet(ovDir)
         bw.write.mode("append").parquet(bydocDir)
       }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            fold(b, id.longValue()))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      r.foldEach(
+        () => baseBydoc.limit(0).write.parquet(bydocDir),
+        () => base.limit(0).withColumn("ver", lit(0L)).write.parquet(ovDir))(
+        fold)
       Dedup.latestSpanWins(base, s.read.schema(ovSchema).parquet(ovDir))
         .orderBy(col("doc_id"))
     }),
 
     // q128 — CONTINUOUS scorecard maintenance: q127's monoid+corrections
     // fold riding q124's micro-batch replay — the per-source curation
-    // dashboard kept live as the corpus ingests. Each fold:
-    //
-    //   labels  = q124's machinery (pairs against corpus ∪ accumulated
-    //             postings; subgraph labels over the latest-wins view);
-    //   scorecard' = q127MergeOf(scorecard, batchAgg(b, sub),
-    //             corrections(sub, corpusFlags ∪ ACCUMULATED batch flags,
-    //             current view)) appended with ver = fold+1 — so a later
-    //             fold can demote a doc that arrived in an EARLIER fold
-    //             (its pure flags come from the appended flag rows, its
-    //             old rep from the override view; the cross-fold
-    //             demotion spec pins exactly this);
-    //   state   = append override rows / postings / seen ids / flag rows.
-    //
-    // Redelivery safety comes from two complementary mechanisms. The
-    // stores whose duplication would be VISIBLE in arithmetic —
-    // scorecard rows, label overrides, flag rows — carry a `ver` column
-    // and every in-fold read filters `ver < fold` (strictly pre-fold
-    // state), so a redelivered micro-batch recomputes byte-identical
-    // rows from byte-identical inputs. The prefix/seen stores are
-    // UNVERSIONED and a redelivery does duplicate their rows — harmless
-    // because every consumer is duplication-insensitive (candidates
-    // pass distinct() + the self-pair guard, seen ids feed a semi-join
-    // — q124's argument); a consumer that counted those stores, or a
-    // compaction that unioned them verbatim, would need the dedup first
-    // (q130's crash spec pins exactly this property for postings).
-    // Net: at-least-once delivery, exactly-once results, no
-    // transactional sink. The readout takes each source's newest row;
-    // the oracle is from-scratch q119 over ALL documents, so the whole
-    // fold chain — cross-fold merges, corrections, monoid adds — is
-    // hash-proven per tier.
+    // dashboard kept live as the corpus ingests. Each micro-batch is one
+    // [[Pipeline.ScorecardFold]] step: q124's labels step, then the batch
+    // aggregate and the label corrections merged into the previous fold's
+    // scorecard, so a later fold can demote a doc that arrived in an
+    // EARLIER fold (the cross-fold demotion spec pins exactly this). The
+    // prefix/seen stores are unversioned: a consumer that counted them,
+    // or a compaction that unioned them verbatim, would need the dedup
+    // first (q130's crash spec pins exactly this property for postings).
+    // The readout takes each source's newest row; the oracle is
+    // from-scratch q119 over ALL documents, so the whole fold chain —
+    // cross-fold merges, corrections, monoid adds — is hash-proven per
+    // tier.
     "q128_stream_incremental_scorecard" -> ((s, d) => {
-      import graft.Tables
-      import graft.operators.{Dedup, Pipeline}
-      import org.apache.spark.sql.expressions.Window
-      val dir = Files.createTempDirectory("graft_q128")
-      val inDir = dir.resolve("in")
-      Files.createDirectories(inDir)
-      val docs = Tables.documents(s, d)
-      val folds = 3
-      val baseLabels = Dedup.q120LabelsArtifact(s, d)
-      val corpusDf = Dedup.q120DfArtifact(s, d)
-      val corpusPrefix = Dedup.q120PrefixArtifact(s, d)
-      val corpus = Dedup.q120Corpus(s, d)
-      val corpusFlags = Pipeline.q127DocflagsArtifact(s, d)
-      val labelsDir = dir.resolve("labels_delta").toString
-      val prefixDir = dir.resolve("prefix_delta").toString
-      val seenDir = dir.resolve("seen").toString
-      val flagsDir = dir.resolve("flags_delta").toString
-      val scDir = dir.resolve("scorecard").toString
-      // replay staging + the five seed writes: independent one-time
-      // actions over disjoint dirs — overlap them (§2.6)
-      graft.operators.Shared.inParallel(Seq(
-        () => writeReplayFolds(inDir, docs.filter(col("doc_id") % 10 === 0),
-          expr(s"(doc_id div 10) % $folds"), folds, "fold"),
-        () => baseLabels.limit(0).withColumn("ver", lit(0L))
-          .write.parquet(labelsDir),
-        () => corpusPrefix.limit(0).write.parquet(prefixDir),
-        () => docs.select(col("doc_id")).limit(0).write.parquet(seenDir),
-        () => corpusFlags.limit(0).withColumn("ver", lit(0L))
-          .write.parquet(flagsDir),
-        () => Pipeline.q127BaseArtifact(s, d).withColumn("ver", lit(0L))
-          .write.parquet(scDir)))
-      // state-dir schemas are fixed by the seed writes above: explicit
-      // schemas spare every fold the per-read footer inference
-      val labelsSchema = baseLabels.schema.add("ver", "long")
-      val prefixSchema = corpusPrefix.schema
-      val seenSchema = docs.select(col("doc_id")).schema
-      val flagsSchema = corpusFlags.schema.add("ver", "long")
-      val scSchema = Pipeline.q127BaseArtifact(s, d).schema.add("ver", "long")
-      def latestSc(upTo: Long): DataFrame =
-        s.read.schema(scSchema).parquet(scDir).filter(col("ver") <= upTo)
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy(col("source")).orderBy(col("ver").desc)))
-          .filter(col("_rn") === 1).drop("_rn", "ver")
-      def fold(b: DataFrame, ver: Long): Unit = {
-        val seenDocs = corpus.unionByName(
-          docs.join(s.read.schema(seenSchema).parquet(seenDir),
-            Seq("doc_id"), "left_semi"))
-        val prefixAll = corpusPrefix.unionByName(
-          s.read.schema(prefixSchema).parquet(prefixDir))
-        // tokenize the batch once per micro-batch: the probe-side prefix
-        // rows and the posting-store append are the same frame
-        val (bsh, bprefix) = Dedup.batchIndexOf(b, corpusDf)
-        val pairs = Dedup.batchPairsWith(seenDocs, bsh, bprefix, prefixAll)
-        val current = Dedup.latestWins(baseLabels,
-          s.read.schema(labelsSchema).parquet(labelsDir)
-            .filter(col("ver") < ver))
-        // the fold's label delta is read three times (batch aggregate,
-        // corrections, the append); it is driver data, so no re-read
-        // recomputes it
-        val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
-        val allFlags = corpusFlags.unionByName(
-          s.read.schema(flagsSchema).parquet(flagsDir)
-            .filter(col("ver") < ver).drop("ver")
-            .dropDuplicates("doc_id"))
-        // the five state appends are independent actions over disjoint
-        // dirs: every cross-store read is ver-filtered to strictly
-        // pre-fold rows (the redelivery-safety filters), so they are
-        // order-independent — overlap them (§2.6)
-        graft.operators.Shared.inParallel(Seq(
-          () => Pipeline.q127MergeOf(latestSc(ver),
-              Pipeline.q127BatchAgg(b, sub),
-              Pipeline.q127Corrections(sub, allFlags, current))
-            .withColumn("ver", lit(ver + 1))
-            .write.mode("append").parquet(scDir),
-          () => sub.withColumn("ver", lit(ver))
-            .write.mode("append").parquet(labelsDir),
-          () => bprefix.write.mode("append").parquet(prefixDir),
-          () => b.select(col("doc_id")).write.mode("append")
-            .parquet(seenDir),
-          () => Pipeline.docflagsOf(b).withColumn("ver", lit(ver))
-            .write.mode("append").parquet(flagsDir)))
-      }
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      try {
-        val q = stream.writeStream
-          .foreachBatch((b: DataFrame, id: java.lang.Long) =>
-            fold(b, id.longValue()))
-          .option("checkpointLocation", dir.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow()).start()
-        try q.awaitTermination() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      latestSc(Long.MaxValue)
+      val docs = graft.Tables.documents(s, d)
+      val r = tenthReplay(s, "q128", docs, 3)
+      val sc = new graft.operators.Pipeline.ScorecardFold(s, d, docs, r.dir)
+      r.foldEach(sc.seeds: _*)(sc.step)
+      sc.latest(Long.MaxValue)
         .withColumn("keep_rate", round(col("n_train") / col("n_docs"), 4))
         .orderBy(col("source"))
     }),
 
+    // Q30 — watermark / late data: 2-batch ordered replay, append mode.
+    // Batch 1 is the events before [[QThirty.splitNanos]], batch 2 the
+    // rest including now-late rows, under a 1-hour watermark. Late rows
+    // whose window closed before watermark₁ are dropped, and windows past
+    // the final watermark never emit — both deterministic functions of
+    // the data, which the DuckDB oracle reproduces in SQL.
     "q30_stream_late" -> ((s, d) => {
-      val dir = Files.createTempDirectory("graft_q30")
       // Normalize ts FIRST (layout-adaptive), split on the micros instant,
       // and re-write the two batches with Spark — so the staged files are
       // always in Spark's own timestamp layout regardless of how the
       // driver generated the source table.
       val ev = graft.Tables.events(s, d)
       val split = timestamp_micros(lit(QThirty.splitNanos / 1000L))
-      writeReplayFolds(dir, ev,
-        when(col("ts") < split, lit(0)).otherwise(lit(1)), 2, "batch")
-
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString)
+      val stream = new Replay(s, "q30", ev,
+        when(col("ts") < split, lit(0)).otherwise(lit(1)), 2).stream()
       val agg = stream
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))

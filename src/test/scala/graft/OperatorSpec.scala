@@ -3244,6 +3244,31 @@ class OperatorSpec extends AnyFunSuite {
     val s1 = got.find(_.getString(0) == "s1").get
     assert(s1.getAs[Long]("n_canonical") === 1L,
       s"corpus rep must stay canonical: $s1")
+    // the batch twin (scVerChain, behind q128b and q171) ends on the same
+    // scorecard: its last ver equals the stream readout, keep_rate aside
+    val chain = operators.Pipeline.scVerChain(spark, dir, 3)._1
+    val last = chain.filter(col("ver") === 3L).drop("ver")
+      .orderBy(col("source")).collect()
+    assert(last.toSeq === got.map(r => org.apache.spark.sql.Row
+        .fromSeq(r.toSeq.dropRight(1))).toSeq,
+      "batch scorecard chain diverged from the q128 stream readout")
+  }
+
+  test("replay-fold runner: a fold that throws fails the call, restores " +
+      "the shuffle partitions and leaves no active stream") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(before !== streaming.StreamingQueries.StatePartitions)
+    val r = new streaming.StreamingQueries.Replay(spark, "failspec",
+      spark.range(10).toDF("doc_id"), col("doc_id") % 2, 2)
+    val e = intercept[Exception] {
+      r.foldEach()((_, _) =>
+        throw new IllegalStateException("planted fold failure"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("planted fold failure")), s"unexpected failure: $e")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("q129 incremental contamination: new-shingle delta adds exactly, indexed shingles add nothing") {
