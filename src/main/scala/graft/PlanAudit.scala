@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 /** Dev tool: dump the post-AQE physical plans of the headline queries.
   *
   * WARNING — do NOT redirect this over PLANS.md wholesale: since round 6
-  * PLANS.md accumulates 40+ hand-curated sections (PlanDump output with
+  * PLANS.md accumulates 40+ hand-curated sections (plan dumps with
   * per-round commentary) BEYOND this list; a regeneration from here
   * destroys them (it did once, restored from git in round 11). To add a
-  * section, run `PlanDump <sfDir> <query>` and append, or extend this
+  * section, run `Explain <sfDir> <query>` and append, or extend this
   * list and splice the new sections only. `runMain graft.PlanAudit
   * [sfDir]` writes target/plans_headline.md.
   */

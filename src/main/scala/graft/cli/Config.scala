@@ -68,7 +68,8 @@ object Config {
   }
 
   /** The reference's validate() rules (/root/reference/syslog.go:93-131):
-    * broker.list and topic required; avro requires a registry URL.
+    * broker.list and topic required; avro requires a registry URL. The
+    * producer pool and the source buffer must each be at least 1.
     */
   def validate(c: GraftConfig): Either[String, GraftConfig] =
     if (!Set("kafka", "parquet")(c.sinkFormat))
@@ -89,6 +90,10 @@ object Config {
     else if (c.pattern == "avro" && c.registryUrl.isEmpty)
       Left("schema.registry.url is required with --avro")
     else if (c.requiredAcks < -1) Left("required.acks must be >= -1")
+    else if (c.numProducers < 1)
+      Left(s"num.producers must be >= 1, got ${c.numProducers}")
+    else if (c.queueSize < 1)
+      Left(s"queue.size must be >= 1, got ${c.queueSize}")
     else Right(c)
 
   /** Kafka sink options (O14-O16): CLI flags → `writeStream` options.

@@ -33,17 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    scans a connection inside the accept loop, so one long-lived sender
   *    blocks all others (syslog_producer.go:138-143);
   *  - UDP datagrams are framed per-datagram (the reference wraps the UDP
-  *    socket in one bufio.Scanner, which can merge datagrams, SURVEY §3.3);
-  *  - acceptance fans out (option `listeners`, default 1): the buffer is
-  *    sharded into independently-locked segments — connections pin
-  *    round-robin, UDP readers multiply — and each segment is its own
-  *    offset lane surfacing as its own input partitions, removing the
-  *    single-buffer lock that capped e2e ingest at ~807k rows/s
-  *    (BASELINE.md round 11). The reference's single Go channel has the
-  *    same ceiling; at cluster scale this is N listener endpoints → N
-  *    source partitions.
+  *    socket in one bufio.Scanner, which can merge datagrams, SURVEY §3.3).
   *
-  * Delivery: the buffer is volatile memory, offsets are buffer indices;
+  * Like the reference's one `incoming` channel (syslog_producer.go:86-91,
+  * 177-183), every TCP and UDP line goes into one buffer. Delivery: the
+  * buffer is volatile memory, offsets are buffer indices;
   * replay is possible within the uncommitted window — and with a NAMED
   * receiver (`receiver.name`, [[SyslogReceivers]]) that window survives
   * query restarts in-process, so checkpoint recovery after an ungraceful
@@ -55,7 +49,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference's bounded-channel behavior.
   *
   * Options: tcp.port, udp.port (0 = disabled; -1 = ephemeral, for tests),
-  * tcp.host/udp.host, maxBufferedRows (total across segments), listeners.
+  * tcp.host/udp.host, maxBufferedRows.
   * `graft.sources.SyslogState` exposes bound ports for tests.
   */
 class SyslogSourceProvider extends TableProvider with DataSourceRegister {
@@ -95,16 +89,12 @@ class SyslogTable(options: CaseInsensitiveStringMap)
 /** One enqueued record: (line, receive-time epoch millis). */
 private[sources] final case class SyslogRecord(line: String, tsMillis: Long)
 
-/** Test hook: bound ports and drop counter of the most recently started
-  * stream (each stream owns its own counter — see
-  * [[SyslogMicroBatchStream.udpDropped]]; this object only surfaces the
-  * latest instance's, mirroring the port fields).
+/** Test hook: bound ports of the most recently started receiver (drops
+  * are counted per receiver, see [[SyslogMicroBatchStream.udpDropped]]).
   */
 object SyslogState {
   @volatile var lastTcpPort: Int = -1
   @volatile var lastUdpPort: Int = -1
-  @volatile var lastUdpDropped: java.util.concurrent.atomic.AtomicLong =
-    new java.util.concurrent.atomic.AtomicLong(0)
 }
 
 /** The socket listeners + line buffer, extracted from the stream so its
@@ -120,7 +110,7 @@ object SyslogState {
   * attached.
   */
 /** JVM-global registry for ZERO-COPY local transport: partitions carry a
-  * (receiverId, segment, range) reference instead of their rows, and the
+  * (receiverId, range) reference instead of their rows, and the
   * reader resolves the rows through this map at task start. In local
   * mode (the shipping shape) driver and executors share the JVM, so the
   * per-batch task binaries stop carrying the row payload — measured 2.6×
@@ -143,112 +133,70 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Exception => "localhost" }
 
-  private val maxBuffered = options.getInt("maxBufferedRows", 100000)
   private val readBufBytes = options.getInt("tcp.readBuffer", 1 << 16)
 
-  /** Acceptance fan-out (option `listeners`, default 1): the buffer is
-    * SHARDED into this many independently-locked segments. Each TCP
-    * connection is pinned round-robin to one segment (per-connection
-    * line order preserved — there was never a cross-connection order),
-    * and `listeners` UDP reader threads share the datagram socket, one
-    * segment each. Round 11 measured the single buffer's per-arrival
-    * lock as the e2e ingest ceiling (807k rows/s however many cores the
-    * query side had, BASELINE.md): with N segments, N senders contend on
-    * NOTHING, and each segment surfaces as its own offset lane → its own
-    * input partitions, so the micro-batch read side scales with the
-    * acceptance side. This is the local[32] image of the real scale-out
-    * (N listener endpoints / N receiver buffers → N source partitions).
+  /** Buffer capacity, at least 2 rows: the livelock guard in
+    * [[SyslogMicroBatchStream.latestOffset]] plans at most half the
+    * buffer, and a 1-row buffer would make "half" the whole buffer,
+    * re-opening the deferred-commit livelock the guard exists to close.
     */
-  private[sources] val numSegments = {
-    val requested = math.max(1, options.getInt("listeners", 1))
-    // Clamp the fan-out so the per-segment >=2-row livelock floor (see
-    // [[segments]]) can never push TOTAL buffered capacity past the
-    // configured maxBufferedRows: at most maxBuffered/2 lanes of 2 rows
-    // each. Without this, maxBufferedRows=8 with listeners=8 silently
-    // buffered up to 16 rows — the memory-cap contract the option
-    // documents would be weakened exactly when it is set tightest.
-    math.min(requested, math.max(1, maxBuffered / 2))
-  }
+  private[sources] val capacity: Int =
+    math.max(2, options.getInt("maxBufferedRows", 100000))
+  private val buffer = new ArrayBuffer[SyslogRecord]()
+  private var base = 0L // offset of buffer(0)
+  private val lock = new Object
 
-  /** One independently-locked buffer shard: offsets are LOCAL to the
-    * segment (the stream's offset is the vector of segment offsets).
+  /** Insert a batch of lines under ONE lock acquisition; returns how
+    * many were inserted. Per-line locking capped acceptance at ~285k
+    * lines/s with 8 senders (BASELINE.md round-4 measurement) — the
+    * lock, not the codec, was the ingest ceiling. Blocking mode waits
+    * for space and inserts in chunks (receive time stamped per chunk,
+    * after any wait, like the per-line path did); non-blocking mode
+    * (UDP) inserts what fits and reports the rest as dropped.
     */
-  private[sources] final class Segment(val maxRows: Int) {
-    private[SyslogReceiver] val buffer = new ArrayBuffer[SyslogRecord]()
-    private[SyslogReceiver] var base = 0L // offset of buffer(0)
-    private[SyslogReceiver] val lock = new Object
-
-    /** Insert a batch of lines under ONE lock acquisition; returns how
-      * many were inserted. Per-line locking capped acceptance at ~285k
-      * lines/s with 8 senders (BASELINE.md round-4 measurement) — the
-      * lock, not the codec, was the ingest ceiling. Blocking mode waits
-      * for space and inserts in chunks (receive time stamped per chunk,
-      * after any wait, like the per-line path did); non-blocking mode
-      * (UDP) inserts what fits and reports the rest as dropped.
-      */
-    def enqueueBatch(lines: scala.collection.IndexedSeq[String],
-        blockWhenFull: Boolean): Int =
-      lock.synchronized {
-        var inserted = 0
-        while (inserted < lines.length) {
-          if (buffer.size >= maxRows) {
-            // UDP drops the remainder; a closed receiver stops waiting
-            if (!blockWhenFull || closed) return inserted
-            lock.wait(100) // TCP: block the reader -> sender backpressure
-          } else {
-            val take = math.min(maxRows - buffer.size,
-              lines.length - inserted)
-            val ts = System.currentTimeMillis()
-            var i = 0
-            while (i < take) {
-              buffer += SyslogRecord(lines(inserted + i), ts)
-              i += 1
-            }
-            inserted += take
+  private def enqueueBatch(lines: scala.collection.IndexedSeq[String],
+      blockWhenFull: Boolean): Int =
+    lock.synchronized {
+      var inserted = 0
+      while (inserted < lines.length) {
+        if (buffer.size >= capacity) {
+          // UDP drops the remainder; a closed receiver stops waiting
+          if (!blockWhenFull || closed) return inserted
+          lock.wait(100) // TCP: block the reader -> sender backpressure
+        } else {
+          val take = math.min(capacity - buffer.size,
+            lines.length - inserted)
+          val ts = System.currentTimeMillis()
+          var i = 0
+          while (i < take) {
+            buffer += SyslogRecord(lines(inserted + i), ts)
+            i += 1
           }
+          inserted += take
         }
-        inserted
       }
-
-    /** Next offset to be assigned (base + buffered rows). */
-    def available: Long = lock.synchronized(base + buffer.size)
-
-    /** Rows [s, e) — still present for any uncommitted range. */
-    def slice(s: Long, e: Long): Array[SyslogRecord] = lock.synchronized {
-      val from = math.max(0L, s - base).toInt
-      val to = math.max(0L, e - base).toInt
-      buffer.slice(from, to).toArray
+      inserted
     }
 
-    /** Retention trim on commit: committed rows can never be replanned. */
-    def commitUpTo(e: Long): Unit = lock.synchronized {
-      val drop = math.max(0L, e - base).toInt
-      if (drop > 0) {
-        buffer.remove(0, math.min(drop, buffer.size))
-        base = math.max(base, e)
-        lock.notifyAll()
-      }
-    }
+  /** Next offset to be assigned (base + buffered rows). */
+  def nextOffset: Long = lock.synchronized(base + buffer.size)
+
+  /** Rows [s, e) — still present for any uncommitted range. */
+  def slice(s: Long, e: Long): Array[SyslogRecord] = lock.synchronized {
+    val from = math.max(0L, s - base).toInt
+    val to = math.max(0L, e - base).toInt
+    buffer.slice(from, to).toArray
   }
 
-  /** The shards; total capacity stays `maxBufferedRows` at any fan-out
-    * (the [[numSegments]] clamp guarantees maxBuffered/numSegments >= 2,
-    * so the >=2-row floor below never multiplies past the cap; the sole
-    * exception is maxBufferedRows < 2 itself, where the floor wins —
-    * a 1-row buffer cannot host the livelock guard at all). Each
-    * segment holds AT LEAST 2 rows: the per-lane livelock guard plans
-    * at most half a lane, and a 1-row lane makes "half" equal the whole
-    * lane (laneMax = max(1, 1/2) = 1 = capacity), re-opening the
-    * deferred-commit livelock the guard exists to close. Capacity >= 2
-    * keeps laneMax (= capacity/2) strictly below capacity.
-    */
-  private[sources] val segments: Array[Segment] =
-    Array.fill(numSegments)(new Segment(
-      math.max(2, maxBuffered / numSegments)))
-
-  private val rrConn = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def nextSegment(): Segment =
-    segments(Math.floorMod(rrConn.getAndIncrement(), numSegments))
+  /** Retention trim on commit: committed rows can never be replanned. */
+  def commitUpTo(e: Long): Unit = lock.synchronized {
+    val drop = math.max(0L, e - base).toInt
+    if (drop > 0) {
+      buffer.remove(0, math.min(drop, buffer.size))
+      base = math.max(base, e)
+      lock.notifyAll()
+    }
+  }
 
   /** Datagrams discarded because the buffer was full — the metric a
     * production deployment alerts on (TCP senders are blocked instead
@@ -256,7 +204,6 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     * not conflate their drop accounting.
     */
   val udpDropped = new java.util.concurrent.atomic.AtomicLong(0)
-  SyslogState.lastUdpDropped = udpDropped
 
   // --- listeners -----------------------------------------------------
   @volatile private var closed = false
@@ -275,8 +222,7 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
           val sock = tcpServer.accept()
           connections.add(sock)
           if (closed) sock.close() // accepted while close() was running
-          val seg = nextSegment() // pin the connection to one shard
-          val t = new Thread(() => serveTcp(sock, seg), "graft-syslog-conn")
+          val t = new Thread(() => serveTcp(sock), "graft-syslog-conn")
           t.setDaemon(true)
           t.start()
         } catch { case _: Exception => /* socket closed */ }
@@ -296,7 +242,7 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     * strip one trailing '\r', emit empty records for empty lines; a
     * partial line at a chunk boundary is carried into the next chunk.
     */
-  private def serveTcp(sock: Socket, seg: Segment): Unit = {
+  private def serveTcp(sock: Socket): Unit = {
     val in = sock.getInputStream
     val buf = new Array[Byte](readBufBytes)
     val batch = new ArrayBuffer[String](2048)
@@ -331,11 +277,11 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
           System.arraycopy(buf, start, rem, carry.length, n - start)
           carry = rem
         }
-        if (batch.nonEmpty) seg.enqueueBatch(batch, blockWhenFull = true)
+        if (batch.nonEmpty) enqueueBatch(batch, blockWhenFull = true)
         n = in.read(buf)
       }
       if (carry.length > 0) // unterminated final line at EOF, like ScanLines
-        seg.enqueueBatch(ArrayBuffer(lineOf(carry, 0, carry.length)),
+        enqueueBatch(ArrayBuffer(lineOf(carry, 0, carry.length)),
           blockWhenFull = true)
     } catch { case _: Exception => } finally {
       sock.close()
@@ -347,34 +293,28 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     udpSocket = new DatagramSocket(
       new InetSocketAddress(host, if (port == -1) 0 else port))
     SyslogState.lastUdpPort = udpSocket.getLocalPort
-    // `listeners` reader threads share the one socket (DatagramSocket
-    // dispatches each datagram to exactly one blocked receive()), each
-    // feeding its own segment — receive, decode, and enqueue all fan out
-    for (k <- 0 until numSegments) {
-      val seg = segments(k)
-      val t = new Thread(() => {
-        val buf = new Array[Byte](65536)
-        while (!closed) {
-          try {
-            val pkt = new DatagramPacket(buf, buf.length)
-            udpSocket.receive(pkt)
-            val text = new String(pkt.getData, pkt.getOffset, pkt.getLength,
-              StandardCharsets.UTF_8)
-            // per-datagram framing; split multi-line datagrams on '\n'
-            val lines = text.split("\n", -1).filter(_.nonEmpty)
-            if (lines.nonEmpty) {
-              val inserted = seg.enqueueBatch(
-                scala.collection.immutable.ArraySeq.unsafeWrapArray(lines),
-                blockWhenFull = false)
-              if (inserted < lines.length)
-                udpDropped.addAndGet(lines.length - inserted)
-            }
-          } catch { case _: Exception => }
-        }
-      }, s"graft-syslog-udp-$k")
-      t.setDaemon(true)
-      t.start()
-    }
+    val t = new Thread(() => {
+      val buf = new Array[Byte](65536)
+      while (!closed) {
+        try {
+          val pkt = new DatagramPacket(buf, buf.length)
+          udpSocket.receive(pkt)
+          val text = new String(pkt.getData, pkt.getOffset, pkt.getLength,
+            StandardCharsets.UTF_8)
+          // per-datagram framing; split multi-line datagrams on '\n'
+          val lines = text.split("\n", -1).filter(_.nonEmpty)
+          if (lines.nonEmpty) {
+            val inserted = enqueueBatch(
+              scala.collection.immutable.ArraySeq.unsafeWrapArray(lines),
+              blockWhenFull = false)
+            if (inserted < lines.length)
+              udpDropped.addAndGet(lines.length - inserted)
+          }
+        } catch { case _: Exception => }
+      }
+    }, "graft-syslog-udp")
+    t.setDaemon(true)
+    t.start()
   }
 
   locally {
@@ -395,23 +335,14 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     */
   def tcpPort: Int = if (tcpServer != null) tcpServer.getLocalPort else -1
 
-  /** Total buffer capacity across segments (admission headroom math). */
-  def totalCapacity: Long = segments.map(_.maxRows.toLong).sum
-
-  /** Per-segment next offsets (the stream's offset vector). */
-  def availableVec: Array[Long] = segments.map(_.available)
-
-  /** Total buffered-plus-committed rows across segments (tests). */
-  def available: Long = availableVec.sum
-
   def close(): Unit = {
     closed = true
     SyslogLocalTransport.receivers.remove(transportId)
     if (tcpServer != null) try tcpServer.close() catch { case _: Exception => }
     if (udpSocket != null) try udpSocket.close() catch { case _: Exception => }
-    // readers parked on a full segment see `closed` when woken; readers
+    // readers parked on a full buffer see `closed` when woken; readers
     // blocked in read() see their socket closed
-    segments.foreach(seg => seg.lock.synchronized(seg.lock.notifyAll()))
+    lock.synchronized(lock.notifyAll())
     connections.forEach(sock => try sock.close() catch { case _: Exception => })
   }
 }
@@ -466,36 +397,15 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
   val udpDropped: java.util.concurrent.atomic.AtomicLong = receiver.udpDropped
 
   // --- MicroBatchStream ----------------------------------------------
-  // The offset is a VECTOR of per-segment offsets (comma-joined JSON):
-  // each acceptance shard is its own independent offset lane, so the
-  // fan-out never needs a global sequence. With listeners=1 the wire
-  // format degenerates to the old single number, so existing
-  // checkpoints deserialize unchanged.
-  // Vector, NOT Array: the engine's new-data check compares Offset
-  // instances for equality, and a case class over an Array compares by
-  // REFERENCE — every fresh latestOffset() instance would read as "new
-  // data" and schedule an empty micro-batch per trigger. Vector gives
-  // element-wise equality.
-  private case class SyslogOffset(v: Vector[Long]) extends Offset {
-    override def json(): String = v.mkString(",")
+  // The offset is the buffer index, serialized as a bare number.
+  private case class SyslogOffset(v: Long) extends Offset {
+    override def json(): String = v.toString
   }
 
-  private val nSeg = receiver.numSegments
-
-  /** Pad/truncate a deserialized vector to the current segment count —
-    * an old checkpoint (or a restart with a different `listeners`) maps
-    * prefix-wise, extra lanes restart at 0 (at-most-once across JVM
-    * restarts is already the documented contract).
-    */
-  private def vecOf(parts: Vector[Long]): Vector[Long] =
-    if (parts.length == nSeg) parts
-    else parts.take(nSeg).padTo(nSeg, 0L)
-
-  override def initialOffset(): Offset = SyslogOffset(Vector.fill(nSeg)(0L))
+  override def initialOffset(): Offset = SyslogOffset(0L)
   override def deserializeOffset(json: String): Offset =
-    SyslogOffset(vecOf(json.trim.split(",").map(_.trim.toLong).toVector))
-  override def latestOffset(): Offset =
-    SyslogOffset(receiver.availableVec.toVector)
+    SyslogOffset(json.trim.toLong)
+  override def latestOffset(): Offset = SyslogOffset(receiver.nextOffset)
 
   // Admission control: cap rows per micro-batch (maxRowsPerBatch,
   // default 1M) so an ingest burst becomes a sequence of bounded
@@ -509,55 +419,29 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
     * batch of the run. Without this Spark falls back to one batch, and a
     * restart that replays an uncommitted batch stops after that batch.
     */
-  @volatile private var availableNowEnd: Option[Array[Long]] = None
+  @volatile private var availableNowEnd: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Some(receiver.availableVec)
+    availableNowEnd = Some(receiver.nextOffset)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = availableNowEnd.getOrElse(receiver.availableVec)
-    val s = vecOf(start.asInstanceOf[SyslogOffset].v)
-    val out = new Array[Long](nSeg)
+    val avail = availableNowEnd.getOrElse(receiver.nextOffset)
+    val s = start.asInstanceOf[SyslogOffset].v
     // Progress guarantee under the engine's DEFERRED source commit:
     // Spark calls commit(batch n) only when batch n+1 is constructed, and
-    // batch n+1 needs NEW offsets. A batch that plans an ENTIRE buffer
-    // lane while its senders are blocked on it therefore livelocks —
-    // no space frees until commit, no commit until new data, no new data
-    // until space frees (reproduced with maxRowsPerBatch >= buffer
-    // capacity; re-reproduced PER LANE when the first fix capped only
-    // the global total and the leftover pass could still drain one
-    // skewed lane completely — round-12 review). The cap is therefore
-    // PER LANE: a batch never plans more than half of any segment's
-    // capacity, so a full lane always keeps unplanned rows visible, the
-    // next trigger constructs, the deferred commit fires, and the lane
-    // trims.
-    var remaining = limit match {
+    // batch n+1 needs NEW offsets. A batch that plans the ENTIRE buffer
+    // while its senders are blocked on it therefore livelocks — no space
+    // frees until commit, no commit until new data, no new data until
+    // space frees (reproduced with maxRowsPerBatch >= buffer capacity).
+    // A batch therefore never plans more than half the buffer's
+    // capacity, so a full buffer always keeps unplanned rows visible,
+    // the next trigger constructs, the deferred commit fires, and the
+    // buffer trims.
+    val maxRows = limit match {
       case mr: ReadMaxRows => mr.maxRows()
       case _ => Long.MaxValue
     }
-    val laneMax = Array.tabulate(nSeg)(i =>
-      math.max(1L, receiver.segments(i).maxRows / 2))
-    // FAIR allocation: an equal per-lane quota first, then leftovers —
-    // a purely greedy scan starved the tail lanes whenever the cap
-    // bound (measured 9× e2e collapse at listeners=4), and starved
-    // lanes also defer THEIR buffer trims, compounding the stall.
-    val quota = math.max(1L, remaining / nSeg)
-    var i = 0
-    while (i < nSeg) {
-      val take = Seq(math.max(0L, avail(i) - s(i)), quota, laneMax(i),
-        remaining).min
-      out(i) = s(i) + take
-      remaining -= take
-      i += 1
-    }
-    i = 0
-    while (i < nSeg && remaining > 0) { // second pass: leftovers
-      val take = Seq(math.max(0L, avail(i) - out(i)),
-        laneMax(i) - (out(i) - s(i)), remaining).min
-      out(i) += math.max(0L, take)
-      remaining -= math.max(0L, take)
-      i += 1
-    }
-    SyslogOffset(out.toVector)
+    SyslogOffset(s + Seq(math.max(0L, avail - s),
+      receiver.capacity / 2L, maxRows).min)
   }
 
   /** Zero-copy range-reference transport requires the receiver and the
@@ -572,27 +456,20 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
       .sparkContext.isLocal).getOrElse(true))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = vecOf(start.asInstanceOf[SyslogOffset].v)
-    val e = vecOf(end.asInstanceOf[SyslogOffset].v)
-    // Per segment: slice its own lane, then chunk — one partition per
-    // micro-batch would serialize the whole transform/encode/write
-    // pipeline onto a single core; 64k chunks let a large batch use
-    // every core of the stage, and the per-segment split means the read
-    // side scales with the acceptance fan-out. With local transport
+    val s = start.asInstanceOf[SyslogOffset].v
+    val e = end.asInstanceOf[SyslogOffset].v
+    // One partition per micro-batch would serialize the whole
+    // transform/encode/write pipeline onto a single core; 64k chunks let
+    // a large batch use every core of the stage. With local transport
     // (default) the partition is a RANGE REFERENCE — the rows never ride
     // the task binary (see [[SyslogLocalTransport]]).
-    if (localTransport) {
-      (0 until nSeg).iterator.flatMap { i =>
-        (s(i) until e(i) by 65536L).map { o =>
-          SyslogLocalPartition(receiver.transportId, i, o,
-            math.min(o + 65536L, e(i)), receiver.hostname)
-        }
+    if (localTransport)
+      (s until e by 65536L).map { o =>
+        SyslogLocalPartition(receiver.transportId, o,
+          math.min(o + 65536L, e), receiver.hostname): InputPartition
       }.toArray
-    } else (0 until nSeg).iterator.flatMap { i =>
-      val rows = receiver.segments(i).slice(s(i), e(i))
-      if (rows.isEmpty) Iterator.empty
-      else rows.grouped(65536).map(SyslogPartition(_, receiver.hostname))
-    }.toArray
+    else receiver.slice(s, e).grouped(65536)
+      .map(SyslogPartition(_, receiver.hostname): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -604,7 +481,7 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
             "graft-syslog local.transport=true requires the receiver and " +
               "executors to share one JVM (local mode); on a cluster set " +
               "local.transport=false")
-          (recv.segments(lp.seg).slice(lp.from, lp.until), lp.hostname)
+          (recv.slice(lp.from, lp.until), lp.hostname)
         case p: SyslogPartition => (p.rows, p.hostname)
       }
       new PartitionReader[InternalRow] {
@@ -620,11 +497,8 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
       }
     }
 
-  override def commit(end: Offset): Unit = {
-    val e = vecOf(end.asInstanceOf[SyslogOffset].v)
-    var i = 0
-    while (i < nSeg) { receiver.segments(i).commitUpTo(e(i)); i += 1 }
-  }
+  override def commit(end: Offset): Unit =
+    receiver.commitUpTo(end.asInstanceOf[SyslogOffset].v)
 
   override def stop(): Unit =
     // a NAMED receiver outlives the query (checkpoint recovery replays
@@ -642,5 +516,5 @@ private[sources] final case class SyslogPartition(
   * task start — the task binary carries ~100 bytes, not the rows.
   */
 private[sources] final case class SyslogLocalPartition(
-  recvId: String, seg: Int, from: Long, until: Long,
-  hostname: String) extends InputPartition
+  recvId: String, from: Long, until: Long, hostname: String)
+  extends InputPartition

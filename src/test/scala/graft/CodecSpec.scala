@@ -180,6 +180,14 @@ class CodecSpec extends AnyFunSuite {
     assert(parsed.map(_.tags) === Right(Seq("dc" -> "dc1", "env" -> "test")))
     assert(parsed.map(_.logTypeId) === Right(Some(7L)))
     assert(parsed.flatMap(Config.validate).isRight)
+    // the producer pool and the source buffer need at least one slot
+    assert(Config.validate(ok.copy(numProducers = 0)) ===
+      Left("num.producers must be >= 1, got 0"))
+    assert(Config.validate(ok.copy(queueSize = 0)) ===
+      Left("queue.size must be >= 1, got 0"))
+    assert(Config.validate(ok.copy(queueSize = -5)) ===
+      Left("queue.size must be >= 1, got -5"))
+    assert(Config.validate(ok.copy(numProducers = 1, queueSize = 1)).isRight)
   }
 
   test("CLI validate: parquet sink + landing partition knob") {

@@ -24,7 +24,7 @@ class CompactSpec extends AnyFunSuite {
     } :+ ("boundary".getBytes("UTF-8"), baseMs + hourMs) // lands in hour 1
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
+    TestSpark.tempDir(name).toString
 
   test("compaction partitions by hour, one task's files per hour, no rows lost") {
     val landing = tmp("graft_landing")

@@ -19,7 +19,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   private def fixture(): (java.nio.file.Path, LocalCheckpointFileManager) = {
-    val dir = Files.createTempDirectory("graft_lcfm")
+    val dir = TestSpark.tempDir("graft_lcfm")
     (dir, new LocalCheckpointFileManager(new Path(dir.toUri), conf))
   }
 

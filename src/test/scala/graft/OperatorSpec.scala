@@ -205,7 +205,7 @@ class OperatorSpec extends AnyFunSuite {
     // This pins the DIRECTION of the statistic (a quality filter that
     // ranked common text as surprising would pass any hash oracle built
     // from its own definition).
-    val dir = java.nio.file.Files.createTempDirectory("graft_q169").toString
+    val dir = TestSpark.tempDir("graft_q169").toString
     ((1 to 99).map(i => (i.toLong, "the cat")) :+ (100L, "the zebra"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))
@@ -226,7 +226,7 @@ class OperatorSpec extends AnyFunSuite {
     // corpus (doc_id % 10 != 0): nine 'the cat' docs train the LM.
     // batch doc 10 'the zebra' hits an UNSEEN transition -> the OOV cap
     // and n_oov = 1; batch doc 20 'the cat' scores the seen 9/9 ratio.
-    val dir = java.nio.file.Files.createTempDirectory("graft_q169b").toString
+    val dir = TestSpark.tempDir("graft_q169b").toString
     ((1 to 9).map(i => (i.toLong, "the cat")) ++
       Seq((10L, "the zebra"), (20L, "the cat")))
       .toDF("doc_id", "text")
@@ -257,7 +257,7 @@ class OperatorSpec extends AnyFunSuite {
     // with n_oov = 0 (the fold CLOSED the OOV q169b reports), doc 20
     // scores round(11/10 * 1e4) = 11000. Exactly the from-scratch LM
     // over corpus ∪ batch.
-    val dir = java.nio.file.Files.createTempDirectory("graft_q169d").toString
+    val dir = TestSpark.tempDir("graft_q169d").toString
     ((1 to 9).map(i => (i.toLong, "the cat")) ++
       Seq((10L, "the zebra"), (20L, "the cat")))
       .toDF("doc_id", "text")
@@ -292,7 +292,7 @@ class OperatorSpec extends AnyFunSuite {
     // planted exactness: corpus = 6x 'the cat' (ids 1-6) + 2x 'the dog'
     // (7, 8); id 3 is tombstoned (3 % 11 == 3). Batch doc 20 'the cat':
     // before cp/cb = 8/6 -> 13333; after the group inverse 7/5 -> 14000.
-    val dir = java.nio.file.Files.createTempDirectory("graft_q169c").toString
+    val dir = TestSpark.tempDir("graft_q169c").toString
     ((1 to 6).map(i => (i.toLong, "the cat")) ++
       Seq((7L, "the dog"), (8L, "the dog"), (20L, "the cat")))
       .toDF("doc_id", "text")
@@ -1028,7 +1028,7 @@ class OperatorSpec extends AnyFunSuite {
     // on a synthetic corpus: single-token, two-token, all-identical, and
     // a marker-free doc.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val dir = TestSpark.tempDir("graft_edge").toString
     Seq(
       (0L, "x", "en", "src0", 1L),
       (1L, "a b", "en", "src0", 3L),
@@ -1075,7 +1075,7 @@ class OperatorSpec extends AnyFunSuite {
     // naive single-window reference.
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val dir = java.nio.file.Files.createTempDirectory("graft_giant").toString
+    val dir = TestSpark.tempDir("graft_giant").toString
     val docs = (0L until 20000L).map { i =>
       val n = (10 + i % 10).toInt // 10..19 tokens, deterministic
       val words = (0 until n).map(j => s"w${(i * 7 + j * 13) % 50}")
@@ -1231,7 +1231,7 @@ class OperatorSpec extends AnyFunSuite {
         m <- 0 until 1200
       } yield (j * 10000L + m,
         c.map(x => (x + sigma * rnd.nextGaussian()).toFloat), j)
-      val dir = java.nio.file.Files.createTempDirectory("graft_q36b").toString
+      val dir = TestSpark.tempDir("graft_q36b").toString
       rows.toDF("vec_id", "embedding", "label")
         .write.parquet(s"$dir/embeddings.parquet")
       val nLeaves = operators.Similarity.cellsArtifact(spark, dir)
@@ -1247,7 +1247,7 @@ class OperatorSpec extends AnyFunSuite {
     val urows = (0 until 20000).map { i =>
       (i.toLong, Seq.fill(dim)((rnd.nextDouble() * 2 - 1).toFloat), i % 10)
     }
-    val udir = java.nio.file.Files.createTempDirectory("graft_q36bu").toString
+    val udir = TestSpark.tempDir("graft_q36bu").toString
     urows.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$udir/embeddings.parquet")
     val (ru, ru36) = recallOn(udir)
@@ -1299,7 +1299,7 @@ class OperatorSpec extends AnyFunSuite {
       m <- 0 until 1200
     } yield (j * 10000L + m,
       c.map(x => (x + 0.25 * rnd.nextGaussian()).toFloat), j)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q36c").toString
+    val dir = TestSpark.tempDir("graft_q36c").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")
     val cCurve = curveOf(dir)
@@ -1393,7 +1393,7 @@ class OperatorSpec extends AnyFunSuite {
       m <- 0 until 800
     } yield (j * 10000L + m,
       c.map(x => (x + 0.25 * rnd.nextGaussian()).toFloat))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q90d").toString
+    val dir = TestSpark.tempDir("graft_q90d").toString
     rows.toDF("vec_id", "embedding")
       .write.parquet(s"$dir/embeddings.parquet")
     val grid = Similarity.q90dCurveArtifact(spark, dir)
@@ -1434,7 +1434,7 @@ class OperatorSpec extends AnyFunSuite {
         (c, j) <- centroids.zipWithIndex
         m <- 0 until 120
       } yield (j * 1000L + m, noisy(c), j)
-      val dir = java.nio.file.Files.createTempDirectory("graft_clus").toString
+      val dir = TestSpark.tempDir("graft_clus").toString
       rows.toDF("vec_id", "embedding", "label")
         .write.parquet(s"$dir/embeddings.parquet")
       // exact top-10 recomputed from the stored floats (same values Spark
@@ -1493,7 +1493,7 @@ class OperatorSpec extends AnyFunSuite {
     // specific — the operator must drop them on both the corpus and the
     // query side (mirrored in the oracle's nrm > 0 filter)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_zvec").toString
+    val dir = TestSpark.tempDir("graft_zvec").toString
     def vec(seed: Int): Array[Float] =
       (1 to 64).map(i => (((seed * 31 + i) % 7) - 3).toFloat).toArray
     Seq(
@@ -1653,8 +1653,8 @@ class OperatorSpec extends AnyFunSuite {
       val pairDf = pairs.toDF("doc_a", "doc_b")
       val (got, gotReps) =
         operators.Dedup.incrementalSubLabels(oldDf, pairDf)
-      val trail = Option.when(trailed)(java.nio.file.Files
-        .createTempDirectory("graft_cc_ref").resolve("cc").toString)
+      val trail = Option.when(trailed)(
+        TestSpark.tempDir("graft_cc_ref").resolve("cc").toString)
       val want = referenceSubLabels(oldDf, pairDf, trail)
       if (trailed) assert(got.schema.map(f => f.name -> f.dataType) ===
         want.schema.map(f => f.name -> f.dataType), what)
@@ -1918,7 +1918,7 @@ class OperatorSpec extends AnyFunSuite {
     // verbatim pair duplicates every window, and interval-union coverage
     // is the run length / the whole doc respectively.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spans").toString
+    val dir = TestSpark.tempDir("graft_spans").toString
     val run = (10 until 30).map(i => s"a$i")
     val doc0 = ((0 until 10).map(i => s"a$i") ++ run ++
       (30 until 40).map(i => s"a$i")).mkString(" ")
@@ -1978,7 +1978,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(expected.exists(_._3 > 0), "generator must plant dup windows")
     assert(expected.exists(e => e._3 > 0 && e._3 < e._2),
       "generator must produce partially-duplicated docs")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rnd91").toString
+    val dir = TestSpark.tempDir("graft_rnd91").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -1996,7 +1996,7 @@ class OperatorSpec extends AnyFunSuite {
     // 25 tokens). doc 2 repeats a 20-token run TWICE within itself but
     // nowhere else — within-doc repeats are out of contract, untouched.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_strip").toString
+    val dir = TestSpark.tempDir("graft_strip").toString
     val run = (0 until 25).map(i => s"s$i")
     val doc0 = ((0 until 11).map(i => s"a$i") ++ run ++
       (0 until 9).map(i => s"b$i")).mkString(" ")
@@ -2069,7 +2069,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(expected.exists(_._3 > 0), "generator must plant strips")
     assert(expected.exists(e => e._3 > 0 && e._3 < e._2),
       "generator must produce partially-stripped docs")
-    val dir = java.nio.file.Files.createTempDirectory("graft_rnd133").toString
+    val dir = TestSpark.tempDir("graft_rnd133").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -2089,7 +2089,7 @@ class OperatorSpec extends AnyFunSuite {
     // serves verbatim from the base.
     import spark.implicits._
     import operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_q135").toString
+    val dir = TestSpark.tempDir("graft_q135").toString
     val runR = (0 until 25).map(i => s"r$i")
     val runS = (0 until 25).map(i => s"s$i")
     val mk = Seq(
@@ -2150,7 +2150,7 @@ class OperatorSpec extends AnyFunSuite {
         } else base
       (id, withRun.mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_rnd135").toString
+    val dir = TestSpark.tempDir("graft_rnd135").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -2171,7 +2171,7 @@ class OperatorSpec extends AnyFunSuite {
     // fold 0 — must be recomputed in fold 2 with a newer ver that strips
     // Y: the override chain, not a lucky in-fold recompute.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q136").toString
+    val dir = TestSpark.tempDir("graft_q136").toString
     val runX = (0 until 25).map(i => s"x$i")
     val runY = (0 until 25).map(i => s"y$i")
     val mk = Seq(
@@ -2248,7 +2248,7 @@ class OperatorSpec extends AnyFunSuite {
     val docA = trainIds(0) -> doc("aa", run) // contaminated train doc
     val docC = trainIds(1) -> doc("cc", Nil) // clean train doc
     val docE = evalIds(0) -> doc("ee", run)  // eval doc carrying the run
-    val dir = java.nio.file.Files.createTempDirectory("graft_q94").toString
+    val dir = TestSpark.tempDir("graft_q94").toString
     Seq(docA, docC, docE).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -2332,7 +2332,7 @@ class OperatorSpec extends AnyFunSuite {
     val big = (0 until 40).map(i => s"w$i").mkString(" ")
     val small = (5 until 25).map(i => s"w$i").mkString(" ") // 20 of 40 tokens
     val other = (100 until 130).map(i => s"x$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q96").toString
+    val dir = TestSpark.tempDir("graft_q96").toString
     Seq((0L, big), (1L, small), (2L, other)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -2834,7 +2834,7 @@ class OperatorSpec extends AnyFunSuite {
     // are verbatim copies -> every segment boiler, empty reassembly;
     // doc 5's 3-token tail is kept verbatim and never df-counted.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_segdd").toString
+    val dir = TestSpark.tempDir("graft_segdd").toString
     val seg = (0 until 10).map(i => s"s$i")
     val ua = (0 until 10).map(i => s"ua$i")
     val ub = (0 until 10).map(i => s"ub$i")
@@ -2878,7 +2878,7 @@ class OperatorSpec extends AnyFunSuite {
       rnd.shuffle(junk +: blocks).flatten
     }
     val docs = (0 until 40).map(i => (i.toLong, mkDoc()))
-    val dir = java.nio.file.Files.createTempDirectory("graft_segrnd").toString
+    val dir = TestSpark.tempDir("graft_segrnd").toString
     docs.map { case (id, t) => (id, t.mkString(" ")) }
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
@@ -2913,7 +2913,7 @@ class OperatorSpec extends AnyFunSuite {
     // coarse cell, probed -> the audit must certify full recall
     val near = (0L to 11L).map(i => (i, v, 0))
     val far = (20L until 50L).map(i => (i, v.map(x => -x), 1))
-    val dirA = java.nio.file.Files.createTempDirectory("graft_rec1").toString
+    val dirA = TestSpark.tempDir("graft_rec1").toString
     (near ++ far).toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dirA/embeddings.parquet")
     val a = SparkEntry.queries("q112_ann_recall_audit")(spark, dirA)
@@ -2929,7 +2929,7 @@ class OperatorSpec extends AnyFunSuite {
     val junk = (20L until 36L).map { i =>
       (i, v.take(8) ++ v.drop(8).map(x => -x), 1)
     }
-    val dirB = java.nio.file.Files.createTempDirectory("graft_rec0").toString
+    val dirB = TestSpark.tempDir("graft_rec0").toString
     (Seq((0L, v.toSeq, 0)) ++ hidden ++
         junk.map { case (i, e, l) => (i, e.toSeq, l) })
       .toDF("vec_id", "embedding", "label")
@@ -2987,7 +2987,7 @@ class OperatorSpec extends AnyFunSuite {
     val junk = (20L until 36L).map { i =>
       (i, v.take(8) ++ v.drop(8).map(x => -x), 1)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_sweep").toString
+    val dir = TestSpark.tempDir("graft_sweep").toString
     (Seq((0L, v.toSeq, 0)) ++ hidden ++
         junk.map { case (i, e, l) => (i, e.toSeq, l) })
       .toDF("vec_id", "embedding", "label")
@@ -3008,7 +3008,7 @@ class OperatorSpec extends AnyFunSuite {
       (i.toLong, Seq.fill(3 + rnd.nextInt(40))(s"w${rnd.nextInt(12)}")
         .mkString(" "))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_curr").toString
+    val dir = TestSpark.tempDir("graft_curr").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -3032,7 +3032,7 @@ class OperatorSpec extends AnyFunSuite {
   test("q115 fingerprint is order-insensitive and change-sensitive") {
     import spark.implicits._
     def write(docs: Seq[(Long, String)], parts: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_mani").toString
+      val dir = TestSpark.tempDir("graft_mani").toString
       docs.toDF("doc_id", "text").repartition(parts)
         .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -3073,7 +3073,7 @@ class OperatorSpec extends AnyFunSuite {
     // manifest over the union (true incrementality, not one big batch)
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
-    val src = java.nio.file.Files.createTempDirectory("graft_smani").toString
+    val src = TestSpark.tempDir("graft_smani").toString
     val batches = Seq(0, 1, 2).map { b =>
       (0 until 20).map(i =>
         (b * 100L + i, s"body b$b d$i token${b}x$i", s"src${i % 3}"))
@@ -3106,7 +3106,7 @@ class OperatorSpec extends AnyFunSuite {
 
   test("q113 chunk geometry: counts, boundaries, and tail lengths") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val dir = TestSpark.tempDir("graft_chunk").toString
     def doc(n: Int) = (0 until n).map(i => s"w$i").mkString(" ")
     // n = 1 / 48 / 64 -> one chunk; 65 -> 64 + 17-token tail (the 17th
     // new token forces the second chunk); 112 -> exactly two full
@@ -3147,7 +3147,7 @@ class OperatorSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, s"$S $f1"), (2L, other), // corpus
       (10L, s"$S $f2")) // batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_q125").toString
+    val dir = TestSpark.tempDir("graft_q125").toString
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val w0 = Dedup.q125DfWrites.get()
     val got = SparkEntry.queries("q125_incremental_boiler")(spark, dir)
@@ -3191,7 +3191,7 @@ class OperatorSpec extends AnyFunSuite {
       (11L, s"$r $bt"), (12L, s"$r $bt"), // corpus cluster {11,12}
       (10L, s"$r $xt"), // fold 1 ((10 div 10) % 3 == 1): singleton
       (20L, s"$r $xt $bt")) // fold 2: the bridge
-    val dir = java.nio.file.Files.createTempDirectory("graft_q124b").toString
+    val dir = TestSpark.tempDir("graft_q124b").toString
     docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q124_stream_incremental_labels")(spark, dir)
       .as[(Long, Long, Long)].collect().toList
@@ -3222,7 +3222,7 @@ class OperatorSpec extends AnyFunSuite {
     val r = ("the" +: (2 to 31).map(i => s"r$i")).mkString(" ")
     val xt = (1 to 10).map(i => s"x$i").mkString(" ")
     val bt = (1 to 10).map(i => s"b$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q128b").toString
+    val dir = TestSpark.tempDir("graft_q128b").toString
     Seq((11L, s"$r $bt", "s1"), (12L, s"$r $bt", "s1"),
       (40L, s"$r $xt", "s2"), (20L, s"$r $xt $bt", "s3"))
       .toDF("doc_id", "text", "source")
@@ -3287,7 +3287,7 @@ class OperatorSpec extends AnyFunSuite {
     val dd = (1 to 5).map(i => s"d$i").mkString(" ")
     val q = (1 to 5).map(i => s"q$i").mkString(" ")
     val a5 = (1 to 5).map(i => s"a$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q129").toString
+    val dir = TestSpark.tempDir("graft_q129").toString
     Seq(
       (1L, a, "s1"),              // corpus train: a-run indexed
       (8L, s"$a5 $x $b", "s1"),   // test: 11 shingles, base n_shared 1

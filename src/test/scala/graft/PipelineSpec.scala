@@ -96,7 +96,7 @@ class PipelineSpec extends AnyFunSuite {
     // isolated tier copy — compaction REWRITES the staged tables, which
     // would race any parallel suite reading the shared tier's q122
     // artifacts (the q118 lesson)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q122c").toString
+    val dir = TestSpark.tempDir("graft_q122c").toString
     spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
       .write.parquet(s"$dir/embeddings.parquet")
     val before = Similarity.queries("q122_incremental_pq_codes")(spark, dir)
@@ -118,7 +118,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("q122 compaction crash: rename-committed-but-delta-stale rolls forward, never double-counts") {
     import operators.{Bucketed, Similarity}
-    val dir = java.nio.file.Files.createTempDirectory("graft_q122r").toString
+    val dir = TestSpark.tempDir("graft_q122r").toString
     spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
       .write.parquet(s"$dir/embeddings.parquet")
     val before = Similarity.queries("q122_incremental_pq_codes")(spark, dir)
@@ -166,7 +166,7 @@ class PipelineSpec extends AnyFunSuite {
     val qb = (common ++ (31 to 40).map(i => s"v$i")).mkString(" ")
     val bridge = s"$qa $qb"
     val filler = (1 to 9).map(i => s"z$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q126").toString
+    val dir = TestSpark.tempDir("graft_q126").toString
     Seq((1L, qa, "s1"), (11L, qa, "s1"), (3L, qb, "s2"), (13L, qb, "s2"),
       (7L, filler, "s3"), (20L, bridge, "s3"))
       .toDF("doc_id", "text", "source")
@@ -253,7 +253,7 @@ class PipelineSpec extends AnyFunSuite {
     val r = (1 to 31).map(i => s"r$i").mkString(" ")
     val xt = (1 to 10).map(i => s"x$i").mkString(" ")
     val bt = (1 to 10).map(i => s"b$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q130").toString
+    val dir = TestSpark.tempDir("graft_q130").toString
     Seq((11L, s"$r $bt"), (12L, s"$r $bt"),
       (40L, s"$r $xt"), (30L, s"$r $xt $bt"))
       .toDF("doc_id", "text")
@@ -375,7 +375,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("FS lease: orphaned lease is taken over; live compaction cleans its lease up") {
     import operators.{Bucketed, Similarity}
-    val dir = java.nio.file.Files.createTempDirectory("graft_lease").toString
+    val dir = TestSpark.tempDir("graft_lease").toString
     spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
       .write.parquet(s"$dir/embeddings.parquet")
     val before = Similarity.queries("q122_incremental_pq_codes")(spark, dir)
@@ -409,7 +409,7 @@ class PipelineSpec extends AnyFunSuite {
     // 18 corpus docs + 6 batch docs (3 folds x 2), all 10 distinct tokens
     // -> 8 shingles -> 5 prefix rows each: base 90, delta +10/fold, so the
     // 25% posting threshold is crossed exactly at fold 3 (11% -> 22% -> 33%)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q131").toString
+    val dir = TestSpark.tempDir("graft_q131").toString
     val ids = ((1 to 9) ++ (11 to 19)).map(_.toLong) ++
       (1 to 6).map(i => i * 10L)
     ids.map(i => (i, (1 to 10).map(j => s"d${i}_w$j").mkString(" ")))
@@ -524,7 +524,7 @@ class PipelineSpec extends AnyFunSuite {
     // files, which would invalidate any concurrently-running suite
     // reading the shared-tier artifact (suites run in parallel; q118's
     // funnel read raced exactly this rewrite before the isolation).
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    val dir = TestSpark.tempDir("graft_memo").toString
     spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .write.parquet(s"$dir/documents.parquet")
     // run once in the base session so its memo is warm

@@ -301,7 +301,7 @@ class PlanSpec extends AnyFunSuite {
   test("partitioned writes get static + dynamic partition pruning") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = TestSpark.tempDir("graft_dpp").toString
     Tables.lineitem(spark, sf)
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(dir)
     val fact = spark.read.parquet(dir)
@@ -319,7 +319,7 @@ class PlanSpec extends AnyFunSuite {
     // them, decided at run time from the dim side. The dim is read from
     // parquet so Catalyst cannot constant-fold the filter into a static
     // partition predicate (a literal dim folds — see the assert above).
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dimDir = TestSpark.tempDir("graft_dim").toString
     Seq(("R", 1), ("A", 0), ("N", 0)).toDF("flag", "keep")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter(col("keep") === 1)
@@ -375,8 +375,7 @@ class PlanSpec extends AnyFunSuite {
     // never opened), not in PushedFilters/post-scan Filter.
     import operators.Similarity
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_parts").toString
+    val dir = TestSpark.tempDir("graft_ivf_parts").toString
     Tables.embeddings(spark, sf)
       .withColumn("cell",
         Similarity.cellOf(col("embedding").cast("array<double>")))

@@ -140,7 +140,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
       (1L, "hash join", "s", 10L),
       (2L, "hash join " + (1 to 50).map(i => s"pad$i").mkString(" "), "s", 300L))
       .toDF("doc_id", "text", "source", "n_chars")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bm25b").toString
+    val dir2 = TestSpark.tempDir("graft_bm25b").toString
     docs2.withColumn("lang", lit("en"))
       .select("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir2/documents.parquet")
@@ -294,7 +294,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     val bridge = s"$qa $qb"
     val quad = (1 to 40).map(i => s"t$i").mkString(" ")
     val dup = (1 to 40).map(i => s"u$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q156s").toString
+    val dir = TestSpark.tempDir("graft_q156s").toString
     Seq((1L, qa), (25L, bridge), (30L, qb),
       (3L, quad), (14L, quad), (40L, quad), (51L, quad),
       (7L, dup), (18L, dup))
@@ -329,7 +329,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     // doc 1: phrase 1 twice (incl. back-to-back overlap-free), phrase 5
     // once spanning tokens 3-5; doc 2: near-miss (terms present, never
     // consecutive) must NOT match
-    val dir = java.nio.file.Files.createTempDirectory("graft_q161").toString
+    val dir = TestSpark.tempDir("graft_q161").toString
     Seq(
       (1L, "table hash x table hash slow hash batch"),
       (2L, "table x hash slow y hash z batch"))
@@ -367,7 +367,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     // dist-1 pair, but the capped index keeps only hash positions 0-7,
     // min distance 12 > ProxK -> doc 1 must VANISH from q165c. doc 2:
     // 'hash join' sits inside the cap and must match in both.
-    val dir = java.nio.file.Files.createTempDirectory("graft_q165c").toString
+    val dir = TestSpark.tempDir("graft_q165c").toString
     Seq(
       (1L, (1 to 19).map(_ => "hash").mkString(" ") + " join"),
       (2L, "hash join"))
@@ -443,7 +443,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
   test("q161e compaction: serve invariant at every state, stores truncated, double-compact idempotent") {
     // own-tier copy: the compaction mutates its staged tables and the
     // registered-query run on the shared tier must not see half-states
-    val dir = java.nio.file.Files.createTempDirectory("graft_q161e")
+    val dir = TestSpark.tempDir("graft_q161e")
       .toString
     spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .write.parquet(s"$dir/documents.parquet")
@@ -530,7 +530,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     val r = (1 to 20).map(i => s"r$i").mkString(" ")
     val q = (1 to 20).map(i => s"q$i").mkString(" ")
     val s0 = (1 to 20).map(i => s"s$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_q163").toString
+    val dir = TestSpark.tempDir("graft_q163").toString
     Seq(doc(3L, r), doc(5L, r),
       doc(14L, q), doc(15L, q), doc(16L, q),
       doc(1L, s0), doc(2L, s0))
@@ -552,7 +552,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
       "untouched run S must carry verbatim")
     // and the whole output equals the from-scratch strip over survivors
     // (q133 replayed on a survivor-only tier copy)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_q163b").toString
+    val dir2 = TestSpark.tempDir("graft_q163b").toString
     Tables.documents(spark, dir)
       .filter(pmod(col("doc_id"), lit(11L)) =!= 3L)
       .write.parquet(s"$dir2/documents.parquet")
@@ -603,7 +603,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
   // ---- q155 ANN tombstones --------------------------------------------------
 
   private def embTier(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q155").toString
+    val dir = TestSpark.tempDir("graft_q155").toString
     spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
       .write.parquet(s"$dir/embeddings.parquet")
     dir

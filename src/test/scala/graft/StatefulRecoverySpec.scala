@@ -23,8 +23,8 @@ class StatefulRecoverySpec extends AnyFunSuite {
 
   test("GroupState survives a checkpointed restart (RocksDB restore)") {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft_st_src").toString
-    val ckpt = Files.createTempDirectory("graft_st_ckpt").toString
+    val src = TestSpark.tempDir("graft_st_src").toString
+    val ckpt = TestSpark.tempDir("graft_st_ckpt").toString
 
     def stage(part: Int, perKey: Int): Unit =
       (1L to 10L).flatMap(k => (1 to perKey).map(i => (k, part * 1000L + i)))
@@ -136,12 +136,12 @@ class StatefulRecoverySpec extends AnyFunSuite {
     }
 
     // uninterrupted reference run
-    val ckptA = Files.createTempDirectory("graft_rec_a").toString
+    val ckptA = TestSpark.tempDir("graft_rec_a").toString
     val (nA, tA) = drainComplete("rec_q29_ref", ckptA, killAfterBatches = 0)
     assert(nA > 500000L, s"expected ~950k session rows at sf~1, got $nA")
 
     // killed run + resume from the same checkpoint
-    val ckptB = Files.createTempDirectory("graft_rec_b").toString
+    val ckptB = TestSpark.tempDir("graft_rec_b").toString
     val (_, tKill) = drainComplete("rec_q29_killed", ckptB, killAfterBatches = 2)
     val t1 = System.nanoTime()
     val (nB, tResume) = drainComplete("rec_q29_resumed", ckptB,
@@ -168,7 +168,7 @@ class StatefulRecoverySpec extends AnyFunSuite {
     val want = full.as[(Long, Long)].collect().toSet
     assert(fullRounds > 3, s"fixture must need >3 rounds, took $fullRounds")
 
-    val dir = Files.createTempDirectory("graft_cc_prog").toString
+    val dir = TestSpark.tempDir("graft_cc_prog").toString
     // "kill" the job after round 2 — the halt leaves round_0..round_2
     // parquet behind, exactly what a real mid-job kill would
     val (partial, r1) = Dedup.connectedComponentsRounds(
@@ -204,7 +204,7 @@ class StatefulRecoverySpec extends AnyFunSuite {
     // maxIters == converged-round boundary: a fixpoint reached exactly at
     // the budget must resume without the spurious non-convergence throw
     // (killed-at-k and converged-at-k were indistinguishable pre-marker)
-    val dir2 = Files.createTempDirectory("graft_cc_prog2").toString
+    val dir2 = TestSpark.tempDir("graft_cc_prog2").toString
     val (halted, rHalt) = Dedup.connectedComponentsRounds(
       edges, maxIters = fullRounds, progressDir = Some(dir2),
       haltAfterRound = fullRounds)
@@ -229,7 +229,7 @@ class StatefulRecoverySpec extends AnyFunSuite {
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.reliableCheckpoints", "true")
     spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("graft_reliable_ckpt").toString)
+      TestSpark.tempDir("graft_reliable_ckpt").toString)
 
     val edges = (0L until 60L).map(i => (i, i + 1))
     val local = Dedup.connectedComponents(

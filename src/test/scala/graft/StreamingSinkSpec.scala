@@ -17,9 +17,9 @@ class StreamingSinkSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   test("checkpointed parquet sink is exactly-once across restarts") {
-    val src = Files.createTempDirectory("graft_eo_src").toString
-    val out = Files.createTempDirectory("graft_eo_out").toString
-    val ckpt = Files.createTempDirectory("graft_eo_ckpt").toString
+    val src = TestSpark.tempDir("graft_eo_src").toString
+    val out = TestSpark.tempDir("graft_eo_out").toString
+    val ckpt = TestSpark.tempDir("graft_eo_ckpt").toString
 
     // stage the events table as the streaming source directory
     val raw = spark.read.parquet(s"${TestSpark.sf}/events.parquet")
@@ -62,8 +62,8 @@ class StreamingSinkSpec extends AnyFunSuite {
     import java.net.Socket
     assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ===
       classOf[streaming.LocalCheckpointFileManager].getName)
-    val out = Files.createTempDirectory("graft_lc_out").toString
-    val ckpt = Files.createTempDirectory("graft_lc_ckpt").toString
+    val out = TestSpark.tempDir("graft_lc_out").toString
+    val ckpt = TestSpark.tempDir("graft_lc_ckpt").toString
     val name = s"local_ckpt_${System.nanoTime()}"
     try {
       val q = spark.readStream.format("graft-syslog")
@@ -96,9 +96,9 @@ class StreamingSinkSpec extends AnyFunSuite {
   }
 
   test("a checkpoint written by Spark's default writer restarts exactly-once") {
-    val src = Files.createTempDirectory("graft_stock_src").toString
-    val out = Files.createTempDirectory("graft_stock_out").toString
-    val ckpt = Files.createTempDirectory("graft_stock_ckpt").toString
+    val src = TestSpark.tempDir("graft_stock_src").toString
+    val out = TestSpark.tempDir("graft_stock_out").toString
+    val ckpt = TestSpark.tempDir("graft_stock_ckpt").toString
     import spark.implicits._
     def stage(part: Int): Unit = (part * 1000L until part * 1000L + 1000L).toDF("id")
       .coalesce(1).write.mode("append").parquet(src)
@@ -134,8 +134,8 @@ class StreamingSinkSpec extends AnyFunSuite {
   test("syslog->parquet recovers exactly-once from an ungraceful mid-stream stop") {
     import java.io.PrintWriter
     import java.net.Socket
-    val out = Files.createTempDirectory("graft_cr_out").toString
-    val ckpt = Files.createTempDirectory("graft_cr_ckpt").toString
+    val out = TestSpark.tempDir("graft_cr_out").toString
+    val ckpt = TestSpark.tempDir("graft_cr_ckpt").toString
     // a NAMED receiver keeps its buffer + sockets across query restarts,
     // so the planned-but-uncommitted window is still replayable after the
     // crash — the property under test

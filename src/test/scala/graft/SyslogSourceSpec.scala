@@ -91,18 +91,11 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
     }
   }
 
-  test("listeners=4: sharded acceptance delivers every line exactly once across lanes") {
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("tcp.port", "-1"); opts.put("udp.port", "0")
-    opts.put("tcp.host", "127.0.0.1")
-    opts.put("maxBufferedRows", "100000")
-    opts.put("listeners", "4")
-    val s = new sources.SyslogMicroBatchStream(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+  test("8 concurrent TCP senders: every line exactly once, per-connection order kept") {
+    val s = newStream(100000)
     try {
       val port = sources.SyslogState.lastTcpPort
       assert(port > 0)
-      // 8 concurrent tagged senders — round-robin pins 2 per segment
       val threads = (0 until 8).map { k =>
         new Thread(() => {
           val sock = new Socket("127.0.0.1", port)
@@ -112,77 +105,33 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
-      eventually(timeout(Span(10, Seconds))) {
-        assert(s.latestOffset().json().split(",").map(_.toLong).sum === 8000L)
-      }
-      val lanes = s.latestOffset().json().split(",").map(_.toLong)
-      assert(lanes.length === 4, s"offset must carry 4 lanes: ${lanes.toSeq}")
-      assert(lanes.forall(_ > 0),
-        s"round-robin left a lane empty: ${lanes.toSeq}")
-      val end = s.latestOffset()
-      val parts = s.planInputPartitions(s.initialOffset(), end)
-      val factory = s.createReaderFactory()
-      val lines = parts.flatMap { p =>
-        val r = factory.createReader(p)
-        val out = scala.collection.mutable.ArrayBuffer[String]()
-        while (r.next()) out += r.get().getUTF8String(0).toString
-        out
-      }
-      assert(lines.length === 8000, "rows lost or duplicated across lanes")
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === 8000L))
+      val lines = readRange(s, 0, 8000)
+      assert(lines.length === 8000, "rows lost or duplicated")
       assert(lines.toSet.size === 8000)
-      // per-connection order survives the sharding: each sender's lines
-      // appear in send order (they all live in one lane, enqueued by one
-      // reader thread)
+      // each sender's lines appear in send order (one reader thread per
+      // connection enqueues them)
       for (k <- 0 until 8) {
         val mine = lines.filter(_.startsWith(s"s$k-"))
           .map(_.split("-")(1).toInt)
-        assert(mine.toSeq === mine.sorted.toSeq,
-          s"sender $k's lines reordered")
+        assert(mine === mine.sorted, s"sender $k's lines reordered")
       }
-      // commit trims every lane; the committed range can't be replanned
-      s.commit(end)
-      assert(s.planInputPartitions(end, s.latestOffset()).isEmpty)
+      // commit trims the buffer; the committed range can't be replanned
+      s.commit(s.deserializeOffset("8000"))
+      assert(readRange(s, 0, 8000).isEmpty)
     } finally s.stop()
   }
 
-  test("listener fan-out clamps so the 2-row lane floor never exceeds maxBufferedRows") {
-    // round-13 advice: the >=2-row per-lane livelock floor multiplied
-    // past the configured cap at high fan-out (maxBufferedRows=8 with
-    // listeners=8 silently buffered up to 16 rows). The fan-out now
-    // clamps to maxBuffered/2 lanes, visible as the offset vector's
-    // arity; total capacity stays at the documented cap.
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("tcp.port", "-1"); opts.put("udp.port", "-1")
-    opts.put("tcp.host", "127.0.0.1"); opts.put("udp.host", "127.0.0.1")
-    opts.put("maxBufferedRows", "8")
-    opts.put("listeners", "8")
-    val s = new sources.SyslogMicroBatchStream(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
-    try {
-      val lanes = s.latestOffset().json().split(",")
-      assert(lanes.length === 4,
-        s"8 requested lanes at cap 8 must clamp to 4 (2-row floor x 4 " +
-          s"= the cap, not 16): got ${lanes.length}")
-    } finally s.stop()
-  }
-
-  test("a single skewed lane never livelocks the deferred-commit cycle (per-lane half cap)") {
-    // round-12 review regression: with listeners=4 and ONE connection,
-    // all traffic lands in one segment; a batch that plans that entire
-    // lane would freeze the stream (commit of batch n is deferred to
-    // batch n+1's construction, which needs new offsets, which need the
-    // trim commit performs). The per-lane half cap must leave unplanned
-    // rows visible so the drive below always progresses to a full drain.
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("tcp.port", "-1"); opts.put("udp.port", "0")
-    opts.put("tcp.host", "127.0.0.1")
-    opts.put("maxBufferedRows", "4000") // 1000/segment, halfCap 500
-    opts.put("listeners", "4")
-    val s = new sources.SyslogMicroBatchStream(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+  test("a full buffer never livelocks the deferred-commit cycle (half-capacity cap)") {
+    // Spark commits batch n only when it constructs batch n+1, which needs
+    // new offsets, which need the trim the commit performs. A batch that
+    // plans the entire full buffer would freeze the stream; the half cap
+    // must leave unplanned rows visible so the drive below always
+    // progresses to a full drain.
+    val s = newStream(1000)
     try {
       val port = sources.SyslogState.lastTcpPort
-      val total = 5000 // 5x one segment's capacity through one connection
+      val total = 5000 // 5x the buffer's capacity through one connection
       val sender = new Thread(() => {
         val sock = new Socket("127.0.0.1", port)
         val w = new PrintWriter(sock.getOutputStream)
@@ -190,6 +139,8 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
         w.flush(); sock.close()
       })
       sender.start()
+      // the first batch is planned against a full buffer
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === 1000))
       // deferred-commit drive: plan against CURRENT offsets, but commit
       // batch n only when constructing batch n+1 — the engine's timing
       var drained = 0L
@@ -197,7 +148,7 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
       var cur = s.initialOffset()
       val lim = org.apache.spark.sql.connector.read.streaming.ReadLimit
         .maxRows(1 << 20)
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
       val factory = s.createReaderFactory()
       while (drained < total && System.nanoTime() < deadline) {
         val end = s.latestOffset(cur, lim)
@@ -214,7 +165,7 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
       }
       sender.join(2000)
       assert(drained === total,
-        s"livelock: drained $drained of $total through the skewed lane")
+        s"livelock: drained $drained of $total through a full buffer")
     } finally s.stop()
   }
 

@@ -13,6 +13,12 @@ object TestSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A temp dir deleted at JVM exit ([[streaming.StreamingQueries.tempDir]];
+    * the suite runs in a forked JVM, so every spec's dirs go when it ends).
+    */
+  def tempDir(prefix: String): java.nio.file.Path =
+    streaming.StreamingQueries.tempDir(spark, prefix)
+
   /** All physical nodes of an EXECUTED plan, descending through AQE's
     * adaptive root and query stages (whose `children` are Nil — a plain
     * `plan.collect` stops at them and misses the real operators).

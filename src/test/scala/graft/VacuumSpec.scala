@@ -21,7 +21,7 @@ class VacuumSpec extends AnyFunSuite {
     * shared tier (the q155 embTier pattern).
     */
   private def docsTier(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q167").toString
+    val dir = TestSpark.tempDir("graft_q167").toString
     spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .write.parquet(s"$dir/documents.parquet")
     dir
