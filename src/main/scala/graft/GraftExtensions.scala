@@ -6,10 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.{AvroLogLineDecode, AvroLogLineEncode, BloomMightContain, BpeCount, BpeCountTrained, CodePointSeed, Fnv1a32, KafkaMessageSetDecode, ProtoLogLineEncode, ShingleSet, SortedIntersectCount, SubArgmin, VecDot}
 
 /** SparkSessionExtensions entry point: registers the ingest wire-format
-  * expressions as SQL functions. Activated either programmatically
-  * (`Sessions.builder`) or via `spark.sql.extensions=graft.GraftExtensions`
-  * on any cluster — the standard deployment story for a library shipping
-  * native expressions.
+  * expressions as SQL functions, the map-side top-k rewrite
+  * ([[graft.plans.PushLocalTopK]]) and the removal of `repartition(1)`
+  * over a one-partition scan ([[graft.plans.OnePartitionRepartition]],
+  * which makes each default ingest micro-batch one job). Activated
+  * either programmatically (`Sessions.builder`) or via
+  * `spark.sql.extensions=graft.GraftExtensions` on any cluster — the
+  * standard deployment story for a library shipping native expressions.
   *
   * Usage: `call_function("avro_logline", struct(...))`,
   * `SELECT fnv1a32(value) FROM ...`.
@@ -20,6 +23,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (graft.plans.LocalTopK): rule + strategy + physical operator
     ext.injectOptimizerRule(_ => graft.plans.PushLocalTopK)
     ext.injectPlannerStrategy(_ => graft.plans.LocalTopKStrategy)
+    // repartition(1) over a one-partition scan: no exchange
+    // (graft.plans.OnePartitionRepartition), applied inside AQE
+    ext.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRepartition)
     ext.injectFunction((
       new FunctionIdentifier("avro_logline"),
       new ExpressionInfo(classOf[AvroLogLineEncode].getName, "avro_logline"),

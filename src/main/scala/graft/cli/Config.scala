@@ -35,6 +35,15 @@ object Config {
     else Right((s.substring(0, i), s.substring(i + 1)))
   }
 
+  /** Flags that take a value: given last with none, they are reported as
+    * a missing value rather than as an unknown flag.
+    */
+  private val valueFlags = Set("--broker.list", "--topic", "--required.acks",
+    "--acks.timeout", "--num.producers", "--queue.size", "--tcp.host",
+    "--tcp.port", "--udp.host", "--udp.port", "--schema.registry.url",
+    "--log.type.id", "--tag", "--sink.format", "--sink.path",
+    "--sink.partition.by")
+
   def parse(args: Seq[String]): Either[String, GraftConfig] = {
     def go(rest: List[String], c: GraftConfig): Either[String, GraftConfig] =
       rest match {
@@ -61,6 +70,7 @@ object Config {
         case "--sink.path" :: v :: t => go(t, c.copy(sinkPath = Some(v)))
         case "--sink.partition.by" :: v :: t =>
           go(t, c.copy(sinkPartitionBy = v))
+        case flag :: Nil if valueFlags(flag) => Left(s"missing value for $flag")
         case other :: _ => Left(s"unknown flag: $other")
       }
     try go(args.toList, GraftConfig())

@@ -59,7 +59,12 @@ object Main {
         timestamp_millis(col("timestamp")), "yyyy-MM-dd"))
       case _ => None
     }
-    val base = source.repartition(conf.numProducers) // producer pool (O18)
+    // producer pool (O18): --num.producers write tasks per micro-batch.
+    // The default pool of 1 costs no shuffle for a batch the source
+    // reads as one partition (≤ 65,536 rows): the exchange is removed
+    // by graft.plans.OnePartitionRepartition. Larger batches and larger
+    // pools keep it.
+    val base = source.repartition(conf.numProducers)
     // land-compact: land UNPARTITIONED at full sink speed, carrying the
     // raw epoch-ms timestamp so a periodic `graft.ingest.Compact` batch
     // run folds closed windows into hive hour/day partitions downstream

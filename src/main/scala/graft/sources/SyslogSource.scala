@@ -9,7 +9,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -50,7 +50,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: tcp.port, udp.port (0 = disabled; -1 = ephemeral, for tests),
   * tcp.host/udp.host, maxBufferedRows.
-  * `graft.sources.SyslogState` exposes bound ports for tests.
+  * `graft.sources.SyslogState` exposes bound ports for tests. Each
+  * progress report carries the buffer's state and drop count
+  * ([[SyslogMicroBatchStream.metrics]]).
   */
 class SyslogSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-syslog"
@@ -180,6 +182,9 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
 
   /** Next offset to be assigned (base + buffered rows). */
   def nextOffset: Long = lock.synchronized(base + buffer.size)
+
+  /** (offset of the first uncommitted row, rows buffered), read together. */
+  def window: (Long, Int) = lock.synchronized((base, buffer.size))
 
   /** Rows [s, e) — still present for any uncommitted range. */
   def slice(s: Long, e: Long): Array[SyslogRecord] = lock.synchronized {
@@ -335,6 +340,9 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     */
   def tcpPort: Int = if (tcpServer != null) tcpServer.getLocalPort else -1
 
+  /** This receiver's bound UDP port (-1 if UDP disabled). */
+  def udpPort: Int = if (udpSocket != null) udpSocket.getLocalPort else -1
+
   def close(): Unit = {
     closed = true
     SyslogLocalTransport.receivers.remove(transportId)
@@ -385,7 +393,8 @@ object SyslogReceivers {
 }
 
 class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
-  extends MicroBatchStream with SupportsTriggerAvailableNow {
+  extends MicroBatchStream with SupportsTriggerAvailableNow
+    with ReportsSourceMetrics {
 
   private val receiverName = Option(options.get("receiver.name"))
   private val receiver = receiverName match {
@@ -458,9 +467,12 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[SyslogOffset].v
     val e = end.asInstanceOf[SyslogOffset].v
-    // One partition per micro-batch would serialize the whole
-    // transform/encode/write pipeline onto a single core; 64k chunks let
-    // a large batch use every core of the stage. With local transport
+    // 64k-row chunks let a large batch use several cores, but only up to
+    // the next narrowing: with the CLI's default one-producer pool
+    // (`repartition(1)`) a batch is one encode-and-write task either way.
+    // A batch of at most 65,536 rows is one partition, and then
+    // graft.plans.OnePartitionRepartition drops that repartition's
+    // exchange, so the batch runs as one job. With local transport
     // (default) the partition is a RANGE REFERENCE — the rows never ride
     // the task binary (see [[SyslogLocalTransport]]).
     if (localTransport)
@@ -499,6 +511,28 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
 
   override def commit(end: Offset): Unit =
     receiver.commitUpTo(end.asInstanceOf[SyslogOffset].v)
+
+  /** How far behind ingest is and what it dropped, in every progress
+    * report (`lastProgress.sources(i).metrics`):
+    *  - `bufferedRows`: rows received and not yet committed;
+    *  - `backlogRows`: rows received after the last batch's end offset
+    *    (all buffered rows before the first batch);
+    *  - `udpDropped`: datagram lines dropped on a full buffer;
+    *  - `capacity`: the buffer's size in rows (`maxBufferedRows`).
+    */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
+      : java.util.Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    val (base, buffered) = receiver.window
+    val consumed =
+      if (latestConsumedOffset.isPresent) latestConsumedOffset.get.json().trim.toLong
+      else base
+    Map(
+      "bufferedRows" -> buffered.toString,
+      "backlogRows" -> (base + buffered - consumed).toString,
+      "udpDropped" -> udpDropped.get().toString,
+      "capacity" -> receiver.capacity.toString).asJava
+  }
 
   override def stop(): Unit =
     // a NAMED receiver outlives the query (checkpoint recovery replays

@@ -188,6 +188,15 @@ class CodecSpec extends AnyFunSuite {
     assert(Config.validate(ok.copy(queueSize = -5)) ===
       Left("queue.size must be >= 1, got -5"))
     assert(Config.validate(ok.copy(numProducers = 1, queueSize = 1)).isRight)
+    // a value flag given last with no value is a missing value, not an
+    // unknown flag; a flag that takes no value is still fine last
+    assert(Config.parse(Seq("--broker.list", "b:9092", "--topic")) ===
+      Left("missing value for --topic"))
+    assert(Config.parse(Seq("--queue.size")) ===
+      Left("missing value for --queue.size"))
+    assert(Config.parse(Seq("--topic", "t", "--avro")).map(_.pattern) ===
+      Right("avro"))
+    assert(Config.parse(Seq("--bogus")) === Left("unknown flag: --bogus"))
   }
 
   test("CLI validate: parquet sink + landing partition knob") {

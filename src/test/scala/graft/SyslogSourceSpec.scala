@@ -320,4 +320,48 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
       udp.close()
     } finally s.stop()
   }
+
+  test("progress reports the buffer, the backlog and UDP drops as source metrics") {
+    import scala.jdk.CollectionConverters._
+    val name = s"metrics_${System.nanoTime()}"
+    val opts = Map("tcp.port" -> "0", "udp.port" -> "-1",
+      "udp.host" -> "127.0.0.1", "receiver.name" -> name,
+      "maxBufferedRows" -> "4")
+    // a named receiver fills before any query runs: nothing commits, so
+    // every datagram past the fourth is dropped
+    val recv = sources.SyslogReceivers.getOrCreate(name,
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts.asJava))
+    try {
+      val udp = new DatagramSocket()
+      val addr = InetAddress.getByName("127.0.0.1")
+      (1 to 20).foreach { i =>
+        val bytes = s"m-$i".getBytes("UTF-8")
+        udp.send(new DatagramPacket(bytes, bytes.length, addr, recv.udpPort))
+      }
+      udp.close()
+      eventually(timeout(Span(10, Seconds))) {
+        assert(recv.nextOffset === 4L)
+        assert(recv.udpDropped.get() >= 15L)
+      }
+      val q = spark.readStream.format("graft-syslog").options(opts).load()
+        .writeStream.format("memory").queryName("syslog_metrics")
+        .trigger(Trigger.ProcessingTime(50)).start()
+      try {
+        eventually(timeout(Span(30, Seconds))) {
+          q.processAllAvailable()
+          assert(spark.table("syslog_metrics").count() === 4L)
+        }
+        def metricsOf(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+          p.sources(0).metrics.asScala.toMap
+        // a batch plans at most half the buffer: batch 0 reads rows
+        // [0, 2) and leaves 2 of the 4 buffered rows behind it
+        val first = metricsOf(q.recentProgress.find(_.batchId == 0).get)
+        assert(first === Map("bufferedRows" -> "4", "backlogRows" -> "2",
+          "udpDropped" -> recv.udpDropped.get().toString, "capacity" -> "4"))
+        val last = metricsOf(q.lastProgress)
+        assert(last("backlogRows") === "0")
+        assert(last("udpDropped").toLong >= 15L)
+      } finally q.stop()
+    } finally sources.SyslogReceivers.close(name)
+  }
 }
