@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   *    (q32 PPJoin, q35 blocked bands, q64 unblocked bands) and their
   *    verified-pair outputs — a healthy engine grows these ~linearly with
   *    corpus size; quadratic growth means a blocking key stopped working;
-  *  - q73 connected-components round count — O(log diameter) means it
-  *    should stay FLAT as the corpus scales;
+  *  - q73 connected-components round count — not O(log diameter) on
+  *    paths whose ids run out of order (the known limit on
+  *    [[graft.operators.Dedup.connectedComponents]], ROADMAP direction
+  *    1), so it can grow with the corpus's longest dup chain;
   *  - q78 pack-size balance (min/max/avg tokens per pack) — the
   *    distributed prefix-sum must not degrade into skewed packs;
   *  - shuffle bytes for the LocalTopK-rewritten q74 and its headline
@@ -350,7 +352,7 @@ object ScaleProbe {
         val pairs = Dedup.batchPairs(seenDocs, b, cdf,
           cpfx.unionByName(pfxDelta)).persist()
         out(s"folds_f${k}_pairs") = pairs.count()
-        val current = Dedup.latestWins(baseLabels, labDelta)
+        val current = Dedup.latestWins(baseLabels, labDelta, "doc_id")
         val (sub, _) = Dedup.incrementalSubLabels(current, pairs)
         val subV = sub.withColumn("ver", lit(k.toLong)).persist()
         out(s"folds_f${k}_override_rows") = subV.count()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Join-layout operators for the 100-TB posture.
@@ -123,7 +123,7 @@ object Bucketed {
 
   /** Run `f` holding the per-(db, table) artifact lock — the same lock
     * [[writeOnceBucketed]] serializes builds under, so a maintenance
-    * operation (q122Compact's drop/rename/truncate) can exclude
+    * operation (a [[Store]] swap's drop/rename/truncate) can exclude
     * concurrent in-JVM builders and readers-that-build of the SAME
     * tables. Multi-table callers must acquire in sorted-name order.
     */
@@ -133,37 +133,269 @@ object Bucketed {
     lock.synchronized(f)
   }
 
-  // ---- land-then-compact swap (shared by q122/q126/q130) -----------------
+  // ---- staged stores: one swap, one recovery -----------------------------
   //
-  // One copy of the crash-critical base/delta compaction state machine:
+  // A staged store is a base table, a delta table beside it and a redo
+  // marker; a versioned store adds a one-row meta table holding its as-of
+  // floor and a version column on its delta rows. Compaction and vacuum
+  // are ONE swap that differs only in what the delta keeps:
   //
-  //   1. write merged segment to `<base>_next`         [new segment]
-  //   2. create redo marker                            [intent]
-  //   3. DROP base; RENAME _next → base                [catalog swap]
-  //   4. truncate delta (empty rewrite)                [reset]
-  //   5. delete marker
+  //   1. write the merged segment to `<base>_next`       [new segment]
+  //   2. create the redo marker (a vacuum's holds its    [intent]
+  //      horizon)
+  //   3. DROP base; RENAME _next → base                   [catalog swap]
+  //   4. reset the delta: empty (compaction) or the       [reset]
+  //      `ver > horizon` suffix (vacuum); a vacuum then
+  //      writes the horizon to meta
+  //   5. delete the marker
   //
-  // All under both tables' artifact locks (base before delta — callers
-  // must keep any independent acquisition in the same order) PLUS an
-  // FS lease on the base artifact: the JVM locks exclude in-process
-  // racers; the lease file excludes a REPLACED maintenance driver (the
-  // 100-TB posture — drivers are replaceable, and a local-only lock
-  // would let old and new drivers interleave a swap). Every crash
-  // window rolls FORWARD idempotently in [[recoverPending]]: _next present
-  // → finish the swap then truncate; _next gone → only the truncate is
-  // owed. What the dangerous window (rename committed, delta stale) means
-  // is the CALLER's merge semantics: an append-union artifact would serve
-  // delta rows twice without the marker (q122), a latest-wins or
-  // distinct-consumed artifact serves identically either way (q126/q130)
-  // — each caller's crash spec pins its own reading.
+  // Steps 3–5 are the roll-forward, and the swap runs the very code
+  // recovery runs: a marker found later (a crashed driver's, read by
+  // its replacement or by any serving path) replays them idempotently —
+  // `_next` present → finish the promote; the reset and the meta write
+  // repeat harmlessly. What the dangerous window (rename committed,
+  // delta stale) means is the merge's: an append-union store would
+  // serve delta rows twice without the marker (q122), a latest-wins or
+  // subtractive store serves identically either way (q126/q130/q155/
+  // q167) — each family's crash spec pins its own reading.
   //
-  // Marker, lease, and table dirs all live under the SAME warehouse
-  // namespace ([[warehousePath]]) and are manipulated through the Hadoop
-  // FileSystem of that namespace's scheme — on object storage they share
-  // the tables' bucket and durability; a crashed driver's marker is
-  // visible to its replacement. (Round 10 kept the marker on the local
-  // java.nio filesystem: correct in-sandbox, invisible to any other
-  // machine — the judge's round-10 hardening item.)
+  // Everything runs under the base's and then the delta's artifact lock
+  // (the meta lock is taken last, inside them — callers must keep any
+  // independent acquisition in the same base → delta → meta order) PLUS,
+  // for the swap, an FS lease on the base artifact: the JVM locks
+  // exclude in-process racers; the lease file excludes a REPLACED
+  // maintenance driver (drivers are replaceable, and a local-only lock
+  // would let old and new drivers interleave a swap). Marker, lease,
+  // meta and table dirs all live under the SAME warehouse namespace
+  // ([[warehousePath]]) and go through the Hadoop FileSystem of that
+  // namespace's scheme — on object storage they share the tables'
+  // bucket and durability, and a crashed driver's marker is visible to
+  // its replacement.
+
+  /** One staged base/delta store: its base, delta and redo-marker names,
+    * its bucket layout and — for a versioned store — its meta table and
+    * version column. The value names tables only; every verb takes the
+    * database, so one declaration serves every tier.
+    */
+  private[graft] final case class Store(base: String, delta: String,
+      marker: String, buckets: Int, keys: Seq[String],
+      meta: Option[String] = None, verCol: String = "ver") {
+
+    /** Write-once base / delta tables in this store's layout
+      * ([[writeOnceBucketed]]).
+      */
+    def stageBase(s: SparkSession, db: String, srcPath: String)(
+        df: => DataFrame): DataFrame =
+      writeOnceBucketed(s, db, base, srcPath, df, buckets, keys)
+    def stageDelta(s: SparkSession, db: String, srcPath: String)(
+        df: => DataFrame): DataFrame =
+      writeOnceBucketed(s, db, delta, srcPath, df, buckets, keys)
+
+    /** Rewrite both tables from `baseDf` and `deltaDf` unconditionally. */
+    def restage(s: SparkSession, db: String, baseDf: DataFrame,
+        deltaDf: DataFrame): Unit = {
+      rewriteBucketed(s, db, base, baseDf, buckets, keys)
+      rewriteBucketed(s, db, delta, deltaDf, buckets, keys)
+    }
+
+    /** Fold `merged` (evaluated under the locks, against the recovered
+      * pre-swap state) into the base and empty the delta.
+      */
+    def compact(s: SparkSession, db: String, merged: => DataFrame): Unit =
+      swap(s, db, merged, None)
+
+    /** Fold the delta rows with version ≤ `horizon` into the base (the
+      * caller's `merged` is the view as of the horizon) and KEEP the rows
+      * above it — the retention GC that bounds the override chain by the
+      * retention window, never by total folded mass. The marker carries
+      * the horizon, so a crash between the base swap and the delta
+      * rewrite replays the exact filter; meta records the as-of floor.
+      */
+    def vacuum(s: SparkSession, db: String, horizon: Long,
+        merged: => DataFrame): Unit = {
+      require(meta.isDefined, s"$base is not a versioned store")
+      swap(s, db, merged, Some(horizon))
+    }
+
+    /** Roll an interrupted swap forward (idempotent; no-op without the
+      * marker). Run by the swap and by every serving path.
+      */
+    def recover(s: SparkSession, db: String): Unit =
+      locked(db)(recoverLocked(s, db))
+
+    /** The store's durable as-of floor (0 until the first vacuum). An
+      * EMPTY meta table (crash mid-rewrite, external truncation) is the
+      * same floor as a missing one: max() over zero rows is NULL, which
+      * must read as 0, not throw. Held under the meta table's own lock:
+      * the meta write is a drop-and-recreate, so an unlocked read could
+      * observe the dropped table and return floor 0 — admitting an as-of
+      * read BELOW the real horizon, the silent wrong answer the floor
+      * exists to prevent.
+      */
+    def horizon(s: SparkSession, db: String): Long =
+      withArtifactLock(db, metaTable) {
+        if (s.catalog.databaseExists(db) &&
+            s.catalog.tableExists(s"$db.$metaTable")) {
+          val row = s.table(s"$db.$metaTable")
+            .select(max(col("horizon"))).head()
+          if (row.isNullAt(0)) 0L else row.getLong(0)
+        } else 0L
+      }
+
+    private def metaTable: String = meta.getOrElse(
+      throw new IllegalStateException(s"$base is not a versioned store"))
+
+    private def locked[T](db: String)(f: => T): T =
+      withArtifactLock(db, base)(withArtifactLock(db, delta)(f))
+
+    private def swap(s: SparkSession, db: String, merged: => DataFrame,
+        horizon: Option[Long]): Unit =
+      locked(db) {
+        withFsLease(s, db, base) {
+          recoverLocked(s, db)
+          val m = merged // builds any missing artifact inputs (re-entrant)
+          rewriteBucketed(s, db, s"${base}_next", m, buckets, keys)
+          createMarker(s, db, marker, horizon.fold("")(_.toString))
+          rollForward(s, db, horizon)
+        }
+      }
+
+    /** Owed-work replay: a compaction marker owes the empty delta, a
+      * vacuum marker the suffix above the horizon it carries. An
+      * unparsable vacuum marker cannot exist under the atomic
+      * [[createMarker]]; if one is found anyway (torn by an older writer,
+      * external truncation), its creation never completed — and creation
+      * PRECEDES every destructive step — so nothing is owed: it is
+      * dropped instead of failing every serving path forever.
+      */
+    private def recoverLocked(s: SparkSession, db: String): Unit =
+      readMarker(s, db, marker).foreach { content =>
+        meta.map(_ => content.toLongOption) match {
+          case Some(None) => deleteMarker(s, db, marker)
+          case owed => rollForward(s, db, owed.flatten)
+        }
+      }
+
+    /** Steps 3–5; the marker is deleted only after the work is done. */
+    private def rollForward(s: SparkSession, db: String,
+        horizon: Option[Long]): Unit = {
+      promoteNext(s, db, base)
+      resetDelta(s, db, horizon)
+      horizon.foreach(writeMeta(s, db, _))
+      deleteMarker(s, db, marker)
+    }
+
+    /** The delta reset, in two regimes:
+      *  - the catalog knows the delta (same process, or a persistent
+      *    metastore): rewrite it from its kept rows;
+      *  - otherwise, whenever the delta DIR exists (a fresh process over
+      *    an in-memory catalog — the replaced-driver shape), at the
+      *    FILESYSTEM level: a compaction empties the dir in place, so an
+      *    append-union store can never serve delta rows twice even before
+      *    any catalog is rebuilt; a vacuum re-reads the dir's rows for
+      *    its suffix.
+      * The fallback keys on the dir, not on `!databaseExists` (the
+      * mixed-state note on [[promoteNext]]): a db created by an unrelated
+      * query must not make the reset skip while the marker is deleted.
+      */
+    private def resetDelta(s: SparkSession, db: String,
+        horizon: Option[Long]): Unit = {
+      val dir = warehousePath(s, db, delta)
+      val fs = fsOf(s, dir)
+      if (s.catalog.databaseExists(db) &&
+          s.catalog.tableExists(s"$db.$delta"))
+        rewriteBucketed(s, db, delta, kept(s.table(s"$db.$delta"), horizon),
+          buckets, keys)
+      else if (fs.exists(dir)) horizon match {
+        case None =>
+          fs.listStatus(dir).foreach(st => fs.delete(st.getPath, true))
+        case Some(_) =>
+          rewriteBucketed(s, db, delta,
+            kept(s.read.parquet(dir.toString), horizon), buckets, keys)
+      }
+    }
+
+    /** The rows a reset keeps: none for a compaction; for a vacuum, the
+      * rows above the horizon, materialized, since the rewrite drops the
+      * delta table they are read from.
+      */
+    private def kept(df: DataFrame, horizon: Option[Long]): DataFrame =
+      horizon match {
+        case None => df.sparkSession.createDataFrame(
+          df.sparkSession.sparkContext.emptyRDD[Row], df.schema)
+        case Some(h) => Shared.ckpt(df.filter(col(verCol) > h))
+      }
+
+    private def writeMeta(s: SparkSession, db: String, horizon: Long): Unit =
+      withArtifactLock(db, metaTable) {
+        import s.implicits._
+        rewriteBucketed(s, db, metaTable,
+          Seq((0L, horizon)).toDF("k", "horizon"), 1, Seq("k"))
+      }
+  }
+
+  private[graft] object Store {
+    /** A store whose tables are `<stem>_base`, `<stem>_delta` and
+      * `<stem>_pending`.
+      */
+    def of(stem: String, buckets: Int, keys: Seq[String]): Store =
+      Store(s"${stem}_base", s"${stem}_delta", s"${stem}_pending", buckets,
+        keys)
+  }
+
+  /** A staged family: its [[Store]], the builders of its base and delta
+    * (write-once artifacts), and the merge that folds a delta into a base
+    * — latest-wins for an override store, a union for an append store,
+    * an anti-join for a tombstone store. Verbs take the tier dir; the
+    * store lives in the tier's [[dbFor]] database.
+    */
+  private[graft] final case class Family(store: Store,
+      base: (SparkSession, String) => DataFrame,
+      delta: (SparkSession, String) => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame) {
+
+    def recover(s: SparkSession, d: String): Unit = store.recover(s, dbFor(d))
+
+    def horizon(s: SparkSession, d: String): Long = store.horizon(s, dbFor(d))
+
+    def compact(s: SparkSession, d: String): Unit =
+      store.compact(s, dbFor(d), merge(base(s, d), delta(s, d)))
+
+    def vacuum(s: SparkSession, d: String, horizon: Long): Unit =
+      store.vacuum(s, dbFor(d), horizon,
+        merge(base(s, d), upTo(delta(s, d), Some(horizon))))
+
+    /** Recover, then fold what is owed: the whole delta (compaction) or
+      * its rows at or below `horizon` (vacuum) — nothing when there are
+      * none, so a settled family costs one bounded count.
+      */
+    def settle(s: SparkSession, d: String,
+        horizon: Option[Long] = None): Unit = {
+      recover(s, d)
+      if (upTo(delta(s, d), horizon).limit(1).count() > 0)
+        horizon.fold(compact(s, d))(vacuum(s, d, _))
+    }
+
+    /** The family's view as of version `v` (the latest when `None`):
+      * recover, refuse a snapshot below the vacuum floor — vacuumed
+      * versions are unrecoverable, and serving a newer snapshot instead
+      * would be silently wrong — then merge the base with the delta rows
+      * up to `v`.
+      */
+    def asOf(s: SparkSession, d: String,
+        v: Option[Long] = None): DataFrame = {
+      recover(s, d)
+      v.foreach { at =>
+        val h = horizon(s, d)
+        require(at >= h, s"as-of $at predates the ${store.base} vacuum " +
+          s"horizon $h — vacuumed versions are unrecoverable")
+      }
+      merge(base(s, d), upTo(delta(s, d), v))
+    }
+
+    private def upTo(df: DataFrame, v: Option[Long]): DataFrame =
+      v.fold(df)(at => df.filter(col(store.verCol) <= at))
+  }
 
   /** Advisory FS lease for cross-driver exclusion of maintenance ops.
     * Acquire = create of `_LEASE_<name>` with overwrite=false (atomic
@@ -175,18 +407,16 @@ object Bucketed {
     * orphaned by a dead driver and taken over via ATOMIC RENAME (see
     * the loop) — maintenance ops are idempotent roll-forward state
     * machines, so a takeover mid-crash-window re-runs recovery, never
-    * corrupts.
-    */
-  /** Advisory cross-driver lease with an OWNER TOKEN. The token closes
-    * the release race an age-only lease has: if driver A's work outlives
+    * corrupts. The lease carries an OWNER TOKEN, which closes the
+    * release race an age-only lease has: if driver A's work outlives
     * `leaseMs` and driver B takes the lease over, A's release must NOT
     * delete B's lease (that would admit a third driver while B is
     * mid-swap). So the lease file carries the holder's nonce, and
     * release deletes only a lease the caller still owns. The stolen
     * holder's own critical section is still exposed — that is inherent
     * to any lease without a heartbeat — so `leaseMs` must be sized above
-    * the worst-case swap wall (and [[compactSwap]]'s marker protocol
-    * keeps even an interleaved crash window roll-forward-safe).
+    * the worst-case swap wall (and [[Store]]'s marker protocol keeps
+    * even an interleaved crash window roll-forward-safe).
     */
   private[graft] def withFsLease[T](s: SparkSession, db: String,
       name: String)(f: => T): T = {
@@ -254,37 +484,6 @@ object Bucketed {
     }
   }
 
-  /** Fold `merged` (evaluated under the locks, against pre-swap state)
-    * into `db.base`, truncating `db.delta` — the redo-marker swap above.
-    */
-  private[graft] def compactSwap(s: SparkSession, db: String, base: String,
-      delta: String, marker: String, merged: => DataFrame, buckets: Int,
-      keys: Seq[String]): Unit =
-    withArtifactLock(db, base) {
-      withArtifactLock(db, delta) {
-        withFsLease(s, db, base) {
-          recoverLocked(s, db, base, delta, marker, buckets, keys)
-          val m = merged // builds any missing artifact inputs (re-entrant)
-          val deltaSchema = s.table(s"$db.$delta").schema
-          rewriteBucketed(s, db, s"${base}_next", m, buckets, keys)
-          createMarker(s, db, marker, "")
-          promoteNext(s, db, base)
-          rewriteBucketed(s, db, delta, s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaSchema),
-            buckets, keys)
-          deleteMarker(s, db, marker)
-        }
-      }
-    }
-
-  // ---- shared swap primitives (compactSwap + vacuumSwap) ------------------
-  //
-  // ONE copy of the steps both state machines share, so a hardening fix
-  // lands in both protocols (round-12 review): the catalog-or-FS base
-  // promotion and the marker create/read. What legitimately differs —
-  // the delta-reset policy (truncate-all vs keep-the-suffix) and the
-  // vacuum's meta write — stays in each caller.
-
   /** Finish a base swap: `_next` promoted over `base` at the catalog
     * level when the CATALOG KNOWS the `_next` table, at the FS level
     * whenever the `_next` DIR exists otherwise. The second branch keys
@@ -323,8 +522,8 @@ object Bucketed {
       }
     }
 
-  /** Create the redo marker with `content` (the intent record both
-    * recoveries key on; vacuum stores the horizon in it). Written to a
+  /** Create the redo marker with `content` (the intent record recovery
+    * keys on; a vacuum stores the horizon in it). Written to a
     * temp name and RENAMED into place (round-14 review): a direct
     * create+write can die between the two and leave a 0-byte marker
     * whose unparsable content would poison every recovery that keys on
@@ -368,178 +567,6 @@ object Bucketed {
     val mk = warehousePath(s, db, marker)
     fsOf(s, mk).delete(mk, false)
   }
-
-  // ---- retention vacuum over a versioned override store -------------------
-
-  /** [[compactSwap]] generalized from "truncate the delta" to "retain the
-    * suffix": fold override rows with `ver` ≤ `horizon` into the base
-    * (the caller supplies the latest-wins-as-of-horizon `merged` frame)
-    * and KEEP the rows above the horizon — the retention GC a versioned
-    * store needs so the override chain's length is bounded by the
-    * retention window, never by total folded mass. The redo marker
-    * CARRIES the horizon as its content, so a crash between the base
-    * swap and the delta rewrite replays the exact filter; the one-row
-    * `meta` table records the store's as-of floor durably (serving reads
-    * it to fail loudly on a snapshot request older than the horizon).
-    * Crash safety class: latest-wins — a suffix row re-applied over an
-    * already-folded base serves identical rows (spec'd in VacuumSpec's
-    * q167 crash test).
-    */
-  private[graft] def vacuumSwap(s: SparkSession, db: String, base: String,
-      delta: String, marker: String, meta: String, merged: => DataFrame,
-      horizon: Long, verCol: String, buckets: Int,
-      keys: Seq[String]): Unit =
-    withArtifactLock(db, base) {
-      withArtifactLock(db, delta) {
-        withFsLease(s, db, base) {
-          vacuumRecoverLocked(s, db, base, delta, marker, meta, verCol,
-            buckets, keys)
-          val m = merged // builds any missing artifact inputs (re-entrant)
-          rewriteBucketed(s, db, s"${base}_next", m, buckets, keys)
-          // the retained suffix must materialize BEFORE the delta table
-          // is dropped out from under the frame that reads it
-          val keep = Shared.ckpt(
-            s.table(s"$db.$delta").filter(col(verCol) > horizon))
-          createMarker(s, db, marker, horizon.toString)
-          promoteNext(s, db, base)
-          rewriteBucketed(s, db, delta, keep, buckets, keys)
-          writeMeta(s, db, meta, horizon)
-          deleteMarker(s, db, marker)
-        }
-      }
-    }
-
-  /** Both meta accessors hold the META table's own artifact lock
-    * (round-14 review): writeMeta is a drop-and-recreate, so an
-    * unlocked concurrent [[vacuumHorizon]] could observe the dropped
-    * table mid-rewrite and return floor 0 — admitting an as-of read
-    * BELOW the real horizon, the silent wrong answer the floor exists
-    * to prevent. Lock order is base -> delta -> meta (writeMeta runs
-    * under the vacuum's base+delta locks; vacuumHorizon takes only the
-    * meta lock), so no cycle is possible.
-    */
-  private def writeMeta(s: SparkSession, db: String, meta: String,
-      horizon: Long): Unit = withArtifactLock(db, meta) {
-    import s.implicits._
-    rewriteBucketed(s, db, meta,
-      Seq((0L, horizon)).toDF("k", "horizon"), 1, Seq("k"))
-  }
-
-  /** The store's durable as-of floor (0 until the first vacuum). An
-    * EMPTY meta table (crash mid-rewrite, external truncation) is the
-    * same floor as a missing one: max() over zero rows is NULL, which
-    * must read as 0, not throw.
-    */
-  private[graft] def vacuumHorizon(s: SparkSession, db: String,
-      meta: String): Long = withArtifactLock(db, meta) {
-    if (s.catalog.databaseExists(db) && s.catalog.tableExists(s"$db.$meta")) {
-      val row = s.table(s"$db.$meta").select(max(col("horizon"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    } else 0L
-  }
-
-  /** Roll an interrupted [[vacuumSwap]] forward (idempotent; no-op
-    * without the marker). Run by the vacuum and by every serving path.
-    */
-  private[graft] def vacuumRecover(s: SparkSession, db: String,
-      base: String, delta: String, marker: String, meta: String,
-      verCol: String, buckets: Int, keys: Seq[String]): Unit =
-    withArtifactLock(db, base) {
-      withArtifactLock(db, delta) {
-        vacuumRecoverLocked(s, db, base, delta, marker, meta, verCol,
-          buckets, keys)
-      }
-    }
-
-  private def vacuumRecoverLocked(s: SparkSession, db: String,
-      base: String, delta: String, marker: String, meta: String,
-      verCol: String, buckets: Int, keys: Seq[String]): Unit =
-    readMarker(s, db, marker).foreach { content =>
-      // An unparsable marker cannot exist under the atomic createMarker;
-      // if one is found anyway (torn by an older writer, external
-      // truncation), the creation never completed — and creation
-      // PRECEDES every destructive step — so nothing is owed: drop it
-      // instead of throwing forever on every serving path.
-      content.toLongOption match {
-        case None => deleteMarker(s, db, marker)
-        case Some(horizon) =>
-          promoteNext(s, db, base)
-          // delta-reset policy (the vacuum half that differs from
-          // compact): keep the suffix above the marker's horizon,
-          // reading through the catalog when it knows the table, the
-          // warehouse dir otherwise (keyed on the DIR, not on
-          // databaseExists — the mixed-state note on promoteNext)
-          val deltaDir = warehousePath(s, db, delta)
-          val src =
-            if (s.catalog.databaseExists(db) &&
-                s.catalog.tableExists(s"$db.$delta"))
-              Some(s.table(s"$db.$delta"))
-            else if (fsOf(s, deltaDir).exists(deltaDir))
-              Some(s.read.parquet(deltaDir.toString))
-            else None
-          src.foreach { df =>
-            val keep = Shared.ckpt(df.filter(col(verCol) > horizon))
-            rewriteBucketed(s, db, delta, keep, buckets, keys)
-          }
-          writeMeta(s, db, meta, horizon)
-          deleteMarker(s, db, marker)
-      }
-    }
-
-  /** Roll an interrupted [[compactSwap]] forward (idempotent; no-op
-    * without the marker). Run by both the compaction and serving paths.
-    */
-  private[graft] def recoverPending(s: SparkSession, db: String,
-      base: String, delta: String, marker: String, buckets: Int,
-      keys: Seq[String]): Unit =
-    withArtifactLock(db, base) {
-      withArtifactLock(db, delta) {
-        recoverLocked(s, db, base, delta, marker, buckets, keys)
-      }
-    }
-
-  /** Owed-work replay. Two regimes, both idempotent:
-    *  - catalog has the db (same process, or a persistent metastore):
-    *    finish the swap at the CATALOG level, truncate delta, then — and
-    *    only then — delete the marker;
-    *  - catalog does NOT have the db (fresh process over an in-memory
-    *    catalog — this sandbox's post-crash shape): the owed actions are
-    *    replayed at the FILESYSTEM level against the warehouse dirs
-    *    (`_next` dir present → promote it over the base dir; delta dir
-    *    emptied), so an append-union artifact can never serve delta rows
-    *    twice even before any catalog is rebuilt. Round 10 deleted the
-    *    marker in this branch WITHOUT doing the work — correctness
-    *    survived only because a fresh session rebuilds every artifact
-    *    from source, which contradicted the roll-forward contract.
-    * The marker is deleted only after whichever branch actually ran.
-    */
-  private def recoverLocked(s: SparkSession, db: String, base: String,
-      delta: String, marker: String, buckets: Int,
-      keys: Seq[String]): Unit =
-    readMarker(s, db, marker).foreach { _ =>
-      promoteNext(s, db, base)
-      // delta-reset policy (the compact half): truncate everything —
-      // through the catalog when it knows the table, at the FS level
-      // whenever the delta DIR exists otherwise. The fallback keys on
-      // the dir, not on !databaseExists (round-14 review): in the mixed
-      // state where some earlier query created the db but the crashed
-      // process's tables are catalog-unknown, the old gate ran NEITHER
-      // branch and still deleted the marker — the round-10
-      // marker-without-work bug resurfacing.
-      if (s.catalog.databaseExists(db) &&
-          s.catalog.tableExists(s"$db.$delta")) {
-        val schema = s.table(s"$db.$delta").schema
-        rewriteBucketed(s, db, delta, s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-          buckets, keys)
-      } else {
-        val deltaDir = warehousePath(s, db, delta)
-        val fs = fsOf(s, deltaDir)
-        if (fs.exists(deltaDir))
-          fs.listStatus(deltaDir).foreach(st => fs.delete(st.getPath, true))
-      }
-      deleteMarker(s, db, marker)
-    }
 
   /** Memoized [[rewriteBucketed]]: builds `db.name` from `df` at most once
     * per (session, source state); `df` is by-name and only evaluated when a

@@ -225,15 +225,17 @@ object Dedup {
     * itself and its neighbors (one join + min-aggregate), then
     * (2) SHORTCUT — pointer doubling, `rep(v) <- rep(rep(v))` (one more
     * join against the label map). Hook alone advances a label one hop per
-    * round (diameter-bounded — a 10^6-hop dup chain would need 10^6
-    * rounds); the shortcut composes the label map with itself, so the
-    * distance a label has travelled roughly doubles each round and the
-    * fixpoint arrives in O(log diameter) rounds (Shiloach–Vishkin '82
-    * hooking + shortcutting; the same doubling idea as the
-    * large-star/small-star MapReduce formulation, Kiveris et al.
-    * SOCC'14). 30 rounds covers diameters beyond 2^29 — unreachable at
-    * any corpus size — and if the loop ever exits unconverged it THROWS
-    * instead of returning a non-fixpoint labeling.
+    * round; the shortcut composes the label map with itself, which helps
+    * only while labels still point along a path. Known limit: only nodes
+    * are hooked, not roots, so once a path's nodes point at a LOCAL
+    * minimum the shortcut stops helping and the global minimum crawls
+    * one hop per round — the round count is not O(log diameter) on such
+    * inputs. A 100-hop chain hung off its far end needs ~100 rounds and
+    * throws at the default 30; a shuffled 1,000-node path needs ~370.
+    * Near-duplicate version chains are exactly such paths. Hooking roots
+    * as well (Shiloach–Vishkin '82; or large-star/small-star, Kiveris et
+    * al. SOCC'14) is ROADMAP direction 1. If the loop exits unconverged
+    * it THROWS instead of returning a non-fixpoint labeling.
     *
     * Labels decrease monotonically and only ever hold node ids of the
     * same component, so the fixpoint (no change in a full round) is
@@ -252,9 +254,9 @@ object Dedup {
       progressDir: Option[String] = None): DataFrame =
     connectedComponentsRounds(edgesIn, maxIters, progressDir)._1
 
-  /** [[connectedComponents]] plus the number of rounds it took — the
-    * O(log diameter) claim is measured, not asserted ([[graft.ScaleProbe]]
-    * tracks it across scale factors).
+  /** [[connectedComponents]] plus the number of rounds it took
+    * ([[graft.ScaleProbe]] tracks it across scale factors; see the known
+    * round-count limit on [[connectedComponents]]).
     *
     * Durability modes for the per-round state (What's-wrong #3 of the
     * round-9 review):
@@ -805,26 +807,29 @@ object Dedup {
     (sub, frame(members.map(_.get(1)).distinct.map(Row(_)), repField))
   }
 
-  /** q124's override view: the current labels are the frozen base minus
-    * any doc that ever appeared in the delta, plus each delta doc's
-    * LATEST row (`ver` = fold number; one row per doc per fold, so the
-    * window is tie-free). The anti-join probes the doc_id-bucketed base
-    * with the override id set — explicitly broadcast, since that is the
-    * whole cost claim — and the window runs over the delta only, so
-    * current-view construction never shuffles the corpus. The hint is
-    * valid precisely in the regime the operator is for: the delta is
-    * compacted into the base (SCALING.md q124) long before the override
-    * id set could outgrow a broadcast.
+  /** The merge of every versioned override store (labels, span strips,
+    * scorecards): the base minus any `key` that appears in the delta,
+    * plus each delta key's LATEST row (`ver` = fold number; one row per
+    * key per fold, so the window is tie-free), in the base's columns.
+    * The anti-join probes the key-bucketed base with the override key
+    * set — explicitly broadcast, since that is the whole cost claim —
+    * and the window runs over the delta only, so building the current
+    * view never shuffles the base. The hint is valid precisely in the
+    * regime the stores are for: the delta is compacted into the base
+    * (SCALING.md q124) long before the override key set could outgrow a
+    * broadcast.
     */
-  private[graft] def latestWins(base: DataFrame, delta: DataFrame): DataFrame = {
+  private[graft] def latestWins(base: DataFrame, delta: DataFrame,
+      key: String): DataFrame = {
+    val cols = base.columns.toSeq.map(col)
     val latest = delta
       .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("ver").desc)))
+        Window.partitionBy(col(key)).orderBy(col("ver").desc)))
       .filter(col("_rn") === 1)
-      .select(col("doc_id"), col("rep"), col("cluster_size"))
-    base.join(broadcast(delta.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("rep"), col("cluster_size"))
+      .select(cols: _*)
+    base.join(broadcast(delta.select(col(key)).distinct()),
+        Seq(key), "left_anti")
+      .select(cols: _*)
       .unionByName(latest)
   }
 
@@ -883,7 +888,8 @@ object Dedup {
       * and the override rows of earlier folds.
       */
     def before(ver: Long): DataFrame = latestWins(baseLabels,
-      s.read.schema(labelsSchema).parquet(labelsDir).filter(col("ver") < ver))
+      s.read.schema(labelsSchema).parquet(labelsDir).filter(col("ver") < ver),
+      "doc_id")
 
     def step(b: DataFrame, ver: Long): LabelsStep = {
       val seenDocs = corpus.unionByName(
@@ -1079,15 +1085,15 @@ object Dedup {
     * readers running in the same session).
     */
   private[graft] def q126BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q126_labels_base",
-      s"$d/documents.parquet", q120LabelsArtifact(s, d), 8, Seq("doc_id"))
+    q126.store.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      q120LabelsArtifact(s, d))
 
   /** The staged override delta: q120's fold output with `ver`, bucketed by
     * doc_id like the base. Every dependency artifact is resolved BEFORE the
     * delta's write-once lock so lock acquisition stays in one global order
     * (q126_base < q126_delta < q120_*) — the builder never holds the delta
     * lock while requesting the base lock, which would deadlock against
-    * [[q126Compact]]'s sorted base→delta acquisition.
+    * the compaction's sorted base→delta acquisition.
     */
   private[graft] def q126DeltaArtifact(s: SparkSession, d: String): DataFrame = {
     // store deps resolve eagerly (lock ordering); the fold frame itself
@@ -1096,38 +1102,22 @@ object Dedup {
     val base = q126BaseArtifact(s, d)
     q120DfArtifact(s, d); q120PrefixArtifact(s, d)
     val batch = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q126_labels_delta",
-      s"$d/documents.parquet",
-      {
-        q126DeltaWrites.incrementAndGet()
-        incrementalSubLabels(base,
-          batchPairs(q120Corpus(s, d), batch, q120DfArtifact(s, d),
-            q120PrefixArtifact(s, d)))._1.withColumn("ver", lit(1L))
-      }, 8, Seq("doc_id"))
+    q126.store.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q126DeltaWrites.incrementAndGet()
+      incrementalSubLabels(base,
+        batchPairs(q120Corpus(s, d), batch, q120DfArtifact(s, d),
+          q120PrefixArtifact(s, d)))._1.withColumn("ver", lit(1L))
+    }
   }
 
-  /** Fold the override delta into the base: [[Bucketed.compactSwap]] with
-    * latest-wins as the merge; see the block comment above for why a
-    * missed marker is cost-only here.
+  /** The q126 store, merged latest-wins (see the block comment above for
+    * why a missed marker is cost-only here). Served after a compaction,
+    * the view is just the (bucketed) base scan, zero override machinery.
     */
-  private[graft] def q126Compact(s: SparkSession, d: String): Unit =
-    Bucketed.compactSwap(s, Bucketed.dbFor(d), "q126_labels_base",
-      "q126_labels_delta", "q126_compact_pending",
-      latestWins(q126BaseArtifact(s, d), q126DeltaArtifact(s, d)),
-      8, Seq("doc_id"))
-
-  private[graft] def q126CompactRecover(s: SparkSession, d: String): Unit =
-    Bucketed.recoverPending(s, Bucketed.dbFor(d), "q126_labels_base",
-      "q126_labels_delta", "q126_compact_pending", 8, Seq("doc_id"))
-
-  /** Serve the current labels: recover any interrupted compaction, then the
-    * latest-wins view over base ∪ delta — which after a compaction is just
-    * the (bucketed) base scan, zero override machinery.
-    */
-  private[graft] def q126Serve(s: SparkSession, d: String): DataFrame = {
-    q126CompactRecover(s, d)
-    latestWins(q126BaseArtifact(s, d), q126DeltaArtifact(s, d))
-  }
+  private[graft] val q126 = Bucketed.Family(
+    Bucketed.Store("q126_labels_base", "q126_labels_delta",
+      "q126_compact_pending", 8, Seq("doc_id")),
+    q126BaseArtifact, q126DeltaArtifact, latestWins(_, _, "doc_id"))
 
   // ---- q167: RETENTION VACUUM over the versioned label store --------------
   //
@@ -1136,14 +1126,15 @@ object Dedup {
   // unbounded store left after the compaction family. q167 adds the
   // retention verb: fold every delta row with ver ≤ horizon into the
   // base (latest-wins as-of-horizon) and RETAIN only the suffix, via
-  // [[Bucketed.vacuumSwap]] (redo marker carries the horizon; one-row
+  // [[Bucketed.Store.vacuum]] (redo marker carries the horizon; one-row
   // q167_meta records the as-of floor durably). Contracts:
   //  - serving at LATEST is unchanged by the vacuum (latest-wins is
   //    associative over the fold: base⊕d1⊕d2 = (base⊕d1)⊕d2);
   //  - as-of v ≥ horizon still serves exactly (base-as-of-horizon ⊕
   //    suffix ≤ v);
-  //  - as-of v < horizon FAILS LOUDLY ([[q167AsOf]]) — vacuumed versions
-  //    are unrecoverable by design, the Delta/Iceberg VACUUM contract.
+  //  - as-of v < horizon FAILS LOUDLY ([[Bucketed.Family.asOf]]) —
+  //    vacuumed versions are unrecoverable by design, the Delta/Iceberg
+  //    VACUUM contract.
   // Chain-length law (SCALING.md): post-vacuum delta mass = the
   // retention suffix only, bounded by the window, never total history.
 
@@ -1154,8 +1145,8 @@ object Dedup {
     * shared q120 artifact stays pristine — the q126 namespacing rule).
     */
   private[graft] def q167BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q167_labels_base",
-      s"$d/documents.parquet", q120LabelsArtifact(s, d), 8, Seq("doc_id"))
+    q167.store.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      q120LabelsArtifact(s, d))
 
   /** Spec counter: how many times the q167 delta chain was STAGED. */
   private[graft] val q167DeltaWrites =
@@ -1186,7 +1177,7 @@ object Dedup {
     val seen = q120Corpus(s, d).unionByName(fold0)
     val prefixAll = q120PrefixArtifact(s, d).unionByName(bprefix0)
     val p1 = batchPairs(seen, fold1, dfreq, prefixAll)
-    val d2 = incrementalSubLabels(latestWins(base, d1), p1)._1
+    val d2 = incrementalSubLabels(latestWins(base, d1, "doc_id"), p1)._1
       .withColumn("ver", lit(2L))
     (d1, d2)
   }
@@ -1221,53 +1212,18 @@ object Dedup {
     * the q126 namespacing rule).
     */
   private[graft] def q167DeltaArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q167_labels_delta",
-      s"$d/documents.parquet", {
-        q167DeltaWrites.incrementAndGet()
-        verChainStaged(s, d)
-      }, 8, Seq("doc_id"))
+    q167.store.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q167DeltaWrites.incrementAndGet()
+      verChainStaged(s, d)
+    }
 
-  private[graft] def q167Recover(s: SparkSession, d: String): Unit =
-    Bucketed.vacuumRecover(s, Bucketed.dbFor(d), "q167_labels_base",
-      "q167_labels_delta", "q167_vacuum_pending", "q167_meta", "ver",
-      8, Seq("doc_id"))
-
-  /** Run the vacuum at `horizon`: base ← latest-wins(base, vers ≤
-    * horizon), delta ← suffix, meta ← horizon — crash-safe via the
-    * horizon-carrying redo marker.
+  /** The versioned label store: base ← latest-wins(base, vers ≤
+    * horizon), delta ← suffix, meta ← horizon on each vacuum.
     */
-  private[graft] def q167Vacuum(s: SparkSession, d: String,
-      horizon: Long): Unit =
-    Bucketed.vacuumSwap(s, Bucketed.dbFor(d), "q167_labels_base",
-      "q167_labels_delta", "q167_vacuum_pending", "q167_meta",
-      latestWins(q167BaseArtifact(s, d),
-        q167DeltaArtifact(s, d).filter(col("ver") <= horizon)),
-      horizon, "ver", 8, Seq("doc_id"))
-
-  private[graft] def q167HorizonOf(s: SparkSession, d: String): Long =
-    Bucketed.vacuumHorizon(s, Bucketed.dbFor(d), "q167_meta")
-
-  /** Snapshot read AS-OF `v`. Below the vacuum horizon the store cannot
-    * reconstruct the state (the folded prefix is gone) — fail loudly
-    * instead of serving a silently-wrong newer snapshot.
-    */
-  private[graft] def q167AsOf(s: SparkSession, d: String, v: Long): DataFrame = {
-    q167Recover(s, d)
-    val h = q167HorizonOf(s, d)
-    require(v >= h,
-      s"as-of $v predates the q167 vacuum horizon $h — vacuumed versions " +
-        "are unrecoverable")
-    latestWins(q167BaseArtifact(s, d),
-      q167DeltaArtifact(s, d).filter(col("ver") <= v))
-  }
-
-  /** Serve at latest: recover, then latest-wins over base ∪ whatever of
-    * the chain retention kept.
-    */
-  private[graft] def q167Serve(s: SparkSession, d: String): DataFrame = {
-    q167Recover(s, d)
-    latestWins(q167BaseArtifact(s, d), q167DeltaArtifact(s, d))
-  }
+  private[graft] val q167 = Bucketed.Family(
+    Bucketed.Store("q167_labels_base", "q167_labels_delta",
+      "q167_vacuum_pending", 8, Seq("doc_id"), meta = Some("q167_meta")),
+    q167BaseArtifact, q167DeltaArtifact, latestWins(_, _, "doc_id"))
 
   // ---- q166b: STAGED time travel over a ver-PARTITIONED chain -------------
   //
@@ -1312,12 +1268,12 @@ object Dedup {
         // whole q166/q167 family), ver-partitioned for scan pruning
         val chain = verChainStaged(s, d)
         // Stage into a scratch dir and RENAME over the served path (the
-        // compactSwap _next/promote discipline): a concurrent reader
+        // store swap's _next/promote discipline): a concurrent reader
         // never observes a PARTIALLY-WRITTEN chain (the long rewrite
         // happens in _next); the delete->rename seam leaves a brief
         // ABSENT-dir window in which a reader fails loudly on a missing
         // path rather than silently reading half the data — the same
-        // contract as compactSwap's promote. rename's boolean is
+        // contract as the store swap's promote. rename's boolean is
         // checked: Hadoop FileSystems report several failure modes by
         // returning false, and memoizing a failed promote would serve
         // the absent path for the rest of the session.
@@ -1341,8 +1297,8 @@ object Dedup {
   //
   // q167 bounded the LABELS ver chain; the span-strip override chain
   // (q135/q136) still grew with fold history under only its full-truncate
-  // compaction closer (the q131/q132 cadence). Same [[Bucketed.vacuumSwap]]
-  // primitive, second call site: fold span override rows with ver ≤
+  // compaction closer (the q131/q132 cadence). Same [[Bucketed.Store]]
+  // vacuum, second versioned store: fold span override rows with ver ≤
   // horizon into the base (latest-span-wins as-of-horizon), RETAIN the
   // suffix, record the as-of floor durably in q170_meta, and fail loudly
   // on snapshot reads below it. Identical contracts to q167 — serving at
@@ -1357,8 +1313,8 @@ object Dedup {
     * stays pristine — the q126 namespacing rule).
     */
   private[graft] def q170BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q170_span_base",
-      s"$d/documents.parquet", q135BaseArtifact(s, d), 8, Seq("doc_id"))
+    q170.store.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      q135BaseArtifact(s, d))
 
   /** Spec counter: how many times the q170 delta chain was STAGED. */
   private[graft] val q170DeltaWrites =
@@ -1395,45 +1351,16 @@ object Dedup {
 
   /** The staged span override chain (ver 1 ∪ ver 2), write-once. */
   private[graft] def q170DeltaArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q170_span_delta",
-      s"$d/documents.parquet", {
-        q170DeltaWrites.incrementAndGet()
-        spanVerChainFolds(s, d)
-      }, 8, Seq("doc_id"))
+    q170.store.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q170DeltaWrites.incrementAndGet()
+      spanVerChainFolds(s, d)
+    }
 
-  private[graft] def q170Recover(s: SparkSession, d: String): Unit =
-    Bucketed.vacuumRecover(s, Bucketed.dbFor(d), "q170_span_base",
-      "q170_span_delta", "q170_vacuum_pending", "q170_meta", "ver",
-      8, Seq("doc_id"))
-
-  private[graft] def q170Vacuum(s: SparkSession, d: String,
-      horizon: Long): Unit =
-    Bucketed.vacuumSwap(s, Bucketed.dbFor(d), "q170_span_base",
-      "q170_span_delta", "q170_vacuum_pending", "q170_meta",
-      latestSpanWins(q170BaseArtifact(s, d),
-        q170DeltaArtifact(s, d).filter(col("ver") <= horizon)),
-      horizon, "ver", 8, Seq("doc_id"))
-
-  private[graft] def q170HorizonOf(s: SparkSession, d: String): Long =
-    Bucketed.vacuumHorizon(s, Bucketed.dbFor(d), "q170_meta")
-
-  /** Snapshot read AS-OF `v` — loud failure below the vacuum floor
-    * (vacuumed span versions are unrecoverable by design).
-    */
-  private[graft] def q170AsOf(s: SparkSession, d: String, v: Long): DataFrame = {
-    q170Recover(s, d)
-    val h = q170HorizonOf(s, d)
-    require(v >= h,
-      s"as-of $v predates the q170 vacuum horizon $h — vacuumed versions " +
-        "are unrecoverable")
-    latestSpanWins(q170BaseArtifact(s, d),
-      q170DeltaArtifact(s, d).filter(col("ver") <= v))
-  }
-
-  private[graft] def q170Serve(s: SparkSession, d: String): DataFrame = {
-    q170Recover(s, d)
-    latestSpanWins(q170BaseArtifact(s, d), q170DeltaArtifact(s, d))
-  }
+  /** The versioned span store, merged latest-wins per doc. */
+  private[graft] val q170 = Bucketed.Family(
+    Bucketed.Store("q170_span_base", "q170_span_delta",
+      "q170_vacuum_pending", 8, Seq("doc_id"), meta = Some("q170_meta")),
+    q170BaseArtifact, q170DeltaArtifact, latestWins(_, _, "doc_id"))
 
   // ---- q130: posting-store COMPACTION ------------------------------------
   //
@@ -1475,8 +1402,8 @@ object Dedup {
     * `q120_corpus_prefix` must stay pristine under q120/q124 readers).
     */
   private[graft] def q130BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q130_prefix_base",
-      s"$d/documents.parquet", q120PrefixArtifact(s, d), 16, Seq("sg"))
+    q130.store.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      q120PrefixArtifact(s, d))
 
   /** Batch A's posting rows under the corpus-frozen order — the
     * accumulated delta a continuous deployment would have appended.
@@ -1486,20 +1413,16 @@ object Dedup {
   private[graft] def q130DeltaArtifact(s: SparkSession, d: String): DataFrame = {
     q130BaseArtifact(s, d)
     val rows = prefixRowsOf(q130BatchA(s, d), q120DfArtifact(s, d))
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q130_prefix_delta",
-      s"$d/documents.parquet",
-      { q130DeltaWrites.incrementAndGet(); rows }, 16, Seq("sg"))
+    q130.store.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q130DeltaWrites.incrementAndGet(); rows
+    }
   }
 
-  private[graft] def q130Compact(s: SparkSession, d: String): Unit =
-    Bucketed.compactSwap(s, Bucketed.dbFor(d), "q130_prefix_base",
-      "q130_prefix_delta", "q130_compact_pending",
-      q130BaseArtifact(s, d).unionByName(q130DeltaArtifact(s, d)),
-      16, Seq("sg"))
-
-  private[graft] def q130CompactRecover(s: SparkSession, d: String): Unit =
-    Bucketed.recoverPending(s, Bucketed.dbFor(d), "q130_prefix_base",
-      "q130_prefix_delta", "q130_compact_pending", 16, Seq("sg"))
+  /** The posting store: postings merge verbatim (append-union). */
+  private[graft] val q130 = Bucketed.Family(
+    Bucketed.Store("q130_prefix_base", "q130_prefix_delta",
+      "q130_compact_pending", 16, Seq("sg")),
+    q130BaseArtifact, q130DeltaArtifact, _.unionByName(_))
 
   // ---- q131: compaction TRIGGER policy ------------------------------------
   //
@@ -1630,54 +1553,52 @@ object Dedup {
   // algebra (the same merges their dedicated compaction queries prove
   // crash-safe): labels = latest-wins override fold (q126), postings =
   // verbatim append-union under the frozen shingle order (q130),
-  // pq_codes = append-union of immutable code rows (q122Compact),
+  // pq_codes = append-union of immutable code rows (q122),
   // flag_store = append-union with per-doc dedup (q128b).
+
+  /** One family the tick maintains: the name its status row carries,
+    * its threshold, its working store, the snapshots a restaging tick
+    * rebuilds that store from, and the merge its compaction folds with.
+    */
+  private[graft] final case class TickFamily(artifact: String, thrPct: Int,
+      store: Bucketed.Store, base: DataFrame, delta: DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame)
 
   /** One tick over explicit stores: recover any crashed previous tick,
     * decide from one status scan, compact the due families, re-scan. The
     * spec drives this directly with synthetic stores (one due, one not);
-    * the q132 query feeds it the five real staged families. `fams` rows
-    * are (name, threshold_pct, buckets, bucket keys, base df, delta df,
-    * merge). The decision frame is collected driver-side — catalog DDL
-    * (swap/truncate) cannot be issued from inside a dataframe, and the
-    * frame is one row per ARTIFACT FAMILY, never data-sized.
+    * the q132 query feeds it the real staged families. The decision
+    * frame is collected driver-side — catalog DDL (swap/truncate) cannot
+    * be issued from inside a dataframe, and the frame is one row per
+    * ARTIFACT FAMILY, never data-sized.
     *
     * `restage = true` (the CORRECTNESS-gate mode) rebuilds every
-    * family's working tables from the passed base/delta frames first, so
-    * a re-invocation is deterministic under bench/verify re-runs. A
+    * family's working tables from its snapshots first, so a
+    * re-invocation is deterministic under bench/verify re-runs. A
     * production deployment ticking its LIVE stores — where the fold jobs
     * own the deltas and a base-sized rewrite per tick would defeat the
     * threshold's whole point — passes `restage = false`: the tick then
     * only recovers, decides, and compacts in place.
     */
   private[graft] def maintenanceTick(s: SparkSession, db: String,
-      prefix: String,
-      fams: Seq[(String, Int, Int, Seq[String], DataFrame, DataFrame,
-        (DataFrame, DataFrame) => DataFrame)],
-      restage: Boolean = true): DataFrame = {
-    def baseT(n: String) = s"${prefix}_${n}_base"
-    def deltaT(n: String) = s"${prefix}_${n}_delta"
-    def marker(n: String) = s"${prefix}_${n}_pending"
+      fams: Seq[TickFamily], restage: Boolean = true): DataFrame = {
+    def tables(f: TickFamily) =
+      (s.table(s"$db.${f.store.base}"), s.table(s"$db.${f.store.delta}"))
     // Recovery FIRST: a marker stranded by a tick killed mid-swap would
     // otherwise replay against the fresh rewrites below (truncating a
-    // just-staged delta); after recovery the marker is gone and
-    // compactSwap's internal recover is a no-op.
+    // just-staged delta); after recovery the marker is gone and the
+    // compaction's own recovery is a no-op.
     // The families are INDEPENDENT stores (disjoint tables, own locks),
     // so their recover+restage jobs overlap instead of serializing one
     // straggler tail per family (guide §2.6): Spark schedules concurrent
     // jobs FIFO and back-fills idle cores. Failures propagate via get().
-    Shared.inParallel(fams.map {
-      case (n, _, bk, keys, base, delta, _) => () => {
-        Bucketed.recoverPending(s, db, baseT(n), deltaT(n), marker(n),
-          bk, keys)
-        if (restage) {
-          Bucketed.rewriteBucketed(s, db, baseT(n), base, bk, keys)
-          Bucketed.rewriteBucketed(s, db, deltaT(n), delta, bk, keys)
-        }
-      }
-    })
-    val before = compactDueOf(fams.map { case (n, thr, _, _, _, _, _) =>
-      (n, s.table(s"$db.${baseT(n)}"), s.table(s"$db.${deltaT(n)}"), thr)
+    Shared.inParallel(fams.map(f => () => {
+      f.store.recover(s, db)
+      if (restage) f.store.restage(s, db, f.base, f.delta)
+    }))
+    val before = compactDueOf(fams.map { f =>
+      val (b, del) = tables(f)
+      (f.artifact, b, del, f.thrPct)
     })
     // Materialize the decision before mutating the tables it reads.
     val beforeRows = before.collect()
@@ -1687,60 +1608,57 @@ object Dedup {
       .map(_.getAs[String]("artifact")).toSet
     // Due compactions are per-family swaps of disjoint table pairs —
     // same overlap argument as the restage above.
-    Shared.inParallel(fams.collect {
-      case (n, _, bk, keys, _, _, merge) if due(n) => () => {
-        Bucketed.compactSwap(s, db, baseT(n), deltaT(n), marker(n),
-          merge(s.table(s"$db.${baseT(n)}"), s.table(s"$db.${deltaT(n)}")),
-          bk, keys)
-      }
-    })
-    val after = fams.map { case (n, _, _, _, _, _, _) =>
-      s.table(s"$db.${baseT(n)}").agg(count(lit(1)).as("base_n_after"))
-        .crossJoin(s.table(s"$db.${deltaT(n)}")
-          .agg(count(lit(1)).as("delta_n_after")))
-        .select(lit(n).as("artifact"), col("base_n_after"),
+    Shared.inParallel(fams.filter(f => due(f.artifact)).map(f => () =>
+      f.store.compact(s, db, f.merge.tupled(tables(f)))))
+    val after = fams.map { f =>
+      val (b, del) = tables(f)
+      b.agg(count(lit(1)).as("base_n_after"))
+        .crossJoin(del.agg(count(lit(1)).as("delta_n_after")))
+        .select(lit(f.artifact).as("artifact"), col("base_n_after"),
           col("delta_n_after"))
     }.reduce(_.unionByName(_))
     beforeDf.join(after, Seq("artifact"))
   }
 
-  /** The four real staged families, each paired with the merge its
-    * dedicated compaction query (q126/q130/q122Compact/q128b) proves
-    * crash-safe. Dependencies (the pristine snapshots q131 stages) are
-    * resolved here, BEFORE any q132 lock (the q126 ordering rule).
+  /** The real staged families, each paired with the merge its dedicated
+    * compaction query (q126/q130/q122/q128b/q155b) proves crash-safe,
+    * each in its own `q132_<artifact>` store. Dependencies (the pristine
+    * snapshots q131 stages) are resolved here, BEFORE any q132 lock (the
+    * q126 ordering rule).
     */
   private[graft] def q132Families(s: SparkSession, d: String)
-      : Seq[(String, Int, Int, Seq[String], DataFrame, DataFrame,
-        (DataFrame, DataFrame) => DataFrame)] = {
+      : Seq[TickFamily] = {
     val thr = CompactThresholds.toMap
+    def fam(n: String, buckets: Int, keys: Seq[String], base: DataFrame,
+        delta: DataFrame, merge: (DataFrame, DataFrame) => DataFrame) =
+      TickFamily(n, thr(n), Bucketed.Store.of(s"q132_$n", buckets, keys),
+        base, delta, merge)
     Seq(
-      ("labels_overrides", thr("labels_overrides"), 8, Seq("doc_id"),
+      fam("labels_overrides", 8, Seq("doc_id"),
         q120LabelsArtifact(s, d), q131LabelsDeltaArtifact(s, d),
-        (b: DataFrame, del: DataFrame) => latestWins(b, del)),
-      ("posting_store", thr("posting_store"), 16, Seq("sg"),
+        latestWins(_, _, "doc_id")),
+      fam("posting_store", 16, Seq("sg"),
         q120PrefixArtifact(s, d), q131PrefixDeltaArtifact(s, d),
-        (b: DataFrame, del: DataFrame) => b.unionByName(del)),
-      ("pq_codes", thr("pq_codes"), 8, Seq("cell"),
+        _.unionByName(_)),
+      fam("pq_codes", 8, Seq("cell"),
         Similarity.q122BaseArtifact(s, d), Similarity.q122DeltaArtifact(s, d),
-        (b: DataFrame, del: DataFrame) => b.unionByName(del)),
-      ("flag_store", thr("flag_store"), 8, Seq("doc_id"),
+        _.unionByName(_)),
+      fam("flag_store", 8, Seq("doc_id"),
         Pipeline.q127DocflagsArtifact(s, d), q131FlagsDeltaArtifact(s, d),
-        (b: DataFrame, del: DataFrame) =>
-          b.unionByName(del.drop("ver").dropDuplicates("doc_id"))),
-      ("span_overrides", thr("span_overrides"), 8, Seq("doc_id"),
+        (b, del) => b.unionByName(del.drop("ver").dropDuplicates("doc_id"))),
+      // latest-wins PER DOC: a multi-fold delta holds several versions
+      // of a recomputed doc and only the newest may survive the merge
+      // (q131's staged delta is single-fold, but the merge algebra
+      // must match the store's documented contract, not the fixture)
+      fam("span_overrides", 8, Seq("doc_id"),
         q135BaseArtifact(s, d), q131SpanDeltaArtifact(s, d),
-        // latest-wins PER DOC: a multi-fold delta holds several versions
-        // of a recomputed doc and only the newest may survive the merge
-        // (q131's staged delta is single-fold, but the merge algebra
-        // must match the store's documented contract, not the fixture)
-        (b: DataFrame, del: DataFrame) => latestSpanWins(b, del)),
+        latestWins(_, _, "doc_id")),
       // SUBTRACTIVE family (q155): compaction REMOVES the delta's rows
       // from the base — the merge q155b proves crash-safe (anti-joining
       // already-removed ids is a no-op, so the marker window is benign)
-      ("tombstone_store", thr("tombstone_store"), 8, Seq("cell"),
+      fam("tombstone_store", 8, Seq("cell"),
         Similarity.pqCodesArtifact(s, d), q131TombDeltaArtifact(s, d),
-        (b: DataFrame, del: DataFrame) =>
-          b.join(del, Seq("cell", "vec_id"), "left_anti")))
+        _.join(_, Seq("cell", "vec_id"), "left_anti")))
   }
 
   // ---- q133/q135 shared span-strip stages ----------------------------------
@@ -1818,7 +1736,8 @@ object Dedup {
   // frozen base via a broadcast anti-join of the touched-id set — the
   // q124 latest-wins regime, with the same compaction story (the
   // recomputed rows are the override delta a continuous deployment would
-  // append; `Bucketed.compactSwap` folds them down on the q131 cadence).
+  // append; a `Bucketed.Store` compaction folds them down on the q131
+  // cadence).
   //
   // Frozen corpus state (write-once, one corpus window pass total):
   //  - q135_postings (wh, doc_id) DISTINCT, bucketed by wh — the probe
@@ -2079,27 +1998,6 @@ object Dedup {
     (spanStripRows(tsd, spans), tIds)
   }
 
-  /** Latest-wins serving view for versioned span override rows — the
-    * q124 pattern applied to q135's output schema: base minus any
-    * overridden doc, plus each delta doc's newest row (one row per doc
-    * per fold, so the window is tie-free).
-    */
-  private[graft] def latestSpanWins(base: DataFrame,
-      delta: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cols = Seq("doc_id", "n_tokens", "n_stripped_tokens", "kept_md5")
-      .map(col)
-    val latest = delta
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("ver").desc)))
-      .filter(col("_rn") === 1)
-      .select(cols: _*)
-    base.join(broadcast(delta.select(col("doc_id")).distinct()),
-        Seq("doc_id"), "left_anti")
-      .select(cols: _*)
-      .unionByName(latest)
-  }
-
   /** The accumulated span-override store after the batch tenth is fully
     * folded — q135's recomputed rows, staged under q131's own name (the
     * q131 convention: never truncated by a compaction query, so status
@@ -2163,31 +2061,17 @@ object Dedup {
     q163BaseArtifact(s, d); ()
   }
 
-  /** Stage the q167 chain and run the vacuum to its steady state. */
-  private[graft] def q167Staged(s: SparkSession, d: String): Unit = {
-    q167BaseArtifact(s, d); q167DeltaArtifact(s, d)
-    q167Recover(s, d)
-    if (q167DeltaArtifact(s, d).filter(col("ver") <= Q167Horizon)
-        .limit(1).count() > 0) q167Vacuum(s, d, Q167Horizon)
-  }
-
-  /** Stage the q170 span chain and run the vacuum to its steady state. */
-  private[graft] def q170Staged(s: SparkSession, d: String): Unit = {
-    q170BaseArtifact(s, d); q170DeltaArtifact(s, d)
-    q170Recover(s, d)
-    if (q170DeltaArtifact(s, d).filter(col("ver") <= Q170Horizon)
-        .limit(1).count() > 0) q170Vacuum(s, d, Q170Horizon)
-  }
-
-  /** Stage the q130 posting store and run its compaction once. */
-  private[graft] def q130Staged(s: SparkSession, d: String): Unit = {
-    if (q130DeltaArtifact(s, d).limit(1).count() > 0) q130Compact(s, d)
-    else q130CompactRecover(s, d)
-  }
-
-  /** Stage the q126 override store and run its compaction once. */
+  /** Stage each chain and run its vacuum (q167, q170) or compaction
+    * (q130, q126) to steady state.
+    */
+  private[graft] def q167Staged(s: SparkSession, d: String): Unit =
+    q167.settle(s, d, Some(Q167Horizon))
+  private[graft] def q170Staged(s: SparkSession, d: String): Unit =
+    q170.settle(s, d, Some(Q170Horizon))
+  private[graft] def q130Staged(s: SparkSession, d: String): Unit =
+    q130.settle(s, d)
   private[graft] def q126Staged(s: SparkSession, d: String): Unit =
-    if (q126DeltaArtifact(s, d).limit(1).count() > 0) q126Compact(s, d)
+    q126.settle(s, d)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q131 — the compaction trigger policy as data: per-artifact
@@ -2221,7 +2105,7 @@ object Dedup {
     // re-stages its working copies from the pristine snapshots each run,
     // so it is deterministic under bench/verify re-invocation.
     "q132_maintenance_tick" -> ((s, d) =>
-      maintenanceTick(s, Bucketed.dbFor(d), "q132", q132Families(s, d))
+      maintenanceTick(s, Bucketed.dbFor(d), q132Families(s, d))
         .orderBy(col("artifact"))),
     // q126 — override-chain compaction under the CORRECTNESS gate: stage
     // the q120 fold as an override delta, compact it into the base (when
@@ -2230,11 +2114,8 @@ object Dedup {
     // closure over corpus+batch, so BOTH maintenance steps — the fold and
     // the compaction swap — are hash-proven invisible in the result.
     "q126_labels_compact" -> ((s, d) => {
-      // no leading recover: compact and serve each self-recover; a
-      // pending-marker delta read here at worst triggers one redundant
-      // (idempotent) compaction after a crash
-      if (q126DeltaArtifact(s, d).limit(1).count() > 0) q126Compact(s, d)
-      q126Serve(s, d).orderBy(col("doc_id"))
+      q126.settle(s, d)
+      q126.asOf(s, d).orderBy(col("doc_id"))
     }),
 
     // q130 — posting-store compaction under the CORRECTNESS gate: batch
@@ -2245,8 +2126,7 @@ object Dedup {
     // closure over corpus+A+B, so the oracle hash-proves the compaction
     // AND the fold chaining at every tier.
     "q130_index_compact" -> ((s, d) => {
-      if (q130DeltaArtifact(s, d).limit(1).count() > 0) q130Compact(s, d)
-      else q130CompactRecover(s, d) // truncate-owed marker with empty delta
+      q130.settle(s, d)
       val compacted = q130BaseArtifact(s, d)
       val corpusDf = q120DfArtifact(s, d)
       val corpus = q120Corpus(s, d)
@@ -2334,7 +2214,7 @@ object Dedup {
     // VacuumSpec/RetrievalTombstoneSpec.
     "q166_labels_timetravel" -> ((s, d) => {
       val base = q120LabelsArtifact(s, d)
-      latestWins(base, verChainStaged(s, d).filter(col("ver") <= 1))
+      latestWins(base, verChainStaged(s, d).filter(col("ver") <= 1), "doc_id")
         .orderBy(col("doc_id"))
     }),
 
@@ -2345,7 +2225,8 @@ object Dedup {
     // history. Rows identical to q166; one shared oracle.
     "q166b_timetravel_staged" -> ((s, d) => {
       val chain = s.read.parquet(q166bChainDir(s, d))
-      latestWins(q120LabelsArtifact(s, d), chain.filter(col("ver") <= 1))
+      latestWins(q120LabelsArtifact(s, d), chain.filter(col("ver") <= 1),
+        "doc_id")
         .orderBy(col("doc_id"))
     }),
 
@@ -2357,11 +2238,8 @@ object Dedup {
     // mid-swap (the serve path rolls it forward first). Chain GC is the
     // point: post-vacuum the delta holds only the retention suffix.
     "q167_labels_vacuum" -> ((s, d) => {
-      q167Recover(s, d)
-      if (q167DeltaArtifact(s, d).filter(col("ver") <= Q167Horizon)
-          .limit(1).count() > 0)
-        q167Vacuum(s, d, Q167Horizon)
-      q167Serve(s, d).orderBy(col("doc_id"))
+      q167.settle(s, d, Some(Q167Horizon))
+      q167.asOf(s, d).orderBy(col("doc_id"))
     }),
 
     // q170 — span-chain RETENTION VACUUM (see the q170 section comment):
@@ -2372,11 +2250,8 @@ object Dedup {
     // the swap, and any mid-swap crash replay are all hash-proven
     // invisible at latest.
     "q170_span_vacuum" -> ((s, d) => {
-      q170Recover(s, d)
-      if (q170DeltaArtifact(s, d).filter(col("ver") <= Q170Horizon)
-          .limit(1).count() > 0)
-        q170Vacuum(s, d, Q170Horizon)
-      q170Serve(s, d).orderBy(col("doc_id"))
+      q170.settle(s, d, Some(Q170Horizon))
+      q170.asOf(s, d).orderBy(col("doc_id"))
     }),
 
     // q163 — span-store DELETION: the retraction verb (see the q163
@@ -2453,8 +2328,8 @@ object Dedup {
             .join(broadcast(tombs), Seq("doc_id"), "left_anti")
         }, col("doc_id")),
         () => {
-          Similarity.q155CompactRecover(s, d) // owed swap before counting
-          audit("pq_codes", Similarity.q155ServeCodes(s, d), col("vec_id"))
+          // recovers any owed swap before counting
+          audit("pq_codes", Similarity.q155.asOf(s, d), col("vec_id"))
         },
         // span store: q163's deletion-folded serving view (one row per
         // surviving doc; tombstoned rows must have left with their docs)
@@ -2547,9 +2422,9 @@ object Dedup {
     }),
 
     // Q73 — dup-cluster formation: connected components (hook +
-    // pointer-doubling shortcut, O(log diameter) rounds, throws if
-    // unconverged — see [[connectedComponents]]) over the verified
-    // near-dup pair graph.
+    // pointer-doubling shortcut, throws if unconverged — see
+    // [[connectedComponents]] for its round-count limit) over the
+    // verified near-dup pair graph.
     "q73_dup_clusters" -> ((s, d) => {
       val pairs = jaccardPairs(s, d)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))

@@ -421,7 +421,7 @@ object Pipeline {
 
   // ---- q171: RETENTION VACUUM over the scorecard ver chain -----------------
   //
-  // The third vacuumSwap call site (labels q167, spans q170): the
+  // The third versioned store (labels q167, spans q170): the
   // versioned scorecard chain q128 grows gets the retention verb — fold
   // vers ≤ horizon into the base (latest-wins per source as-of-horizon),
   // retain the suffix, record the as-of floor durably, fail loudly on
@@ -442,66 +442,25 @@ object Pipeline {
     * it; q127's stays pristine — the q126 namespacing rule).
     */
   private[graft] def q171BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q171_sc_base",
-      s"$d/documents.parquet", q127BaseArtifact(s, d), 1, Seq("source"))
+    q171.store.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      q127BaseArtifact(s, d))
 
   /** The staged scorecard override chain (vers 1..3), write-once. */
   private[graft] def q171DeltaArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q171_sc_delta",
-      s"$d/documents.parquet", {
-        q171DeltaWrites.incrementAndGet()
-        scChainStaged(s, d)._1
-      }, 1, Seq("source"))
+    q171.store.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q171DeltaWrites.incrementAndGet()
+      scChainStaged(s, d)._1
+    }
 
-  /** Latest-wins serving view for the versioned scorecard rows — the
-    * latestSpanWins shape on the source key: base minus any overridden
-    * source, plus each delta source's newest row. Join-shaped (never a
-    * window above a union that includes a bucketed scan — the pinned
-    * Spark 4.1 hazard q128b's compact body documents).
+  /** The versioned scorecard store, merged latest-wins per source — a
+    * join-shaped merge (never a window above a union that includes a
+    * bucketed scan: the pinned Spark 4.1 hazard q128b's compact body
+    * documents).
     */
-  private[graft] def latestScWins(base: DataFrame,
-      delta: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val latest = delta
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("ver").desc)))
-      .filter(col("_rn") === 1).drop("_rn", "ver")
-    base.join(broadcast(delta.select(col("source")).distinct()),
-        Seq("source"), "left_anti")
-      .unionByName(latest)
-  }
-
-  private[graft] def q171Recover(s: SparkSession, d: String): Unit =
-    Bucketed.vacuumRecover(s, Bucketed.dbFor(d), "q171_sc_base",
-      "q171_sc_delta", "q171_vacuum_pending", "q171_meta", "ver",
-      1, Seq("source"))
-
-  private[graft] def q171Vacuum(s: SparkSession, d: String,
-      horizon: Long): Unit =
-    Bucketed.vacuumSwap(s, Bucketed.dbFor(d), "q171_sc_base",
-      "q171_sc_delta", "q171_vacuum_pending", "q171_meta",
-      latestScWins(q171BaseArtifact(s, d),
-        q171DeltaArtifact(s, d).filter(col("ver") <= horizon)),
-      horizon, "ver", 1, Seq("source"))
-
-  private[graft] def q171HorizonOf(s: SparkSession, d: String): Long =
-    Bucketed.vacuumHorizon(s, Bucketed.dbFor(d), "q171_meta")
-
-  /** Snapshot read AS-OF `v` — loud failure below the vacuum floor. */
-  private[graft] def q171AsOf(s: SparkSession, d: String, v: Long): DataFrame = {
-    q171Recover(s, d)
-    val h = q171HorizonOf(s, d)
-    require(v >= h,
-      s"as-of $v predates the q171 vacuum horizon $h — vacuumed versions " +
-        "are unrecoverable")
-    latestScWins(q171BaseArtifact(s, d),
-      q171DeltaArtifact(s, d).filter(col("ver") <= v))
-  }
-
-  private[graft] def q171Serve(s: SparkSession, d: String): DataFrame = {
-    q171Recover(s, d)
-    latestScWins(q171BaseArtifact(s, d), q171DeltaArtifact(s, d))
-  }
+  private[graft] val q171 = Bucketed.Family(
+    Bucketed.Store("q171_sc_base", "q171_sc_delta", "q171_vacuum_pending",
+      1, Seq("source"), meta = Some("q171_meta")),
+    q171BaseArtifact, q171DeltaArtifact, Dedup.latestWins(_, _, "source"))
 
   /** Greedy sequence packing of (source, doc_id, tokens) rows into
     * 2048-token context windows by doc_id order — the q78 body, shared
@@ -550,6 +509,12 @@ object Pipeline {
       call_function("bloom_might_contain", lit(bos.toByteArray), col("k")))
   }
 
+  /** q128b's two compaction closers: the per-doc flag store and the
+    * versioned scorecard chain.
+    */
+  private val q128bFlags = Bucketed.Store.of("q128b_flags", 8, Seq("doc_id"))
+  private val q128bSc = Bucketed.Store.of("q128b_sc", 1, Seq("source"))
+
   // ---- bench artifact staging (round-13 verdict #1; see Dedup's section) --
 
   /** Stage the q127 frozen scorecard stores (docflags + base). */
@@ -558,12 +523,8 @@ object Pipeline {
   }
 
   /** Stage the q171 scorecard chain and run the vacuum to steady state. */
-  private[graft] def q171Staged(s: SparkSession, d: String): Unit = {
-    q171BaseArtifact(s, d); q171DeltaArtifact(s, d)
-    q171Recover(s, d)
-    if (q171DeltaArtifact(s, d).filter(col("ver") <= Q171Horizon)
-        .limit(1).count() > 0) q171Vacuum(s, d, Q171Horizon)
-  }
+  private[graft] def q171Staged(s: SparkSession, d: String): Unit =
+    q171.settle(s, d, Some(Q171Horizon))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Q22 — semi-structured access: JSON path, map element, array element.
@@ -973,11 +934,8 @@ object Pipeline {
     // folded scorecard, so fold chain + swap + crash replay are
     // hash-proven invisible at latest.
     "q171_scorecard_vacuum" -> ((s, d) => {
-      q171Recover(s, d)
-      if (q171DeltaArtifact(s, d).filter(col("ver") <= Q171Horizon)
-          .limit(1).count() > 0)
-        q171Vacuum(s, d, Q171Horizon)
-      q171Serve(s, d)
+      q171.settle(s, d, Some(Q171Horizon))
+      q171.asOf(s, d)
         .withColumn("keep_rate", round(col("n_train") / col("n_docs"), 4))
         .orderBy(col("source"))
     }),
@@ -988,7 +946,7 @@ object Pipeline {
     // body replayed in batch form (3 ordered folds, same pairs/labels/
     // corrections/merge math — the streaming run adds only micro-batch
     // machinery, not different algebra); then both stores land-then-
-    // compact through the shared [[Bucketed.compactSwap]]:
+    // compact through the shared [[Bucketed.Store]] swap:
     //  - flag store: append-union merge, delta deduplicated by doc_id
     //    first (redelivered flag rows are byte-identical per-doc facts,
     //    so dedup-then-union is exact — the q130 posting argument);
@@ -1006,21 +964,13 @@ object Pipeline {
       // arc shared with q171, derivation priced as ingest
       val (scChain, flagsChain) = scChainStaged(s, d)
       val db = Bucketed.dbFor(d)
-      Bucketed.rewriteBucketed(s, db, "q128b_flags_base",
-        corpusFlags.withColumn("ver", lit(0L)), 8, Seq("doc_id"))
-      Bucketed.rewriteBucketed(s, db, "q128b_flags_delta",
-        flagsChain, 8, Seq("doc_id"))
-      Bucketed.compactSwap(s, db, "q128b_flags_base", "q128b_flags_delta",
-        "q128b_flags_pending",
+      q128bFlags.restage(s, db, corpusFlags.withColumn("ver", lit(0L)),
+        flagsChain)
+      q128bFlags.compact(s, db,
         s.table(s"$db.q128b_flags_base").unionByName(
-          s.table(s"$db.q128b_flags_delta").dropDuplicates("doc_id")),
-        8, Seq("doc_id"))
-      Bucketed.rewriteBucketed(s, db, "q128b_sc_base",
-        scBase0.withColumn("ver", lit(0L)), 1, Seq("source"))
-      Bucketed.rewriteBucketed(s, db, "q128b_sc_delta",
-        scChain, 1, Seq("source"))
-      Bucketed.compactSwap(s, db, "q128b_sc_base", "q128b_sc_delta",
-        "q128b_sc_pending",
+          s.table(s"$db.q128b_flags_delta").dropDuplicates("doc_id")))
+      q128bSc.restage(s, db, scBase0.withColumn("ver", lit(0L)), scChain)
+      q128bSc.compact(s, db,
         // explicit repartition before the window: the union of two
         // 1-bucket tables otherwise runs the per-source window on each
         // side's scan partition separately (no exchange — each side
@@ -1033,8 +983,7 @@ object Pipeline {
           .repartition(col("source"))
           .withColumn("_rn", row_number().over(
             Window.partitionBy(col("source")).orderBy(col("ver").desc)))
-          .filter(col("_rn") === 1).drop("_rn"),
-        1, Seq("source"))
+          .filter(col("_rn") === 1).drop("_rn"))
       // serve from the compacted bases alone — no version filtering, no
       // delta union, one bucketed scan
       s.table(s"$db.q128b_sc_base").drop("ver")

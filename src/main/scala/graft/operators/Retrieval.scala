@@ -401,8 +401,8 @@ object Retrieval {
   // The closer that completes the family's LSM arc (insert q161c /
   // delete q165d / continuous q161d / COMPACT here): fold the batch
   // leaf into the base and scrub the landed tombstones in ONE
-  // marker-guarded base rewrite ([[Bucketed.compactSwap]] — the batch
-  // leaf is the truncated delta), then GC the tombstone side table.
+  // marker-guarded base rewrite (a [[Bucketed.Store]] compaction — the
+  // batch leaf is the truncated delta), then GC the tombstone side table.
   // The tombstone truncate runs AFTER the swap and needs no marker of
   // its own: post-swap the landed ids are already anti-joined out of
   // the base, so re-anti-joining them is a no-op (the q155 latest-wins
@@ -416,17 +416,22 @@ object Retrieval {
   private[graft] val q161eWrites =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The positional store: base and batch leaf. Its compaction merge
+    * also reads the tombstones, so it is driven by [[q161eCompact]]
+    * rather than a [[Bucketed.Family]].
+    */
+  private[graft] val q161eStore = Bucketed.Store("q161e_pos_base",
+    "q161e_pos_batch", "q161e_compact_pending", 8, Seq("term"))
+
   private[graft] def q161eBase(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q161e_pos_base",
-      s"$d/documents.parquet", {
-        q161eWrites.incrementAndGet()
-        posIdx(s, d, "base", q157Corpus(s, d))
-      }, 8, Seq("term"))
+    q161eStore.stageBase(s, Bucketed.dbFor(d), s"$d/documents.parquet") {
+      q161eWrites.incrementAndGet()
+      posIdx(s, d, "base", q157Corpus(s, d))
+    }
 
   private[graft] def q161eBatch(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q161e_pos_batch",
-      s"$d/documents.parquet", posIdx(s, d, "batch", q157Batch(s, d)),
-      8, Seq("term"))
+    q161eStore.stageDelta(s, Bucketed.dbFor(d), s"$d/documents.parquet")(
+      posIdx(s, d, "batch", q157Batch(s, d)))
 
   private[graft] def q161eTombs(s: SparkSession, d: String): DataFrame =
     Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q161e_tombs",
@@ -441,18 +446,20 @@ object Retrieval {
     q161eBase(s, d).unionByName(q161eBatch(s, d))
       .join(broadcast(q161eTombs(s, d)), Seq("doc_id"), "left_anti")
 
-  private[graft] def q161eRecover(s: SparkSession, d: String): Unit =
-    Bucketed.recoverPending(s, Bucketed.dbFor(d), "q161e_pos_base",
-      "q161e_pos_batch", "q161e_compact_pending", 8, Seq("term"))
-
+  /** Recover, then — when the batch leaf or the tombstone store holds
+    * anything — fold both into the base and GC the tombstones.
+    */
   private[graft] def q161eCompact(s: SparkSession, d: String): Unit = {
     val db = Bucketed.dbFor(d)
-    Bucketed.compactSwap(s, db, "q161e_pos_base", "q161e_pos_batch",
-      "q161e_compact_pending", q161eServeFrame(s, d), 8, Seq("term"))
-    // tombstone-store GC (no marker — see the section comment)
-    Bucketed.rewriteBucketed(s, db, "q161e_tombs",
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        s.table(s"$db.q161e_tombs").schema), 8, Seq("doc_id"))
+    q161eStore.recover(s, db)
+    if (q161eBatch(s, d).limit(1).count() > 0 ||
+        q161eTombs(s, d).limit(1).count() > 0) {
+      q161eStore.compact(s, db, q161eServeFrame(s, d))
+      // tombstone-store GC (no marker — see the section comment)
+      Bucketed.rewriteBucketed(s, db, "q161e_tombs",
+        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          s.table(s"$db.q161e_tombs").schema), 8, Seq("doc_id"))
+    }
   }
 
   /** The q161 anchor-count body over ANY positional posting frame. */
@@ -557,12 +564,8 @@ object Retrieval {
   /** Stage the q161e store copies and run the compaction to steady
     * state (one-shot transition — see Dedup's staging section).
     */
-  private[graft] def q161eStaged(s: SparkSession, d: String): Unit = {
-    q161eRecover(s, d)
-    if (q161eBatch(s, d).limit(1).count() > 0 ||
-        q161eTombs(s, d).limit(1).count() > 0)
-      q161eCompact(s, d)
-  }
+  private[graft] def q161eStaged(s: SparkSession, d: String): Unit =
+    q161eCompact(s, d)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // q161 — PHRASE MATCH: exact consecutive-token phrases over a
@@ -642,10 +645,7 @@ object Retrieval {
     // the SURVIVORS — identical rows before, during (any crash state),
     // and after the compaction, which is what the hash proves.
     "q161e_pos_compact" -> ((s, d) => {
-      q161eRecover(s, d)
-      if (q161eBatch(s, d).limit(1).count() > 0 ||
-          q161eTombs(s, d).limit(1).count() > 0)
-        q161eCompact(s, d)
+      q161eCompact(s, d)
       phraseMatchOver(s, q161eServeFrame(s, d))
     }),
 

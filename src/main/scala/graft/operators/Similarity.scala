@@ -558,12 +558,10 @@ object Similarity {
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   private[graft] def q122BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q122_codes_base",
-      s"$d/embeddings.parquet",
-      {
-        q122BaseWrites.incrementAndGet()
-        pqCodesOf(q122CorpusEmb(s, d))
-      }, 8, Seq("cell"))
+    q122.store.stageBase(s, Bucketed.dbFor(d), s"$d/embeddings.parquet") {
+      q122BaseWrites.incrementAndGet()
+      pqCodesOf(q122CorpusEmb(s, d))
+    }
 
   /** The maintenance step itself: encode the BATCH ONLY and stage it
     * beside the base. Nothing in the base is read, moved, or rewritten —
@@ -577,12 +575,10 @@ object Similarity {
     * reader shape.)
     */
   private[graft] def q122DeltaArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q122_codes_delta",
-      s"$d/embeddings.parquet",
-      {
-        q122DeltaWrites.incrementAndGet()
-        pqCodesOf(q122BatchEmb(s, d))
-      }, 8, Seq("cell"))
+    q122.store.stageDelta(s, Bucketed.dbFor(d), s"$d/embeddings.parquet") {
+      q122DeltaWrites.incrementAndGet()
+      pqCodesOf(q122BatchEmb(s, d))
+    }
 
   /** q122 COMPACTION — folds the delta into the base on the maintenance
     * schedule (land-then-compact's cadence), not per batch. Production
@@ -600,31 +596,23 @@ object Similarity {
     * truncate would leave the delta rows in BOTH tables — silent
     * double-counted serving. So the marker is created after the merged
     * segment lands and removed only after the truncate; every crash
-    * state rolls FORWARD idempotently in [[q122CompactRecover]], which
-    * both this method and the serving path run first. The whole
+    * state rolls FORWARD idempotently in the store's recovery, which
+    * both the compaction and the serving path run first. The whole
     * operation holds the two tables' artifact locks (sorted order), so
     * an in-JVM concurrent builder/reader cannot observe the
     * drop-to-rename gap.
     */
-  private[graft] def q122Compact(s: SparkSession, d: String): Unit =
-    Bucketed.compactSwap(s, Bucketed.dbFor(d), "q122_codes_base",
-      "q122_codes_delta", "q122_compact_pending",
-      q122BaseArtifact(s, d).unionByName(q122DeltaArtifact(s, d)),
-      8, Seq("cell"))
-
-  /** Roll an interrupted compaction FORWARD — [[Bucketed.recoverPending]]
-    * on the codes tables; run by both compaction and the serving path.
-    */
-  private[graft] def q122CompactRecover(s: SparkSession, d: String): Unit =
-    Bucketed.recoverPending(s, Bucketed.dbFor(d), "q122_codes_base",
-      "q122_codes_delta", "q122_compact_pending", 8, Seq("cell"))
+  private[graft] val q122 = Bucketed.Family(
+    Bucketed.Store("q122_codes_base", "q122_codes_delta",
+      "q122_compact_pending", 8, Seq("cell")),
+    q122BaseArtifact, q122DeltaArtifact, _.unionByName(_))
 
   // ---- q155: ANN index TOMBSTONES (deletion serving + compaction) --------
   //
   // The deletion verb for the PQ index — the LSM shape: takedowns land in
   // a small TOMBSTONE side table (never a base rewrite on arrival), the
   // serving path anti-joins them out, and compaction folds them in on the
-  // maintenance cadence via the shared [[Bucketed.compactSwap]]. The
+  // maintenance cadence via the shared [[Bucketed.Store]] swap. The
   // codebook and cell assignment are NOT retrained on delete (the
   // production behavior: a takedown must be prompt; geometry refresh
   // rides q121's retrain cadence) — so the oracle is the full ADC replay
@@ -635,7 +623,7 @@ object Similarity {
   // landing time (one delta-sized probe of the cell-bucketed base) — so
   // both tables share the (cell) bucket layout: serving can take the
   // anti-join bucket-locally when the tombstone set outgrows a broadcast,
-  // and [[Bucketed.compactSwap]]'s delta truncate keeps one key set.
+  // and the store swap's delta truncate keeps one key set.
   // Crash window (rename committed, delta stale): anti-joining
   // already-removed ids is a NO-OP, so q155 is in the latest-wins safety
   // class — double-applied tombstones serve identically (spec'd).
@@ -649,48 +637,36 @@ object Similarity {
     * the shared `pq_codes` stays pristine for q90c).
     */
   private[graft] def q155BaseArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q155_codes_base",
-      s"$d/embeddings.parquet",
-      {
-        q155BaseWrites.incrementAndGet()
-        pqCodesOf(Tables.embeddings(s, d))
-      }, 8, Seq("cell"))
+    q155.store.stageBase(s, Bucketed.dbFor(d), s"$d/embeddings.parquet") {
+      q155BaseWrites.incrementAndGet()
+      pqCodesOf(Tables.embeddings(s, d))
+    }
 
   /** Landed tombstones (cell, vec_id): the q154 deletion rule applied to
     * vectors. Built by resolving the arriving id set against the base —
     * O(|tombstones|) rows, the base never rewritten on the landing path.
     */
   private[graft] def q155TombArtifact(s: SparkSession, d: String): DataFrame =
-    Bucketed.writeOnceBucketed(s, Bucketed.dbFor(d), "q155_tombs",
-      s"$d/embeddings.parquet",
-      {
-        q155TombWrites.incrementAndGet()
-        q155BaseArtifact(s, d)
-          .filter(pmod(col("vec_id"), lit(Dedup.TombMod)) === Dedup.TombRes)
-          .select(col("cell"), col("vec_id"))
-      }, 8, Seq("cell"))
+    q155.store.stageDelta(s, Bucketed.dbFor(d), s"$d/embeddings.parquet") {
+      q155TombWrites.incrementAndGet()
+      q155BaseArtifact(s, d)
+        .filter(pmod(col("vec_id"), lit(Dedup.TombMod)) === Dedup.TombRes)
+        .select(col("cell"), col("vec_id"))
+    }
 
-  /** Serving view: base minus landed tombstones. Broadcast is the
+  /** The tombstoned codes store: the merge (the serving view, and what a
+    * compaction writes as the new base before truncating the tombstone
+    * store) is base minus landed tombstones. Broadcast is the
     * deletion-batch regime; the shared (cell) bucketing is the fallback
     * layout if takedowns accumulate past broadcast size before the next
     * compaction.
     */
-  private[graft] def q155ServeCodes(s: SparkSession, d: String): DataFrame =
-    q155BaseArtifact(s, d).join(
-      broadcast(q155TombArtifact(s, d)), Seq("cell", "vec_id"), "left_anti")
-
-  /** Tombstone compaction: rewrite base without the tombstoned rows,
-    * truncate the tombstone store — the redo-marker swap shared with
-    * q122/q126/q130.
-    */
-  private[graft] def q155Compact(s: SparkSession, d: String): Unit =
-    Bucketed.compactSwap(s, Bucketed.dbFor(d), "q155_codes_base",
-      "q155_tombs", "q155_compact_pending", q155ServeCodes(s, d),
-      8, Seq("cell"))
-
-  private[graft] def q155CompactRecover(s: SparkSession, d: String): Unit =
-    Bucketed.recoverPending(s, Bucketed.dbFor(d), "q155_codes_base",
-      "q155_tombs", "q155_compact_pending", 8, Seq("cell"))
+  private[graft] val q155 = Bucketed.Family(
+    Bucketed.Store("q155_codes_base", "q155_tombs", "q155_compact_pending",
+      8, Seq("cell")),
+    q155BaseArtifact, q155TombArtifact,
+    (base, tombs) =>
+      base.join(broadcast(tombs), Seq("cell", "vec_id"), "left_anti"))
 
   /** q90c's serving body over ANY staged codes frame (vec_id, nrm, cell,
     * c0..c7): broadcast-probe ADC scan over the codes (no vector column
@@ -1138,9 +1114,8 @@ object Similarity {
     // land-then-compact schedule (ingest/Compact.scala) rather than per
     // batch.
     "q122_incremental_pq_codes" -> ((s, d) => {
-      q122CompactRecover(s, d) // roll forward an interrupted compaction
-      ivfPqServeStaged(s, d,
-        q122BaseArtifact(s, d).unionByName(q122DeltaArtifact(s, d)))
+      // rolls an interrupted compaction forward first
+      ivfPqServeStaged(s, d, q122.asOf(s, d))
     }),
 
     // q155 — tombstoned ANN serving: q90c's staged scan over base minus
@@ -1148,8 +1123,7 @@ object Similarity {
     // must be visible in the RESULT (deleted ids never served) while the
     // base is never rewritten on the landing path.
     "q155_ann_tombstone" -> ((s, d) => {
-      q155CompactRecover(s, d)
-      ivfPqServeStaged(s, d, q155ServeCodes(s, d))
+      ivfPqServeStaged(s, d, q155.asOf(s, d))
     }),
 
     // q155b — tombstone COMPACTION closer: fold the tombstones into the
@@ -1157,8 +1131,8 @@ object Similarity {
     // the truncated store. Byte-identical to q155 — compaction is
     // invisible — so the oracle is the same filtered replay.
     "q155b_tombstone_compact" -> ((s, d) => {
-      q155Compact(s, d)
-      ivfPqServeStaged(s, d, q155ServeCodes(s, d))
+      q155.compact(s, d)
+      ivfPqServeStaged(s, d, q155.asOf(s, d))
     }),
 
     // Q64 — LSH-banded embedding near-dup WITHOUT a blocking key: the

@@ -135,8 +135,6 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Exception => "localhost" }
 
-  private val readBufBytes = options.getInt("tcp.readBuffer", 1 << 16)
-
   /** Buffer capacity, at least 2 rows: the livelock guard in
     * [[SyslogMicroBatchStream.latestOffset]] plans at most half the
     * buffer, and a 1-row buffer would make "half" the whole buffer,
@@ -249,7 +247,7 @@ private[sources] class SyslogReceiver(options: CaseInsensitiveStringMap) {
     */
   private def serveTcp(sock: Socket): Unit = {
     val in = sock.getInputStream
-    val buf = new Array[Byte](readBufBytes)
+    val buf = new Array[Byte](65536)
     val batch = new ArrayBuffer[String](2048)
     var carry = Array.emptyByteArray
     def lineOf(bytes: Array[Byte], from: Int, until: Int): String = {
@@ -543,7 +541,7 @@ class SyslogMicroBatchStream(options: CaseInsensitiveStringMap)
 /** Serializable slice of the driver-side buffer shipped to the executor
   * (the `local.transport=false` cluster fallback).
   */
-private[sources] final case class SyslogPartition(
+private[graft] final case class SyslogPartition(
   rows: Array[SyslogRecord], hostname: String) extends InputPartition
 
 /** Zero-copy range reference resolved through [[SyslogLocalTransport]] at

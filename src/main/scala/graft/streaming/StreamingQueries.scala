@@ -698,7 +698,7 @@ object StreamingQueries {
       def deltaAll(): DataFrame =
         s.read.schema(deltaSchema).parquet(s"$deltaDir/ver=*")
       def currentAt(ver: Long): DataFrame =
-        Dedup.latestWins(base, deltaAll().filter(col("ver") < ver))
+        Dedup.latestWins(base, deltaAll().filter(col("ver") < ver), "doc_id")
           .filter(col("cluster_size") > 0)
       def fold(t: DataFrame, ver: Long): Unit = {
         val current = currentAt(ver)
@@ -727,7 +727,7 @@ object StreamingQueries {
       }
       r.foldEach(() => base.limit(0).withColumn("ver", lit(0L))
         .write.parquet(s"$deltaDir/ver=0"))((t, id) => fold(t, id + 1))
-      Dedup.latestWins(base, deltaAll())
+      Dedup.latestWins(base, deltaAll(), "doc_id")
         .filter(col("cluster_size") > 0)
         .select(col("doc_id"), col("rep"), col("cluster_size"))
         .orderBy(col("doc_id"))
@@ -892,7 +892,8 @@ object StreamingQueries {
         () => baseBydoc.limit(0).write.parquet(bydocDir),
         () => base.limit(0).withColumn("ver", lit(0L)).write.parquet(ovDir))(
         fold)
-      Dedup.latestSpanWins(base, s.read.schema(ovSchema).parquet(ovDir))
+      Dedup.latestWins(base, s.read.schema(ovSchema).parquet(ovDir),
+        "doc_id")
         .orderBy(col("doc_id"))
     }),
 

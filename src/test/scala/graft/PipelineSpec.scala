@@ -104,7 +104,7 @@ class PipelineSpec extends AnyFunSuite {
     val baseBefore = Similarity.q122BaseArtifact(spark, dir).count()
     val deltaBefore = Similarity.q122DeltaArtifact(spark, dir).count()
     assert(deltaBefore > 0, "fixture degenerate: nothing to compact")
-    Similarity.q122Compact(spark, dir)
+    Similarity.q122.compact(spark, dir)
     assert(Similarity.q122BaseArtifact(spark, dir).count()
       === baseBefore + deltaBefore,
       "compacted base must hold base+delta rows")
@@ -181,14 +181,14 @@ class PipelineSpec extends AnyFunSuite {
   test("q126 compaction: serve-before == serve-after, delta truncated, warm run folds nothing") {
     import org.apache.spark.sql.functions.col
     val dir = q126Tier()
-    Dedup.q126CompactRecover(spark, dir)
+    Dedup.q126.recover(spark, dir)
     val nDelta = Dedup.q126DeltaArtifact(spark, dir).count()
     assert(nDelta > 0, "fixture degenerate: empty override delta")
-    val before = Dedup.q126Serve(spark, dir).orderBy(col("doc_id")).collect()
-    Dedup.q126Compact(spark, dir)
+    val before = Dedup.q126.asOf(spark, dir).orderBy(col("doc_id")).collect()
+    Dedup.q126.compact(spark, dir)
     assert(Dedup.q126DeltaArtifact(spark, dir).count() === 0L,
       "compaction must truncate the override delta")
-    val after = Dedup.q126Serve(spark, dir).orderBy(col("doc_id")).collect()
+    val after = Dedup.q126.asOf(spark, dir).orderBy(col("doc_id")).collect()
     assert(after.toSeq === before.toSeq,
       "serving changed across the compaction swap")
     // the bridge really merged the two clusters: one rep, size 5
@@ -208,18 +208,18 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = q126Tier()
     val db = Bucketed.dbFor(dir)
-    Dedup.q126CompactRecover(spark, dir)
+    Dedup.q126.recover(spark, dir)
     val base = Dedup.q126BaseArtifact(spark, dir)
     val delta = Dedup.q126DeltaArtifact(spark, dir)
     val (nBase, nDelta) = (base.count(), delta.count())
     assert(nDelta > 0, "fixture degenerate: nothing to compact")
-    val expect = Dedup.q126Serve(spark, dir).orderBy(col("doc_id")).collect()
+    val expect = Dedup.q126.asOf(spark, dir).orderBy(col("doc_id")).collect()
     // worst window by hand: merged segment written, marker set, swap
     // COMMITTED — process dies before the delta truncate. The override
     // rows now exist (materialized) in the base AND (as overrides) in the
     // delta.
     Bucketed.rewriteBucketed(spark, db, "q126_labels_base_next",
-      Dedup.latestWins(base, delta), 8, Seq("doc_id"))
+      Dedup.latestWins(base, delta, "doc_id"), 8, Seq("doc_id"))
     val marker = java.nio.file.Paths.get("/tmp/graft-warehouse",
       s"$db.db", "q126_compact_pending")
     java.nio.file.Files.createDirectories(marker.getParent)
@@ -231,7 +231,7 @@ class PipelineSpec extends AnyFunSuite {
     // serves the double-present state correctly (override rows replace
     // their base copies — q122's append-union would double-count here)
     val doubled = Dedup.latestWins(spark.table(s"$db.q126_labels_base"),
-      spark.table(s"$db.q126_labels_delta"))
+      spark.table(s"$db.q126_labels_delta"), "doc_id")
       .orderBy(col("doc_id")).collect()
     assert(doubled.toSeq === expect.toSeq,
       "latest-wins over the crash window diverged")
@@ -265,7 +265,7 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = q130Tier()
-    Dedup.q130CompactRecover(spark, dir)
+    Dedup.q130.recover(spark, dir)
     val nBase = Dedup.q130BaseArtifact(spark, dir).count()
     val nDelta = Dedup.q130DeltaArtifact(spark, dir).count()
     assert(nDelta > 0, "fixture degenerate: batch A shipped no postings")
@@ -296,7 +296,7 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = q130Tier()
     val db = Bucketed.dbFor(dir)
-    Dedup.q130CompactRecover(spark, dir)
+    Dedup.q130.recover(spark, dir)
     val base = Dedup.q130BaseArtifact(spark, dir)
     val delta = Dedup.q130DeltaArtifact(spark, dir)
     val (nBase, nDelta) = (base.count(), delta.count())
@@ -359,8 +359,8 @@ class PipelineSpec extends AnyFunSuite {
     val marker = wh.resolve("acc_pending")
     java.nio.file.Files.write(marker, Array.emptyByteArray)
     assert(!spark.catalog.databaseExists(db), "fixture db must be unknown")
-    Bucketed.recoverPending(spark, db, "acc", "acc_delta", "acc_pending",
-      8, Seq("k"))
+    Bucketed.Store("acc", "acc_delta", "acc_pending", 8, Seq("k"))
+      .recover(spark, db)
     // _next promoted over base; delta contents gone; marker cleared
     val base = spark.read.parquet(wh.resolve("acc").toString)
       .as[(Long, String)].collect().toSet
@@ -392,7 +392,7 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Files.setLastModifiedTime(lease,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() - 10000))
-      Similarity.q122Compact(spark, dir) // must take the orphan over
+      Similarity.q122.compact(spark, dir) // must take the orphan over
     } finally spark.conf.unset("spark.graft.fs.leaseMs")
     assert(!java.nio.file.Files.exists(lease),
       "compaction must release (and not strand) the lease")
@@ -455,9 +455,11 @@ class PipelineSpec extends AnyFunSuite {
       ids.map(i => (i.toLong, i.toLong * 100)).toDF("k", "v")
     val union = (b: DataFrame, del: DataFrame) => b.unionByName(del)
     val fams = Seq(
-      ("fam_a", 20, 2, Seq("k"), kv(1 to 10), kv(11 to 13), union),
-      ("fam_b", 20, 2, Seq("k"), kv(1 to 10), kv(11 to 11), union))
-    val out = Dedup.maintenanceTick(spark, db, "t1", fams)
+      Dedup.TickFamily("fam_a", 20, Bucketed.Store.of("t1_fam_a", 2, Seq("k")),
+        kv(1 to 10), kv(11 to 13), union),
+      Dedup.TickFamily("fam_b", 20, Bucketed.Store.of("t1_fam_b", 2, Seq("k")),
+        kv(1 to 10), kv(11 to 11), union))
+    val out = Dedup.maintenanceTick(spark, db, fams)
       .orderBy(col("artifact")).collect()
     assert(out.map(r => (r.getAs[String]("artifact"),
       r.getAs[Boolean]("compact_due"), r.getAs[Long]("base_n_after"),
@@ -471,15 +473,15 @@ class PipelineSpec extends AnyFunSuite {
       spark.table(s"$db.t1_fam_b_delta").count() === 1L,
       "under-threshold family must be left staged untouched")
     // post-tick contract: nothing is due
-    val post = Dedup.compactDueOf(fams.map { case (n, thr, _, _, _, _, _) =>
-      (n, spark.table(s"$db.t1_${n}_base"),
-        spark.table(s"$db.t1_${n}_delta"), thr)
+    val post = Dedup.compactDueOf(fams.map { f =>
+      (f.artifact, spark.table(s"$db.t1_${f.artifact}_base"),
+        spark.table(s"$db.t1_${f.artifact}_delta"), f.thrPct)
     }).collect()
     assert(post.forall(!_.getAs[Boolean]("compact_due")),
       s"post-tick nothing may be due: ${post.mkString(",")}")
     // the tick re-stages from its pristine inputs: a second run reports
     // the identical transition (deterministic under bench/verify re-runs)
-    val out2 = Dedup.maintenanceTick(spark, db, "t1", fams)
+    val out2 = Dedup.maintenanceTick(spark, db, fams)
       .orderBy(col("artifact")).collect()
     assert(out2.toSeq === out.toSeq, "re-tick must be idempotent")
   }

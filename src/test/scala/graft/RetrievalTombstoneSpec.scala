@@ -459,9 +459,8 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     // tombstones scrubbed from the base but their store not yet GC'd) —
     // re-anti-joining removed ids must be a no-op
     val db = operators.Bucketed.dbFor(dir)
-    operators.Bucketed.compactSwap(spark, db, "q161e_pos_base",
-      "q161e_pos_batch", "q161e_compact_pending",
-      Retrieval.q161eServeFrame(spark, dir), 8, Seq("term"))
+    Retrieval.q161eStore.compact(spark, db,
+      Retrieval.q161eServeFrame(spark, dir))
     assert(Retrieval.q161eTombs(spark, dir).count() > 0,
       "seam not exercised: tombstone store already empty")
     assert(serve() === before, "inter-swap crash window changed serving")
@@ -650,7 +649,7 @@ class RetrievalTombstoneSpec extends AnyFunSuite {
     assert(Similarity.q155TombArtifact(spark, dir).count() === 0L,
       "compaction must truncate the tombstone store")
     // double compaction (idempotency): base minus nothing, same rows
-    Similarity.q155Compact(spark, dir)
+    Similarity.q155.compact(spark, dir)
     val again = Similarity.queries("q155_ann_tombstone")(spark, dir).collect()
     assert(again.toSeq === before.toSeq)
   }

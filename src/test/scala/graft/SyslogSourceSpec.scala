@@ -66,11 +66,13 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
   // ---- direct MicroBatchStream drives: deterministic concurrency and
   // backpressure semantics, no streaming-query timing in the way --------
 
-  private def newStream(maxBuffered: Int): sources.SyslogMicroBatchStream = {
+  private def newStream(maxBuffered: Int,
+      extra: (String, String)*): sources.SyslogMicroBatchStream = {
     val opts = new java.util.HashMap[String, String]()
     opts.put("tcp.port", "-1"); opts.put("udp.port", "-1")
     opts.put("tcp.host", "127.0.0.1"); opts.put("udp.host", "127.0.0.1")
     opts.put("maxBufferedRows", maxBuffered.toString)
+    extra.foreach { case (k, v) => opts.put(k, v) }
     new sources.SyslogMicroBatchStream(
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
   }
@@ -119,6 +121,57 @@ class SyslogSourceSpec extends AnyFunSuite with Eventually {
       // commit trims the buffer; the committed range can't be replanned
       s.commit(s.deserializeOffset("8000"))
       assert(readRange(s, 0, 8000).isEmpty)
+    } finally s.stop()
+  }
+
+  test("inline-row transport (local.transport=false): rows ride the partitions, exactly once, per-connection order kept") {
+    val s = newStream(100000, "local.transport" -> "false")
+    try {
+      val port = sources.SyslogState.lastTcpPort
+      assert(port > 0)
+      val (conns, perConn) = (4, 20000)
+      val threads = (0 until conns).map { k =>
+        new Thread(() => {
+          val sock = new Socket("127.0.0.1", port)
+          val w = new PrintWriter(sock.getOutputStream)
+          (0 until perConn).foreach(i => w.print(s"s$k-$i\n"))
+          w.flush(); sock.close()
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      val total = conns * perConn
+      eventually(timeout(Span(10, Seconds)))(assert(latest(s) === total))
+      val parts = s.planInputPartitions(s.initialOffset(),
+        s.deserializeOffset(total.toString))
+      // 80,000 rows: two 65,536-row chunks, each carrying its rows
+      assert(parts.length === 2)
+      assert(parts.forall(_.isInstanceOf[sources.SyslogPartition]),
+        s"expected inline partitions: ${parts.map(_.getClass.getSimpleName).toSeq}")
+      // a partition is read where it is deserialized, after the commit
+      // has trimmed the receiver's buffer: the rows travel with it
+      s.commit(s.deserializeOffset(total.toString))
+      def shipped(p: AnyRef): org.apache.spark.sql.connector.read.InputPartition = {
+        val bytes = new java.io.ByteArrayOutputStream()
+        val out = new java.io.ObjectOutputStream(bytes)
+        out.writeObject(p); out.close()
+        new java.io.ObjectInputStream(
+          new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+          .asInstanceOf[org.apache.spark.sql.connector.read.InputPartition]
+      }
+      val factory = s.createReaderFactory()
+      val lines = parts.toSeq.flatMap { p =>
+        val r = factory.createReader(shipped(p))
+        val out = scala.collection.mutable.ArrayBuffer[String]()
+        while (r.next()) out += r.get().getUTF8String(0).toString
+        out.toSeq
+      }
+      assert(lines.length === total, "rows lost or duplicated")
+      assert(lines.toSet.size === total)
+      for (k <- 0 until conns) {
+        val mine = lines.filter(_.startsWith(s"s$k-"))
+          .map(_.split("-")(1).toInt)
+        assert(mine === (0 until perConn), s"sender $k's lines reordered")
+      }
     } finally s.stop()
   }
 

@@ -33,8 +33,8 @@ class VacuumSpec extends AnyFunSuite {
 
   test("q167 vacuum: latest unchanged, chain truncated, as-of floor enforced") {
     val dir = docsTier()
-    val before = rows(Dedup.q167Serve(spark, dir))
-    val asOf1Before = rows(Dedup.q167AsOf(spark, dir, 1L))
+    val before = rows(Dedup.q167.asOf(spark, dir))
+    val asOf1Before = rows(Dedup.q167.asOf(spark, dir, Some(1L)))
     val chain0 = Dedup.q167DeltaArtifact(spark, dir).count()
     val folded = Dedup.q167DeltaArtifact(spark, dir)
       .filter(col("ver") <= Dedup.Q167Horizon).count()
@@ -48,18 +48,18 @@ class VacuumSpec extends AnyFunSuite {
       s"chain $chain0 -> $chain1, expected ${chain0 - folded}")
     assert(Dedup.q167DeltaArtifact(spark, dir)
       .filter(col("ver") <= Dedup.Q167Horizon).count() === 0L)
-    assert(Dedup.q167HorizonOf(spark, dir) === Dedup.Q167Horizon)
+    assert(Dedup.q167.horizon(spark, dir) === Dedup.Q167Horizon)
     // snapshots at/above the horizon serve identically across the vacuum
-    assert(rows(Dedup.q167AsOf(spark, dir, 1L)) === asOf1Before,
+    assert(rows(Dedup.q167.asOf(spark, dir, Some(1L))) === asOf1Before,
       "as-of-horizon snapshot changed across the vacuum")
-    assert(rows(Dedup.q167AsOf(spark, dir, 2L)) === before)
+    assert(rows(Dedup.q167.asOf(spark, dir, Some(2L))) === before)
     // below the horizon: loud failure, not a silently-wrong snapshot
     val ex = intercept[IllegalArgumentException] {
-      Dedup.q167AsOf(spark, dir, 0L)
+      Dedup.q167.asOf(spark, dir, Some(0L))
     }
     assert(ex.getMessage.contains("horizon"))
     // double vacuum: nothing left to fold; serve identical
-    Dedup.q167Vacuum(spark, dir, Dedup.Q167Horizon)
+    Dedup.q167.vacuum(spark, dir, Dedup.Q167Horizon)
     val again = SparkEntry.queries("q167_labels_vacuum")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(again === before)
@@ -67,9 +67,9 @@ class VacuumSpec extends AnyFunSuite {
 
   test("q167 chain is staged once across repeated serving") {
     val dir = docsTier()
-    Dedup.q167Serve(spark, dir).collect()
+    Dedup.q167.asOf(spark, dir).collect()
     val w0 = Dedup.q167DeltaWrites.get()
-    Dedup.q167Serve(spark, dir).collect()
+    Dedup.q167.asOf(spark, dir).collect()
     SparkEntry.queries("q167_labels_vacuum")(spark, dir).collect()
     assert(Dedup.q167DeltaWrites.get() === w0,
       "warm q167 serving re-derived the fold chain")
@@ -109,32 +109,32 @@ class VacuumSpec extends AnyFunSuite {
 
   test("q170 span vacuum: latest unchanged, chain truncated, as-of floor enforced") {
     val dir = docsTier()
-    val before = spanRows(Dedup.q170Serve(spark, dir))
-    val asOf1Before = spanRows(Dedup.q170AsOf(spark, dir, 1L))
+    val before = spanRows(Dedup.q170.asOf(spark, dir))
+    val asOf1Before = spanRows(Dedup.q170.asOf(spark, dir, Some(1L)))
     val chain0 = Dedup.q170DeltaArtifact(spark, dir).count()
     val folded = Dedup.q170DeltaArtifact(spark, dir)
       .filter(col("ver") <= Dedup.Q170Horizon).count()
     assert(folded > 0, "fixture degenerate: no ver-1 span rows to vacuum")
     SparkEntry.queries("q170_span_vacuum")(spark, dir).collect()
-    assert(spanRows(Dedup.q170Serve(spark, dir)) === before,
+    assert(spanRows(Dedup.q170.asOf(spark, dir)) === before,
       "span vacuum changed the latest-serve rows")
     assert(Dedup.q170DeltaArtifact(spark, dir).count() === chain0 - folded,
       "span chain did not truncate to the retention suffix")
-    assert(Dedup.q170HorizonOf(spark, dir) === Dedup.Q170Horizon)
-    assert(spanRows(Dedup.q170AsOf(spark, dir, 1L)) === asOf1Before,
+    assert(Dedup.q170.horizon(spark, dir) === Dedup.Q170Horizon)
+    assert(spanRows(Dedup.q170.asOf(spark, dir, Some(1L))) === asOf1Before,
       "as-of-horizon span snapshot changed across the vacuum")
-    assert(spanRows(Dedup.q170AsOf(spark, dir, 2L)) === before)
+    assert(spanRows(Dedup.q170.asOf(spark, dir, Some(2L))) === before)
     val ex = intercept[IllegalArgumentException] {
-      Dedup.q170AsOf(spark, dir, 0L)
+      Dedup.q170.asOf(spark, dir, Some(0L))
     }
     assert(ex.getMessage.contains("horizon"))
   }
 
   test("q170 chain is staged once across repeated serving") {
     val dir = docsTier()
-    Dedup.q170Serve(spark, dir).collect()
+    Dedup.q170.asOf(spark, dir).collect()
     val w0 = Dedup.q170DeltaWrites.get()
-    Dedup.q170Serve(spark, dir).collect()
+    Dedup.q170.asOf(spark, dir).collect()
     SparkEntry.queries("q170_span_vacuum")(spark, dir).collect()
     assert(Dedup.q170DeltaWrites.get() === w0,
       "warm q170 serving re-derived the span fold chain")
@@ -149,38 +149,38 @@ class VacuumSpec extends AnyFunSuite {
 
   test("q171 scorecard vacuum: latest unchanged, chain truncated, as-of floor enforced") {
     val dir = docsTier()
-    val before = scRows(Pipeline.q171Serve(spark, dir))
-    val asOf2Before = scRows(Pipeline.q171AsOf(spark, dir, 2L))
+    val before = scRows(Pipeline.q171.asOf(spark, dir))
+    val asOf2Before = scRows(Pipeline.q171.asOf(spark, dir, Some(2L)))
     val chain0 = Pipeline.q171DeltaArtifact(spark, dir).count()
     val folded = Pipeline.q171DeltaArtifact(spark, dir)
       .filter(col("ver") <= Pipeline.Q171Horizon).count()
     assert(folded > 0, "fixture degenerate: no pre-horizon scorecard rows")
     SparkEntry.queries("q171_scorecard_vacuum")(spark, dir).collect()
-    assert(scRows(Pipeline.q171Serve(spark, dir)) === before,
+    assert(scRows(Pipeline.q171.asOf(spark, dir)) === before,
       "scorecard vacuum changed the latest-serve rows")
     assert(Pipeline.q171DeltaArtifact(spark, dir).count() ===
       chain0 - folded,
       "scorecard chain did not truncate to the retention suffix")
-    assert(Pipeline.q171HorizonOf(spark, dir) === Pipeline.Q171Horizon)
-    assert(scRows(Pipeline.q171AsOf(spark, dir, 2L)) === asOf2Before,
+    assert(Pipeline.q171.horizon(spark, dir) === Pipeline.Q171Horizon)
+    assert(scRows(Pipeline.q171.asOf(spark, dir, Some(2L))) === asOf2Before,
       "as-of-horizon scorecard snapshot changed across the vacuum")
-    assert(scRows(Pipeline.q171AsOf(spark, dir, 3L)) === before)
+    assert(scRows(Pipeline.q171.asOf(spark, dir, Some(3L))) === before)
     val ex = intercept[IllegalArgumentException] {
-      Pipeline.q171AsOf(spark, dir, 1L)
+      Pipeline.q171.asOf(spark, dir, Some(1L))
     }
     assert(ex.getMessage.contains("horizon"))
   }
 
   test("q171 vacuum crash: the marker rolls the 1-bucket source-keyed store forward") {
     val dir = docsTier()
-    val before = scRows(Pipeline.q171Serve(spark, dir))
+    val before = scRows(Pipeline.q171.asOf(spark, dir))
     val db = Bucketed.dbFor(dir)
     // worst window on the OTHER store shape (1 bucket, string key):
     // merged base written and swapped, marker present — death before
     // the delta rewrite and the meta write
-    val merged = Pipeline.latestScWins(Pipeline.q171BaseArtifact(spark, dir),
+    val merged = Dedup.latestWins(Pipeline.q171BaseArtifact(spark, dir),
       Pipeline.q171DeltaArtifact(spark, dir)
-        .filter(col("ver") <= Pipeline.Q171Horizon))
+        .filter(col("ver") <= Pipeline.Q171Horizon), "source")
     Bucketed.rewriteBucketed(spark, db, "q171_sc_base_next", merged,
       1, Seq("source"))
     val marker = java.nio.file.Paths.get("/tmp/graft-warehouse",
@@ -192,26 +192,26 @@ class VacuumSpec extends AnyFunSuite {
     spark.sql(
       s"ALTER TABLE $db.q171_sc_base_next RENAME TO $db.q171_sc_base")
     // crash here; the serve path must finish the owed work
-    val after = scRows(Pipeline.q171Serve(spark, dir))
+    val after = scRows(Pipeline.q171.asOf(spark, dir))
     assert(after === before, "interrupted scorecard vacuum changed serving")
     assert(!java.nio.file.Files.exists(marker), "marker not cleared")
     assert(Pipeline.q171DeltaArtifact(spark, dir)
       .filter(col("ver") <= Pipeline.Q171Horizon).count() === 0L,
       "recovery must finish the chain truncate")
-    assert(Pipeline.q171HorizonOf(spark, dir) === Pipeline.Q171Horizon,
+    assert(Pipeline.q171.horizon(spark, dir) === Pipeline.Q171Horizon,
       "recovery must record the as-of floor")
   }
 
   test("q167 vacuum crash: the horizon-carrying marker rolls forward on serve") {
     val dir = docsTier()
-    val before = rows(Dedup.q167Serve(spark, dir))
+    val before = rows(Dedup.q167.asOf(spark, dir))
     val db = Bucketed.dbFor(dir)
     // hand-build the worst window: merged base written and SWAPPED,
     // marker present with horizon content — death before the delta
     // rewrite and the meta write
     val merged = Dedup.latestWins(Dedup.q167BaseArtifact(spark, dir),
       Dedup.q167DeltaArtifact(spark, dir)
-        .filter(col("ver") <= Dedup.Q167Horizon))
+        .filter(col("ver") <= Dedup.Q167Horizon), "doc_id")
     Bucketed.rewriteBucketed(spark, db, "q167_labels_base_next", merged,
       8, Seq("doc_id"))
     val marker = java.nio.file.Paths.get("/tmp/graft-warehouse",
@@ -223,13 +223,13 @@ class VacuumSpec extends AnyFunSuite {
     spark.sql(
       s"ALTER TABLE $db.q167_labels_base_next RENAME TO $db.q167_labels_base")
     // crash here; the serve path must finish the owed work
-    val after = rows(Dedup.q167Serve(spark, dir))
+    val after = rows(Dedup.q167.asOf(spark, dir))
     assert(after === before, "interrupted vacuum changed serving")
     assert(!java.nio.file.Files.exists(marker), "marker not cleared")
     assert(Dedup.q167DeltaArtifact(spark, dir)
       .filter(col("ver") <= Dedup.Q167Horizon).count() === 0L,
       "recovery must finish the chain truncate")
-    assert(Dedup.q167HorizonOf(spark, dir) === Dedup.Q167Horizon,
+    assert(Dedup.q167.horizon(spark, dir) === Dedup.Q167Horizon,
       "recovery must record the as-of floor")
   }
 }
