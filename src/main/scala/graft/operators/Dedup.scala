@@ -836,90 +836,73 @@ object Dedup {
   /** The labels fold: q120's incremental pairing applied one batch of
     * `docs` (the documents table) at a time — the incremental join of the
     * Distributed Streaming Set Similarity Join (ICDE 2020) — over three
-    * per-run stores under `dir`: label override rows (`ver` = fold), the
-    * accumulated batch prefix postings, and the seen batch ids. One step
-    * is
+    * [[FoldStore]]s under `dir`: label override rows, the batch prefix
+    * postings, and the seen batch ids. One step is
     *
     *   pairs  = batchPairsWith(corpus ∪ seen docs, the batch's index,
-    *            corpus prefix ∪ ACCUMULATED batch prefix rows) — so a
+    *            corpus prefix ∪ earlier folds' batch prefix rows) — so a
     *            doc arriving in fold 3 pairs with fold-1 docs through the
-    *            appended postings, not just with the corpus;
+    *            stored postings, not just with the corpus;
     *   sub    = incrementalSubLabels(labels before this fold, pairs),
     *            override rows only (the corpus-wide carried set is never
     *            materialized inside a fold);
     *
-    * plus the three store appends, returned as thunks so a caller can
-    * overlap them with its own appends in one [[Shared.inParallel]].
-    * Shared by q124 and the q128 scorecard fold ([[Pipeline
+    * plus the three shard writes, returned as thunks so a caller can
+    * overlap them with its own writes in one [[Shared.inParallel]].
+    * q124's fold; shared by the q128 scorecard fold ([[Pipeline
     * .ScorecardFold]], stream and batch).
-    *
-    * Redelivery (a crash between the appends and the checkpoint commit)
-    * re-runs a step with the same `ver`: the label read is ver-filtered
-    * to strictly pre-fold rows, so it appends byte-identical override
-    * rows, and the unversioned prefix and seen stores are read only by
-    * duplication-insensitive consumers (candidate pairs pass a
-    * distinct(), seen ids feed a semi-join). At-least-once delivery
-    * therefore yields exactly-once results without a transactional sink.
     */
   private[graft] final class LabelsFold(s: SparkSession, d: String,
-      docs: DataFrame, dir: java.nio.file.Path) {
+      docs: DataFrame, dir: java.nio.file.Path) extends Fold {
     // frozen corpus index (q120's staged artifacts)
     private val baseLabels = q120LabelsArtifact(s, d)
     private val corpusDf = q120DfArtifact(s, d)
     private val corpusPrefix = q120PrefixArtifact(s, d)
     private val corpus = q120Corpus(s, d)
-    private val labelsDir = dir.resolve("labels_delta").toString
-    private val prefixDir = dir.resolve("prefix_delta").toString
-    private val seenDir = dir.resolve("seen").toString
-    // store schemas are fixed by the seed writes: read with explicit
-    // schemas so no fold pays per-read footer inference
-    private val labelsSchema = baseLabels.schema.add("ver", "long")
-    private val prefixSchema = corpusPrefix.schema
-    private val seenSchema = docs.select(col("doc_id")).schema
-
-    /** The stores' schema-only seed writes, independent of each other. */
-    val seeds: Seq[() => Unit] = Seq(
-      () => baseLabels.limit(0).withColumn("ver", lit(0L))
-        .write.parquet(labelsDir),
-      () => corpusPrefix.limit(0).write.parquet(prefixDir),
-      () => docs.select(col("doc_id")).limit(0).write.parquet(seenDir))
+    private val labels =
+      new FoldStore(s, dir.resolve("labels_delta"), baseLabels.schema)
+    private val prefix =
+      new FoldStore(s, dir.resolve("prefix_delta"), corpusPrefix.schema)
+    private val seen = new FoldStore(s, dir.resolve("seen"),
+      docs.select(col("doc_id")).schema)
 
     /** The labels view before fold `ver`: latest-wins of the frozen base
       * and the override rows of earlier folds.
       */
-    def before(ver: Long): DataFrame = latestWins(baseLabels,
-      s.read.schema(labelsSchema).parquet(labelsDir).filter(col("ver") < ver),
-      "doc_id")
+    def before(ver: Long): DataFrame =
+      latestWins(baseLabels, labels.before(ver), "doc_id")
 
-    def step(b: DataFrame, ver: Long): LabelsStep = {
+    def labelsStep(b: DataFrame, ver: Long): LabelsStep = {
       val seenDocs = corpus.unionByName(
-        docs.join(s.read.schema(seenSchema).parquet(seenDir),
-          Seq("doc_id"), "left_semi"))
+        docs.join(seen.before(ver), Seq("doc_id"), "left_semi"))
       val prefixAll = corpusPrefix.unionByName(
-        s.read.schema(prefixSchema).parquet(prefixDir))
+        prefix.before(ver).drop("ver"))
       // tokenize the batch once per step: the probe-side prefix rows and
-      // the posting-store append are the same frame
+      // the posting-store shard are the same frame
       val (bsh, bprefix) = batchIndexOf(b, corpusDf)
       val pairs = batchPairsWith(seenDocs, bsh, bprefix, prefixAll)
       val current = before(ver)
       // sub is driver data, so its several readers recompute nothing
       val (sub, _) = incrementalSubLabels(current, pairs)
       LabelsStep(sub, current, Seq(
-        () => sub.withColumn("ver", lit(ver))
-          .write.mode("append").parquet(labelsDir),
-        () => bprefix.write.mode("append").parquet(prefixDir),
-        () => b.select(col("doc_id")).write.mode("append")
-          .parquet(seenDir)))
+        () => labels.put(sub, ver),
+        () => prefix.put(bprefix, ver),
+        () => seen.put(b.select(col("doc_id")), ver)))
     }
+
+    def step(b: DataFrame, ver: Long): Seq[() => Unit] =
+      labelsStep(b, ver).writes
+
+    def readout: DataFrame = before(Long.MaxValue).orderBy(col("doc_id"))
   }
 
   /** One [[LabelsFold]] step: the fold's override rows, the labels view
-    * they were derived from, and the step's store appends — independent
-    * writes over disjoint dirs whose inputs are materialized (sub's
-    * driver-built rows, the checkpointed batch prefix) or pre-fold reads.
+    * they were derived from, and the step's shard writes, whose inputs
+    * are materialized (sub's driver-built rows, the checkpointed batch
+    * prefix) or pre-fold reads.
     */
   private[graft] final case class LabelsStep(sub: DataFrame,
-      current: DataFrame, appends: Seq[() => Unit])
+      current: DataFrame, writes: Seq[() => Unit])
 
   /** Batch-side prefix postings under the corpus-frozen order — the rows
     * q124 appends to its posting store so LATER micro-batches can pair

@@ -306,73 +306,58 @@ object Pipeline {
       }: _*)
   }
 
-  /** q128's scorecard fold over per-run stores under `dir` — the one fold
+  /** q128's scorecard fold over [[FoldStore]]s under `dir` — the one fold
     * arc behind the q128 stream and [[scVerChain]]'s batch loop. Each step
     * runs the [[Dedup.LabelsFold]] step, merges its batch aggregate and
-    * label corrections (against corpus flags ∪ the ACCUMULATED batch flag
+    * label corrections (against corpus flags ∪ earlier folds' batch flag
     * rows and the pre-fold labels view) into the previous fold's
-    * scorecard, appended with ver = fold + 1 — so a later fold can demote
-    * a doc that arrived in an EARLIER fold — and appends the batch's flag
-    * rows with ver = fold.
-    *
-    * Redelivery: the stores whose duplication would be VISIBLE in
-    * arithmetic (scorecard rows, label overrides, flag rows) carry `ver`
-    * and every in-step read filters to strictly pre-fold rows, so a
-    * redelivered fold recomputes byte-identical rows; the unversioned
-    * prefix and seen stores have duplication-insensitive consumers
-    * ([[Dedup.LabelsFold]]). The filters also make the five appends
-    * order-independent, so each step overlaps them (§2.6).
+    * scorecard, written as shard ver = fold + 1 (ver 0 is the frozen
+    * corpus scorecard) — so a later fold can demote a doc that arrived in
+    * an EARLIER fold — and writes the batch's flag rows as shard ver =
+    * fold.
     */
   private[graft] final class ScorecardFold(s: SparkSession, d: String,
-      docs: DataFrame, dir: java.nio.file.Path) {
+      docs: DataFrame, dir: java.nio.file.Path) extends Fold {
     private val labels = new Dedup.LabelsFold(s, d, docs, dir)
     private val corpusFlags = q127DocflagsArtifact(s, d)
     private val scBase = q127BaseArtifact(s, d)
-    private val flagsDir = dir.resolve("flags_delta").toString
-    private val scDir = dir.resolve("scorecard").toString
-    private val flagsSchema = corpusFlags.schema.add("ver", "long")
-    private val scSchema = scBase.schema.add("ver", "long")
+    private val flags =
+      new FoldStore(s, dir.resolve("flags_delta"), corpusFlags.schema)
+    private val sc = new FoldStore(s, dir.resolve("scorecard"), scBase.schema)
 
-    /** Seed writes of the five stores; the scorecard chain starts at
-      * ver 0 = the frozen corpus scorecard.
-      */
-    val seeds: Seq[() => Unit] = labels.seeds ++ Seq(
-      () => corpusFlags.limit(0).withColumn("ver", lit(0L))
-        .write.parquet(flagsDir),
-      () => scBase.withColumn("ver", lit(0L)).write.parquet(scDir))
+    override def seeds: Seq[() => Unit] = Seq(() => sc.put(scBase, 0))
 
     /** The scorecard ver chain, ver 0 included. */
-    def chain: DataFrame = s.read.schema(scSchema).parquet(scDir)
+    def chain: DataFrame = sc.all
 
-    /** The accumulated batch flag rows. */
-    def flags: DataFrame = s.read.schema(flagsSchema).parquet(flagsDir)
+    /** The batch flag rows of every fold. */
+    def flagRows: DataFrame = flags.all
 
-    /** Each source's newest scorecard row with ver <= `upTo`. */
-    def latest(upTo: Long): DataFrame =
-      chain.filter(col("ver") <= upTo)
-        .withColumn("_rn", row_number().over(
+    /** Each source's newest row of `chain`. */
+    private def newest(chain: DataFrame): DataFrame =
+      chain.withColumn("_rn", row_number().over(
           Window.partitionBy(col("source")).orderBy(col("ver").desc)))
         .filter(col("_rn") === 1).drop("_rn", "ver")
 
-    def step(b: DataFrame, ver: Long): Unit = {
-      val l = labels.step(b, ver)
+    def step(b: DataFrame, ver: Long): Seq[() => Unit] = {
+      val l = labels.labelsStep(b, ver)
       val allFlags = corpusFlags.unionByName(
-        flags.filter(col("ver") < ver).drop("ver").dropDuplicates("doc_id"))
-      Shared.inParallel(
-        (() => q127MergeOf(latest(ver), q127BatchAgg(b, l.sub),
-            q127Corrections(l.sub, allFlags, l.current))
-          .withColumn("ver", lit(ver + 1))
-          .write.mode("append").parquet(scDir)) +:
-        l.appends :+
-        (() => docflagsOf(b).withColumn("ver", lit(ver))
-          .write.mode("append").parquet(flagsDir)))
+        flags.before(ver).drop("ver").dropDuplicates("doc_id"))
+      (() => sc.put(q127MergeOf(newest(sc.before(ver + 1)),
+          q127BatchAgg(b, l.sub),
+          q127Corrections(l.sub, allFlags, l.current)), ver + 1)) +:
+        l.writes :+ (() => flags.put(docflagsOf(b), ver))
     }
+
+    def readout: DataFrame = newest(chain)
+      .withColumn("keep_rate", round(col("n_train") / col("n_docs"), 4))
+      .orderBy(col("source"))
   }
 
   /** q128's fold arc replayed in batch form: the tenth splits into
     * `folds` ordered sub-batches, each folded by [[ScorecardFold]].
-    * Returns (scorecard ver chain incl. ver 0 = frozen base, accumulated
-    * flag delta rows). ONE derivation shared by q128b's compaction and
+    * Returns (scorecard ver chain incl. ver 0 = frozen base, flag rows
+    * of every fold). ONE derivation shared by q128b's compaction and
     * q171's retention vacuum, so the fold arc cannot drift between the
     * two closers (the verChainFolds rule).
     */
@@ -383,9 +368,9 @@ object Pipeline {
       graft.streaming.StreamingQueries.tempDir(s, "graft_scchain"))
     Shared.inParallel(sc.seeds)
     for (k <- 0 until folds)
-      sc.step(docs.filter(col("doc_id") % 10 === 0)
-        .filter(expr(s"(doc_id div 10) % $folds") === k), k.toLong)
-    (sc.chain, sc.flags)
+      Shared.inParallel(sc.step(docs.filter(col("doc_id") % 10 === 0)
+        .filter(expr(s"(doc_id div 10) % $folds") === k), k.toLong))
+    (sc.chain, sc.flagRows)
   }
 
   /** Spec counter: the shared batch scorecard chain DERIVES once. */

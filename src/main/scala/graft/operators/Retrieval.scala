@@ -350,10 +350,8 @@ object Retrieval {
   //   - q165d DELETE: tombstoned docs' postings broadcast-anti-joined
   //     out at serve (the q155/q158 shape); nothing retracts because
   //     nothing is corpus-global;
-  //   - q161d CONTINUOUS (StreamingQueries): each micro-batch lands its
-  //     own postings shard under a batch-id dir with mode=overwrite —
-  //     the q159/q150 redelivery shape, at-least-once delivery folding
-  //     to exactly-once index state.
+  //   - q161d CONTINUOUS (StreamingQueries): each micro-batch writes
+  //     its own postings shard into a [[FoldStore]].
   // Every verb serves rows provably identical to a from-scratch index
   // over the resulting corpus, so the oracles are the q161/q165 replays
   // (full corpus for insert/continuous, survivors for delete).

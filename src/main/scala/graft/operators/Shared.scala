@@ -173,11 +173,9 @@ object Shared {
     * §2.6 job overlap: one action's straggler tail leaves cores idle
     * that the next action's tasks back-fill; FIFO scheduling does the
     * rest). Used by the maintenance ticks (disjoint table families) and
-    * the fold bodies' per-micro-batch state appends (disjoint dirs,
-    * each reading only pre-fold state through its ver filter — the same
-    * argument that makes redelivery safe makes the appends
-    * order-independent). 3 in flight is the guide's "enough to fill the
-    * tail, not enough to fight" sizing; exceptions propagate unwrapped.
+    * the fold steps' shard writes ([[FoldStore]]). 3 in flight is the
+    * guide's "enough to fill the tail, not enough to fight" sizing;
+    * exceptions propagate unwrapped.
     */
   private[graft] def inParallel(thunks: Seq[() => Unit]): Unit =
     { inParallelEval(thunks); () }

@@ -61,7 +61,7 @@ object StatefulSession {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q42_stream_session_state" -> ((s, d) => {
       import s.implicits._
-      val stage = StreamingQueries.stageEventsDir(d)
+      val stage = StreamingQueries.stageEventsDir(s, d)
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val ds = s.readStream.schema(schema).parquet(stage)
         .select(col("user_id"), col("event_id"),

@@ -3,12 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.Q
-import graft.operators.Shared
+import graft.operators.{Dedup, Fold, FoldStore, Shared}
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** The continuous rows: real Structured Streaming queries over the test
   * tables replayed as streams, each run to its end and returned as a
@@ -25,9 +25,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   *  - [[Replay]] is the replay-fold runner: it splits a row's input into
   *    ordered micro-batch files under the row's temp dir and reads them
   *    back one file per trigger; [[Replay.foldEach]] folds every
-  *    micro-batch into the row's state stores with `foreachBatch` (q124,
-  *    q128, q136, q150, q156, q159, q161d). A row supplies only its fold
-  *    body and its readout.
+  *    micro-batch into the row's state with `foreachBatch` (q124, q128,
+  *    q136, q150, q156, q159, q161d), kept in
+  *    [[graft.operators.FoldStore]]s except q150's layout segments. A
+  *    row supplies only its fold body and its readout ([[Replay.run]]
+  *    of a [[graft.operators.Fold]]).
   *
   * q27/q28/q29 run in COMPLETE output mode (no watermark): every window
   * is in the final state, so the result equals the batch semantics the
@@ -44,30 +46,27 @@ object StreamingQueries {
   import Q._
 
   /** Stage the events table for the file streaming source, which requires
-    * a *directory* of data files: symlinks in a temp dir keyed by the sf
-    * dir. Testdata ships events.parquet as a single FILE (one link
+    * a *directory* of data files: symlinks in a fresh [[tempDir]] per
+    * call. Testdata ships events.parquet as a single FILE (one link
     * suffices); StressGen-style dirs hold part files, which must be
     * linked individually — the file source does not recurse into a
     * nested non-partition directory, so a dir link would silently stream
-    * ZERO rows (caught by the sf~1 oracle tier). Shared with
+    * ZERO rows (caught by the sf~1 oracle tier). A dir per call means a
+    * regenerated source (StressGen overwrite, new part-file names) never
+    * meets links staged by an earlier run, and concurrent callers over
+    * one sf dir never share one. Shared with
     * [[graft.streaming.StatefulSession]]'s q42.
     */
-  private[streaming] def stageEventsDir(d: String): String =
-    stageTableDir(d, "events")
+  private[streaming] def stageEventsDir(s: SparkSession, d: String): String =
+    stageTableDir(s, d, "events")
 
-  private[graft] def stageTableDir(d: String, table: String): String = {
-    val stage = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_${table}_stream_${math.abs(d.hashCode)}")
-    Files.createDirectories(stage)
-    // Rebuild from scratch every call: a regenerated source (StressGen
-    // overwrite) emits differently-named part files, so links staged by
-    // an earlier run would dangle (failing the scan) or mix stale data
-    // into the stream. Files.list streams hold a directory handle —
-    // always closed, or long sessions leak one per staged query.
-    val old = Files.list(stage)
-    try old.forEach(Files.delete(_)) finally old.close()
+  private[graft] def stageTableDir(s: SparkSession, d: String,
+      table: String): String = {
+    val stage = tempDir(s, s"graft_${table}_stream_")
     val src = Paths.get(d, s"$table.parquet")
     if (Files.isDirectory(src)) {
+      // Files.list streams hold a directory handle — always closed, or
+      // long sessions leak one per staged query
       val ls = Files.list(src)
       try ls.filter(_.getFileName.toString.endsWith(".parquet"))
         .forEach(f =>
@@ -85,7 +84,7 @@ object StreamingQueries {
     * of `df` (the staging runs inside the timed region of every replay
     * row, so this is query-path cost). coalesce(1) keeps one task writing
     * all fold directories, so each fold lands as exactly one part file.
-    * Directory streams are closed (see [[stageTableDir]]'s leak note).
+    * Directory streams are closed (see [[stageTableDir]]).
     */
   private def writeReplayFolds(dir: Path, df: DataFrame, foldIdx: Column,
       folds: Int): Unit = {
@@ -126,7 +125,7 @@ object StreamingQueries {
     * raw layout the parquet ships ([[graft.Tables.tsTimestamp]]).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val stage = stageEventsDir(d)
+    val stage = stageEventsDir(s, d)
     val schema = s.read.parquet(s"$d/events.parquet").schema
     s.readStream.schema(schema).parquet(stage)
       .withColumn("ts", graft.Tables.tsTimestamp(schema))
@@ -174,7 +173,8 @@ object StreamingQueries {
       input: DataFrame, foldIdx: Column, folds: Int) {
     val dir: Path = tempDir(s, s"graft_$row")
 
-    def store(name: String): String = dir.resolve(name).toString
+    def store(name: String, schema: StructType): FoldStore =
+      new FoldStore(s, dir.resolve(name), schema)
 
     /** Stage the fold files, overlapped with the row's one-time `seeds`
       * (independent writes over disjoint dirs, §2.6), and read them back
@@ -198,7 +198,15 @@ object StreamingQueries {
       runToEnd(s, stream(seeds: _*).writeStream
         .foreachBatch((b: DataFrame, id: java.lang.Long) =>
           fold(b, id.longValue()))
-        .option("checkpointLocation", store("ckpt")))
+        .option("checkpointLocation", dir.resolve("ckpt").toString))
+
+    /** Run `f` over every micro-batch, each step's writes overlapped
+      * (§2.6), and return its readout.
+      */
+    def run(f: Fold): DataFrame = {
+      foldEach(f.seeds: _*)((b, ver) => Shared.inParallel(f.step(b, ver)))
+      f.readout
+    }
   }
 
   /** [[Replay]] of the doc_id % 10 == 0 batch tenth of `docs` (the
@@ -293,7 +301,7 @@ object StreamingQueries {
     import graft.operators.{Dedup, Shared}
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     val newDocs = q89SigOf(
-      s.readStream.schema(schema).parquet(stageTableDir(d, "documents"))
+      s.readStream.schema(schema).parquet(stageTableDir(s, d, "documents"))
         .filter(col("doc_id") % 10 === 0), "new_doc", "sig_a")
     val corpus = q89CorpusBands(s, d)
     newDocs.join(corpus, Seq("band", "bv"))
@@ -354,7 +362,7 @@ object StreamingQueries {
     import graft.operators.{Shared, Similarity}
     val schema = s.read.parquet(s"$d/embeddings.parquet").schema
     val stream = s.readStream.schema(schema)
-      .parquet(stageTableDir(d, "embeddings"))
+      .parquet(stageTableDir(s, d, "embeddings"))
       .filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("new_vec"),
         col("embedding").cast("array<double>").as("emb_a"))
@@ -364,6 +372,98 @@ object StreamingQueries {
       .withColumn("cos", round(Shared.cosine(col("emb_a"), col("emb_b")), 4))
       .filter(col("cos") >= Similarity.CosT)
       .select(col("new_vec"), col("cell"), col("corpus_vec"), col("cos"))
+  }
+
+  /** q156's fold over a [[FoldStore]] of label override rows. Per fold
+    * k over the CURRENT view (latest-wins of base + overrides before k):
+    *   1. touched reps = clusters holding a batch tombstone;
+    *   2. survivors of those clusters re-paired FROM TEXT (labelsOf on
+    *      the broadcast-semi-joined doc set — the q154 body: label-edge
+    *      contraction is unsound under deletion, clusters can split);
+    *   3. override shard ver = k: new labels for re-paired survivors,
+    *      and DROP rows (cluster_size = 0) for deleted + evaporated
+    *      members — a latest-wins store needs an explicit "no longer
+    *      labeled" verb, which size-0 provides and the readout filters.
+    * The CASCADE hard case — fold 2 deleting the rep fold 1 just
+    * elected, forcing a second re-election of the same original
+    * cluster — is exercised by the rule split and spec'd on a planted
+    * corpus. Per-fold cost: touched clusters only (the q154 law:
+    * 1.2–1.8% of corpus at the measured tiers), never a relabel.
+    */
+  private[graft] final class TombstoneFold(s: SparkSession, d: String,
+      docs: DataFrame, dir: Path) extends Fold {
+    private val base = Dedup.labelsArtifact(s, d)
+    private val delta =
+      new FoldStore(s, dir.resolve("labels_delta"), base.schema)
+    private def labelsOver(overrides: DataFrame): DataFrame =
+      Dedup.latestWins(base, overrides, "doc_id")
+        .filter(col("cluster_size") > 0)
+
+    def step(t: DataFrame, ver: Long): Seq[() => Unit] = {
+      val current = labelsOver(delta.before(ver))
+      val touchedReps = current.join(t, Seq("doc_id"), "left_semi")
+        .select(col("rep")).distinct()
+      // touched members materialized once: they feed the survivor
+      // re-pairing AND the dropped-row anti-join, and every lazy
+      // reference re-paid the latest-wins window + the rep semi-join.
+      // Deletion-batch bounded, so checkpoint-sized.
+      val members = Shared.ckptBounded(
+        current.join(touchedReps, Seq("rep"), "left_semi"),
+        "tombstone-fold touched-cluster members")
+      val survivorIds = members.join(t, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"))
+      // re-derived labels materialized once (read by the shard union
+      // and the dropped-row anti-join)
+      val relabeled = Shared.ckpt(Dedup.labelsOf(
+        docs.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"))
+        .select(col("doc_id"), col("rep"), col("cluster_size")))
+      val dropped = members.select(col("doc_id"))
+        .join(relabeled.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("doc_id").as("rep"),
+          lit(0L).as("cluster_size"))
+      Seq(() => delta.put(relabeled.unionByName(dropped), ver))
+    }
+
+    def readout: DataFrame = labelsOver(delta.all)
+      .select(col("doc_id"), col("rep"), col("cluster_size"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** q136's fold: [[Dedup.spanFoldAgainstWins]] against the corpus
+    * stores ∪ earlier folds' window rows, over two [[FoldStore]]s:
+    * recomputed rows (override shard ver = fold) and the fold's
+    * (doc_id, pos, wh) windows. The posting view later folds probe is a
+    * PROJECTION of the window store — sound because the fold's only
+    * posting consumers are the per-hash min/COUNT(DISTINCT) aggregates
+    * in [[Dedup.spanFoldAgainstWins]] (aff/cState), which are
+    * insensitive to the per-position duplicates the unprojected rows
+    * carry; the frozen corpus store stays distinct + wh-bucketed.
+    */
+  private[graft] final class SpanStripFold(s: SparkSession, d: String,
+      docs: DataFrame, dir: Path) extends Fold {
+    private val basePostings = Dedup.q135PostingsArtifact(s, d)
+    private val baseBydoc = Dedup.q135ByDocArtifact(s, d)
+    private val base = Dedup.q135BaseArtifact(s, d)
+    private val bydoc =
+      new FoldStore(s, dir.resolve("bydoc_delta"), baseBydoc.schema)
+    private val overrides =
+      new FoldStore(s, dir.resolve("overrides"), base.schema)
+
+    def step(b: DataFrame, ver: Long): Seq[() => Unit] = {
+      val bydDelta = bydoc.before(ver).drop("ver")
+      val posts = basePostings.unionByName(
+        bydDelta.select(col("wh"), col("doc_id")))
+      val byd = baseBydoc.unionByName(bydDelta)
+      // tokenize-once: the batch window list is materialized a single
+      // time per micro-batch and shared by the fold probe AND the
+      // window shard
+      val bw = Shared.ckpt(Dedup.spanWindows(Dedup.spanDocs(s, b)))
+      val (rec, _) = Dedup.spanFoldAgainstWins(s, docs, b, bw, posts, byd)
+      Seq(() => overrides.put(rec, ver), () => bydoc.put(bw, ver))
+    }
+
+    def readout: DataFrame =
+      Dedup.latestWins(base, overrides.all, "doc_id").orderBy(col("doc_id"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -454,7 +554,7 @@ object StreamingQueries {
     "q116_stream_manifest" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val stream = s.readStream.schema(schema)
-        .parquet(stageTableDir(d, "documents"))
+        .parquet(stageTableDir(s, d, "documents"))
       // ONE aggregate definition shared with batch q115 (TextOps) — the
       // parity proof depends on the expressions being identical, so
       // there is deliberately no second copy here
@@ -625,9 +725,9 @@ object StreamingQueries {
     // q124 — CONTINUOUS dedup-label maintenance: q120's incremental fold
     // run as a real Structured Streaming pipeline. The batch tenth is
     // replayed as THREE ordered micro-batch files and each micro-batch is
-    // one [[Dedup.LabelsFold]] step: pairs against the corpus ∪ the
-    // ACCUMULATED batch postings, subgraph labels over the latest-wins
-    // view, appended with ver = fold number.
+    // one [[Dedup.LabelsFold]] step: pairs against the corpus ∪ earlier
+    // folds' batch postings, subgraph labels over the latest-wins view,
+    // written as override shard ver = fold.
     //
     // Per-fold shuffle is bounded by the micro-batch + its touched
     // clusters + the accumulated delta (latestWins windows the DELTA
@@ -638,18 +738,15 @@ object StreamingQueries {
     // scheduling round trip at these sizes: the batch prefix checkpoint,
     // the bounded candidate-pair checkpoint (two), the pair-set collect
     // and the touched-cluster collect (the subgraph is labeled on the
-    // driver, no distributed CC rounds), then the three overlapped
-    // appends. The readout materializes latestWins once and must equal
+    // driver, no distributed CC rounds), then the three overlapped shard
+    // writes. The readout materializes latestWins once and must equal
     // the from-scratch closure over ALL documents — q120's oracle, which
     // is how the cross-fold transitive case (fold-2 doc bridging a
     // fold-1 cluster with a corpus cluster) is proven, not assumed.
     "q124_stream_incremental_labels" -> ((s, d) => {
       val docs = graft.Tables.documents(s, d)
       val r = tenthReplay(s, "q124", docs, 3)
-      val labels = new graft.operators.Dedup.LabelsFold(s, d, docs, r.dir)
-      r.foldEach(labels.seeds: _*)((b, ver) =>
-        Shared.inParallel(labels.step(b, ver).appends))
-      labels.before(Long.MaxValue).orderBy(col("doc_id"))
+      r.run(new Dedup.LabelsFold(s, d, docs, r.dir))
     }),
 
     // q156 — CONTINUOUS tombstone maintenance: q154's deletion fold run
@@ -659,78 +756,12 @@ object StreamingQueries {
     // split the q154 tombstone set, so the final view must equal q154's
     // one-shot fold — and the from-scratch closure over the survivors
     // (the shared oracle): incremental deletion COMMUTES with batching
-    // because edge removal does.
-    //
-    // Per fold k over the CURRENT view (latest-wins of base + overrides
-    // with ver < k — the ver-filtered read that makes redelivery
-    // byte-identical, q124/q128's trick):
-    //   1. touched reps = clusters holding a batch tombstone;
-    //   2. survivors of those clusters re-paired FROM TEXT (labelsOf on
-    //      the broadcast-semi-joined doc set — the q154 body: label-edge
-    //      contraction is unsound under deletion, clusters can split);
-    //   3. append override rows ver = k: new labels for re-paired
-    //      survivors, and DROP rows (cluster_size = 0) for deleted +
-    //      evaporated members — a latest-wins store needs an explicit
-    //      "no longer labeled" verb, which size-0 provides and the
-    //      readout filters.
-    // The CASCADE hard case — fold 2 deleting the rep fold 1 just
-    // elected, forcing a second re-election of the same original
-    // cluster — is exercised by the rule split and spec'd on a planted
-    // corpus. Per-fold cost: touched clusters only (the q154 law:
-    // 1.2–1.8% of corpus at the measured tiers), never a relabel.
+    // because edge removal does. One [[TombstoneFold]] step per fold.
     "q156_stream_tombstones" -> ((s, d) => {
-      import graft.operators.Dedup
       val docs = graft.Tables.documents(s, d)
       val r = new Replay(s, "q156", Dedup.tombstonesOf(docs),
         expr(s"(doc_id div ${Dedup.TombMod}) % 2"), 2)
-      val base = Dedup.labelsArtifact(s, d)
-      // ver-keyed fold dirs with mode=overwrite (the q159/q150
-      // redelivery shape): a redelivered micro-batch REWRITES its own
-      // dir byte-identically instead of appending beside a partial
-      // earlier attempt, so at-least-once delivery yields exactly-once
-      // override state structurally — latest-wins never has to mask
-      // duplicate or partial ver rows (round-11 advice).
-      val deltaDir = r.store("labels_delta")
-      // `ver` is a FILE column (the fold writes it); the ver=k path is
-      // only the overwrite-idempotency key. Explicit schema spares the
-      // per-fold footer inference.
-      val deltaSchema = base.schema.add("ver", "long")
-      def deltaAll(): DataFrame =
-        s.read.schema(deltaSchema).parquet(s"$deltaDir/ver=*")
-      def currentAt(ver: Long): DataFrame =
-        Dedup.latestWins(base, deltaAll().filter(col("ver") < ver), "doc_id")
-          .filter(col("cluster_size") > 0)
-      def fold(t: DataFrame, ver: Long): Unit = {
-        val current = currentAt(ver)
-        val touchedReps = current.join(t, Seq("doc_id"), "left_semi")
-          .select(col("rep")).distinct()
-        // touched members materialized once: they feed the survivor
-        // re-pairing AND the dropped-row anti-join, and every lazy
-        // reference re-paid the latest-wins window + the rep semi-join.
-        // Deletion-batch bounded, so checkpoint-sized.
-        val members = Shared.ckptBounded(
-          current.join(touchedReps, Seq("rep"), "left_semi"),
-          "tombstone-fold touched-cluster members")
-        val survivorIds = members.join(t, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"))
-        // re-derived labels materialized once (read by the append union
-        // and the dropped-row anti-join)
-        val relabeled = Shared.ckpt(Dedup.labelsOf(
-          docs.join(broadcast(survivorIds), Seq("doc_id"), "left_semi"))
-          .select(col("doc_id"), col("rep"), col("cluster_size")))
-        val dropped = members.select(col("doc_id"))
-          .join(relabeled.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("doc_id").as("rep"),
-            lit(0L).as("cluster_size"))
-        relabeled.unionByName(dropped).withColumn("ver", lit(ver))
-          .write.mode("overwrite").parquet(s"$deltaDir/ver=$ver")
-      }
-      r.foldEach(() => base.limit(0).withColumn("ver", lit(0L))
-        .write.parquet(s"$deltaDir/ver=0"))((t, id) => fold(t, id + 1))
-      Dedup.latestWins(base, deltaAll(), "doc_id")
-        .filter(col("cluster_size") > 0)
-        .select(col("doc_id"), col("rep"), col("cluster_size"))
-        .orderBy(col("doc_id"))
+      r.run(new TombstoneFold(s, d, docs, r.dir))
     }),
 
     // q150 — CONTINUOUS layout maintenance: q142's delta fold as a real
@@ -740,7 +771,7 @@ object StreamingQueries {
     // ([[graft.operators.Layout.writeStreamDelta]]); mode=overwrite keyed
     // by batch id makes redelivery structurally idempotent (byte-identical
     // rewrite of the same dir), so at-least-once delivery serves
-    // exactly-once results — the q136 argument, for the layout family.
+    // exactly-once results.
     // Serving FS-lists the accumulated segments (no fold registry), and
     // the oracle is q142's from-scratch box replay over ALL events, so
     // continuous fold == batch fold == from-scratch is hash-proven.
@@ -759,20 +790,17 @@ object StreamingQueries {
     }),
 
     // q159 — CONTINUOUS inverted-index maintenance: q157's normalized-df
-    // fold as a Structured Streaming pipeline. Each micro-batch lands its
-    // OWN index shard — postings, vocabulary df, one-row stats — under a
-    // batch-id-keyed dir with mode=overwrite (the q150 redelivery shape:
-    // a re-run rewrites the same dir byte-identically, so at-least-once
-    // delivery yields exactly-once index state with no transactional
-    // sink). Readout merges: postings = base ∪ accumulated shards
-    // (append-disjoint by the corpus split); df = base df + Σ shard dfs
-    // (count monoid — the groupBy runs over plain parquet dirs, which
-    // carry NO bucketing claim, so the pinned bucketed-union aggregate
-    // hazard does not apply — noted because it is exactly the shape that
-    // bit q157's first cut); stats likewise. Serving df is EXACT after
-    // every fold — a streaming index with no stale-idf window. Oracle =
-    // the full-corpus bm25Sql replay, so fold-equals-rebuild is
-    // hash-proven per tier.
+    // fold as a Structured Streaming pipeline. Each micro-batch writes
+    // its OWN index shard — postings, vocabulary df, one-row stats — into
+    // three [[FoldStore]]s, with no transactional sink. Readout merges:
+    // postings = base ∪ every shard (disjoint by the corpus split);
+    // df = base df + Σ shard dfs (count monoid — the groupBy runs over
+    // plain parquet dirs, which carry NO bucketing claim, so the pinned
+    // bucketed-union aggregate hazard does not apply — noted because it
+    // is exactly the shape that bit q157's first cut); stats likewise.
+    // Serving df is EXACT after every fold — a streaming index with no
+    // stale-idf window. Oracle = the full-corpus bm25Sql replay, so
+    // fold-equals-rebuild is hash-proven per tier.
     "q159_stream_postings" -> ((s, d) => {
       import graft.operators.Retrieval
       val docs = graft.Tables.documents(s, d)
@@ -780,26 +808,23 @@ object StreamingQueries {
       // frozen base = the q157 staged corpus index (nine tenths)
       val (bPost, bDf, bStats) = Retrieval.idx157(s, d, "base",
         docs.filter(col("doc_id") % 10 =!= 0))
-      val postDir = r.store("post")
-      val dfDir = r.store("df")
-      val statsDir = r.store("stats")
+      val post = r.store("post", bPost.schema)
+      val dfs = r.store("df", bDf.schema)
+      val stats = r.store("stats", bStats.schema)
       r.foldEach() { (b, id) =>
         val (p, f, st) = Retrieval.bm25IndexOf(b)
-        p.write.mode("overwrite").parquet(s"$postDir/batch=$id")
-        f.write.mode("overwrite").parquet(s"$dfDir/batch=$id")
-        st.write.mode("overwrite").parquet(s"$statsDir/batch=$id")
+        post.put(p, id)
+        dfs.put(f, id)
+        stats.put(st, id)
       }
       // shards aggregate ALONE (plain parquet dirs), then join-merge
       // with the bucketed base — never a keyed agg over a union that
       // includes a bucketed scan (the pinned hazard's shape)
-      val post = bPost.unionByName(s.read.parquet(s"$postDir/batch=*"))
-      val shardDf = s.read.parquet(s"$dfDir/batch=*")
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      val shardStats = s.read.parquet(s"$statsDir/batch=*")
-        .groupBy(col("k"))
+      val shardDf = dfs.all.groupBy(col("term")).agg(sum(col("df")).as("df"))
+      val shardStats = stats.all.groupBy(col("k"))
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("sum_len")).as("sum_len"))
-      Retrieval.serveNormalized(s, post,
+      Retrieval.serveNormalized(s, bPost.unionByName(post.all.drop("ver")),
         Retrieval.mergeDf(bDf, shardDf, 1),
         Retrieval.mergeStats(bStats, shardStats, 1))
     }),
@@ -807,11 +832,8 @@ object StreamingQueries {
     // q161d — CONTINUOUS positional-index maintenance: q161c's append
     // fold as a Structured Streaming pipeline, completing the positional
     // store's verb set (insert q161c / delete q165d / continuous here).
-    // Each micro-batch tokenizes ONLY its own documents and lands the
-    // postings under a batch-id-keyed dir with mode=overwrite (the
-    // q159/q150 redelivery shape: a re-run rewrites the same dir
-    // byte-identically, so at-least-once delivery folds to exactly-once
-    // index state with no transactional sink). Positional postings are
+    // Each micro-batch tokenizes ONLY its own documents and writes the
+    // postings as its [[FoldStore]] shard. Positional postings are
     // per-doc facts — no df, no stats — so readout is a plain union of
     // base ∪ shards and fold-equals-rebuild is exact by construction:
     // the oracle is the full-corpus q161 replay, hash-proven per tier.
@@ -822,103 +844,41 @@ object StreamingQueries {
       // frozen base = the same physical store q161c/q165d maintain
       val base = Retrieval.posIdx(s, d, "base",
         docs.filter(col("doc_id") % 10 =!= 0))
-      val postDir = r.store("pos")
-      r.foldEach()((b, id) => Retrieval.posPostingsOf(b).write
-        .mode("overwrite").parquet(s"$postDir/batch=$id"))
-      Retrieval.phraseMatchOver(s,
-        base.unionByName(s.read.parquet(s"$postDir/batch=*")))
+      val post = r.store("pos", base.schema)
+      r.foldEach()((b, id) => post.put(Retrieval.posPostingsOf(b), id))
+      Retrieval.phraseMatchOver(s, base.unionByName(post.all.drop("ver")))
     }),
 
     // q136 — CONTINUOUS span-strip maintenance: q135's fold as a real
     // Structured Streaming pipeline (three ordered micro-batch files,
-    // maxFilesPerTrigger=1, foreachBatch — the q124 replay pattern).
-    // Each fold runs [[Dedup.spanFoldAgainst]] with the corpus stores ∪
-    // the ACCUMULATED per-fold appends, so a fold-3 doc pairs with
-    // fold-1 docs through the appended window rows, and a later fold's
+    // maxFilesPerTrigger=1, foreachBatch — the q124 replay pattern), one
+    // [[SpanStripFold]] step per micro-batch. A fold-3 doc pairs with
+    // fold-1 docs through the stored window rows, and a later fold's
     // smaller-id doc demotes an EARLIER fold's keeper (the recomputed
-    // override row with a newer `ver` wins at readout). State appended
-    // per fold: recomputed rows (ver = fold) and the fold's
-    // (doc_id, pos, wh) windows — the posting view later folds probe is
-    // a PROJECTION of the window store (round 15; sound because the
-    // fold's posting consumers are per-hash min/COUNT DISTINCT
-    // aggregates, insensitive to the per-position duplicates).
-    //
-    // Redelivery: the fold reads only the window store, whose
-    // duplication is invisible (per-hash aggregates are min/COUNT
-    // DISTINCT; coverage is an interval union), so a redelivered
-    // micro-batch appends byte-identical override rows and latest-wins
-    // serves each doc once — at-least-once delivery, exactly-once
-    // results, the q124 argument. The oracle is the from-scratch q133
-    // over ALL documents: cross-fold pairing, keeper migration, and the
-    // override chain are hash-proven per tier.
+    // override row with a newer `ver` wins at readout). The oracle is
+    // the from-scratch q133 over ALL documents: cross-fold pairing,
+    // keeper migration, and the override chain are hash-proven per tier.
     "q136_stream_incremental_span_strip" -> ((s, d) => {
-      import graft.operators.Dedup
       val docs = graft.Tables.documents(s, d)
       val r = tenthReplay(s, "q136", docs, 3)
-      val basePostings = Dedup.q135PostingsArtifact(s, d)
-      val baseBydoc = Dedup.q135ByDocArtifact(s, d)
-      val base = Dedup.q135BaseArtifact(s, d)
-      val bydocDir = r.store("bydoc_delta")
-      val ovDir = r.store("overrides")
-      val bydocSchema = baseBydoc.schema
-      val ovSchema = base.schema.add("ver", "long")
-      def fold(b: DataFrame, ver: Long): Unit = {
-        // ONE accumulated state store (round 15): the posting view is a
-        // projection of the bydoc delta — sound because the fold's only
-        // posting consumers are the per-hash min/COUNT(DISTINCT)
-        // aggregates in [[Dedup.spanFoldAgainstWins]] (aff/cState),
-        // which are insensitive to the per-position duplicates the
-        // unprojected rows carry (the same argument that makes
-        // redelivery safe). This removes the distinct shuffle + second
-        // append the old postings_delta store paid per fold; the frozen
-        // corpus store stays distinct + wh-bucketed.
-        val bydDelta = s.read.schema(bydocSchema).parquet(bydocDir)
-        val posts = basePostings.unionByName(
-          bydDelta.select(col("wh"), col("doc_id")))
-        val byd = baseBydoc.unionByName(bydDelta)
-        // tokenize-once: the batch window list is materialized a single
-        // time per micro-batch and shared by the fold probe AND the
-        // state append (it previously re-tokenized per consumer)
-        val bw = Shared.ckpt(Dedup.spanWindows(Dedup.spanDocs(s, b)))
-        val (rec, _) = Dedup.spanFoldAgainstWins(s, docs, b, bw, posts, byd)
-        // rec's write-time plan re-reads the RAW store dir (the view is
-        // not ver-filtered — duplication-insensitivity covers
-        // redelivery, not a same-fold leak), so it must complete BEFORE
-        // this fold's own rows land
-        rec.withColumn("ver", lit(ver)).write.mode("append").parquet(ovDir)
-        bw.write.mode("append").parquet(bydocDir)
-      }
-      r.foldEach(
-        () => baseBydoc.limit(0).write.parquet(bydocDir),
-        () => base.limit(0).withColumn("ver", lit(0L)).write.parquet(ovDir))(
-        fold)
-      Dedup.latestWins(base, s.read.schema(ovSchema).parquet(ovDir),
-        "doc_id")
-        .orderBy(col("doc_id"))
+      r.run(new SpanStripFold(s, d, docs, r.dir))
     }),
 
     // q128 — CONTINUOUS scorecard maintenance: q127's monoid+corrections
     // fold riding q124's micro-batch replay — the per-source curation
     // dashboard kept live as the corpus ingests. Each micro-batch is one
-    // [[Pipeline.ScorecardFold]] step: q124's labels step, then the batch
-    // aggregate and the label corrections merged into the previous fold's
-    // scorecard, so a later fold can demote a doc that arrived in an
-    // EARLIER fold (the cross-fold demotion spec pins exactly this). The
-    // prefix/seen stores are unversioned: a consumer that counted them,
-    // or a compaction that unioned them verbatim, would need the dedup
-    // first (q130's crash spec pins exactly this property for postings).
-    // The readout takes each source's newest row; the oracle is
-    // from-scratch q119 over ALL documents, so the whole fold chain —
-    // cross-fold merges, corrections, monoid adds — is hash-proven per
-    // tier.
+    // [[graft.operators.Pipeline.ScorecardFold]] step: q124's labels
+    // step, then the batch aggregate and the label corrections merged
+    // into the previous fold's scorecard, so a later fold can demote a
+    // doc that arrived in an EARLIER fold (the cross-fold demotion spec
+    // pins exactly this). The readout takes each source's newest row;
+    // the oracle is from-scratch q119 over ALL documents, so the whole
+    // fold chain — cross-fold merges, corrections, monoid adds — is
+    // hash-proven per tier.
     "q128_stream_incremental_scorecard" -> ((s, d) => {
       val docs = graft.Tables.documents(s, d)
       val r = tenthReplay(s, "q128", docs, 3)
-      val sc = new graft.operators.Pipeline.ScorecardFold(s, d, docs, r.dir)
-      r.foldEach(sc.seeds: _*)(sc.step)
-      sc.latest(Long.MaxValue)
-        .withColumn("keep_rate", round(col("n_train") / col("n_docs"), 4))
-        .orderBy(col("source"))
+      r.run(new graft.operators.Pipeline.ScorecardFold(s, d, docs, r.dir))
     }),
 
     // Q30 — watermark / late data: 2-batch ordered replay, append mode.

@@ -88,7 +88,7 @@ class StatefulRecoverySpec extends AnyFunSuite {
     assume(Files.exists(java.nio.file.Paths.get(s"$sf1/events.parquet")),
       "sf~1 stress tier absent — generate with StressGen (see Scaladoc)")
 
-    val stage = streaming.StreamingQueries.stageTableDir(sf1, "events")
+    val stage = streaming.StreamingQueries.stageTableDir(spark, sf1, "events")
     val nFiles = {
       val ls = Files.list(java.nio.file.Paths.get(stage))
       try ls.count() finally ls.close()
